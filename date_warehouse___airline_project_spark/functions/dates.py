@@ -40,10 +40,6 @@ def to_standard_date(col: Column | str, formats: tuple[str, ...] = DATE_FORMATS)
     return F.coalesce(*[F.try_to_date(c, fmt) for fmt in formats])
 
 
-def to_iso_date_string(col: Column | str) -> Column:
-    return F.date_format(to_standard_date(col), "yyyy-MM-dd")
-
-
 def age_years(dob: Column | str, as_of: Column | None = None) -> Column:
     """Whole years between dob and as_of with birthday adjustment."""
     ref = as_of if as_of is not None else F.current_date()

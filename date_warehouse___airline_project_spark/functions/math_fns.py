@@ -8,7 +8,7 @@ refund functions.py:315-317; range check functions.py:339-349.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MONEY_CAP = 99999999.99  # DECIMAL(10,2) ceiling the reference clips to
@@ -68,16 +68,3 @@ def in_numeric_range(col: Column | str, lo: float, hi: float) -> Column:
     """Numeric-coercible and within [lo, hi]; non-numeric → false."""
     v = to_numeric(col)
     return v.isNotNull() & v.between(lo, hi)
-
-
-def with_currency_rates(df: DataFrame, rates: DataFrame, cur_col: str, amount_col: str,
-                        target: str = "USD") -> DataFrame:
-    """Join per-row currency rates (broadcast — rates tables are tiny) and
-    emit ``<amount_col>_usd``. Reference keeps a 6-entry dict; at scale the
-    rates are a dimension table."""
-    r = rates.select(F.col("currency").alias(cur_col + "_cur"), F.col("usd_rate"))
-    return (
-        df.join(F.broadcast(r), F.col(cur_col) == F.col(cur_col + "_cur"), "left")
-        .withColumn(amount_col + "_usd", F.col(amount_col) / F.col("usd_rate"))
-        .drop(cur_col + "_cur", "usd_rate")
-    )

@@ -16,15 +16,18 @@ Spark-first design, built for scale:
 
 The native score is ``100 * (1 - levenshtein/max_len)``; ``token_sort``
 additionally sorts whitespace tokens first (public fuzzywuzzy
-token_sort_ratio semantics re-expressed natively); ``wratio`` blends in a
-``partial_ratio`` component — the best same-length substring window of the
-longer string scored against the shorter — mirroring the shape of public
-fuzzywuzzy ``WRatio`` (the reference's scorer, cleaning.py:262-295): when
-the lengths differ enough for windowing to matter (ratio ≥ 1.5), WRatio
-takes the max of the full ratio, the 0.95-scaled token-sort ratio, and the
-scaled partial ratio (×0.9, or ×0.6 in the "much much shorter" regime
-where one string is >8× the other). Exact members always score 100. All three
-scorers are pure Column expressions (whole-stage codegen, no Python).
+token_sort_ratio semantics re-expressed natively). Both are pure Column
+expressions (whole-stage codegen, no Python). ``wratio`` mirrors the shape
+of public fuzzywuzzy ``WRatio`` (the reference's scorer,
+cleaning.py:262-295) and blends in a ``partial_ratio`` component — the
+best same-length substring window of the longer string scored against the
+shorter: when the lengths differ enough for windowing to matter (ratio ≥
+1.5), WRatio takes the max of the full ratio, the 0.95-scaled token-sort
+ratio, and the scaled partial ratio (×0.9, or ×0.6 in the "much much
+shorter" regime where one string is >8× the other). Exact members always
+score 100. It runs as a Python pair scorer (``_py_wratio``) over the
+bounded distinct-values × dim grid; the ``fuzzy_wratio_correction`` oracle
+replicates it in DuckDB SQL bit for bit.
 """
 
 from __future__ import annotations
@@ -43,102 +46,14 @@ def _token_sort(c: Column) -> Column:
     return F.array_join(F.sort_array(F.split(F.trim(c), r"\s+")), " ")
 
 
-def _partial(a: Column, b: Column) -> Column:
-    """Best levenshtein similarity of the shorter string against every
-    same-length contiguous window of the longer (public fuzzywuzzy
-    partial_ratio semantics, re-expressed as sequence→transform→array_max —
-    O(len_long) native levenshteins per candidate pair, no Python)."""
-    s = F.when(F.length(a) <= F.length(b), a).otherwise(b)
-    long_ = F.when(F.length(a) <= F.length(b), b).otherwise(a)
-    n = F.greatest(F.length(s), F.lit(1))
-    starts = F.sequence(F.lit(1), F.greatest(F.length(long_) - F.length(s) + 1, F.lit(1)))
-    sims = F.transform(
-        starts, lambda i: 100.0 * (1.0 - F.levenshtein(s, F.substring(long_, i, n)) / n)
-    )
-    # empty shorter string scores 0, rapidfuzz/thefuzz semantics (legacy
-    # fuzzywuzzy's 100-on-empty is a known quirk that would inflate every
-    # disjoint token_set pairing to 0.95*pscale*100)
-    return F.when(F.length(s) == 0, F.lit(0.0)).otherwise(F.array_max(sims))
-
-
-def _token_set_pieces(a: Column, b: Column) -> tuple[Column, Column, Column]:
-    """Public token_set decomposition: (sorted intersection, intersection +
-    a's leftover tokens, intersection + b's leftover tokens)."""
-    ta = F.array_distinct(F.split(F.trim(a), r"\s+"))
-    tb = F.array_distinct(F.split(F.trim(b), r"\s+"))
-    sect = F.array_join(F.array_sort(F.array_intersect(ta, tb)), " ")
-    c1 = F.trim(F.concat_ws(" ", sect, F.array_join(F.array_sort(F.array_except(ta, tb)), " ")))
-    c2 = F.trim(F.concat_ws(" ", sect, F.array_join(F.array_sort(F.array_except(tb, ta)), " ")))
-    return sect, c1, c2
-
-
-def _wratio_parts(
-    a: Column,
-    b: Column,
-    tsa: Column,
-    tsb: Column,
-    sect: Column,
-    c1: Column,
-    c2: Column,
-) -> Column:
-    """WRatio blend over pre-computed derived forms (see ``_wratio``).
-
-    Taking the token-sort/token-set forms as inputs lets callers stage
-    them in their own projection, so each split/sort/intersect is computed
-    once per pair instead of being re-inlined at every use site — the
-    generated code shrinks ~4x, which matters because Janino compilation
-    of the full blend is the dominant first-run cost of the fuzzy join."""
-    base = _similarity(a, b)
-    len_ratio = F.greatest(F.length(a), F.length(b)) / F.greatest(
-        F.least(F.length(a), F.length(b)), F.lit(1)
-    )
-    pscale = F.when(len_ratio > 8, F.lit(0.6)).otherwise(F.lit(0.9))
-    tser_full = F.greatest(
-        _similarity(sect, c1), _similarity(sect, c2), _similarity(c1, c2)
-    )
-    with_partial = F.greatest(
-        base,
-        pscale * _partial(a, b),
-        0.95 * pscale * _partial(tsa, tsb),
-        0.95 * pscale * F.greatest(_partial(sect, c1), _partial(sect, c2), _partial(c1, c2)),
-    )
-    no_partial = F.greatest(
-        base, 0.95 * _similarity(tsa, tsb), 0.95 * tser_full
-    )
-    return F.when(len_ratio >= 1.5, with_partial).otherwise(no_partial)
-
-
-def _wratio(a: Column, b: Column) -> Column:
-    """WRatio blend mirroring public fuzzywuzzy's structure exactly:
-
-    - ``len_ratio < 1.5`` → max(base ratio, 0.95·token_sort, 0.95·token_set)
-    - ``len_ratio ≥ 1.5`` → max(base ratio, pscale·partial,
-      0.95·pscale·partial-token-sort, 0.95·pscale·partial-token-set)
-
-    where pscale is 0.9 normally and 0.6 in the "much much shorter" regime
-    (``len_ratio > 8``) — so a dim code embedded in a very long dirty
-    string scores 60, below the 85 correction threshold, exactly as the
-    reference's WRatio leaves it unchanged (cleaning.py:267). The one
-    deliberate divergence from public fuzzywuzzy: ratios are levenshtein
-    similarity (native, whole-stage codegen), not difflib's 2M/T — the
-    threshold-parity corpus in tests/test_operators.py pins where the two
-    metrics land on opposite sides of 85."""
-    tsa, tsb = _token_sort(a), _token_sort(b)
-    sect, c1, c2 = _token_set_pieces(a, b)
-    return _wratio_parts(a, b, tsa, tsb, sect, c1, c2)
-
-
-# --- Python twin of the WRatio blend (r12, guide §4.3) ---------------------
-# The Column form of the blend builds a ~4x-staged expression tree whose
+# --- WRatio pair kernel (r12, guide §4.3) -----------------------------------
+# A Column form of the blend builds a ~4x-staged expression tree whose
 # partial-ratio windows run on Spark's INTERPRETED higher-order path
 # (transform/sequence lambdas never reach codegen), and the tree itself
-# costs Catalyst analysis per run — measured ~0.9 s of the wratio
-# correction's ~1.9 s at sf0.1 for a 230-pair grid. The functions below
-# replicate the blend in Python with the IDENTICAL IEEE-double op
-# sequence, so the mapInPandas lane in fuzzy_correct is bit-equal to the
-# Column lane (pinned by tests/test_operators.py::
-# test_fuzzy_wratio_python_lane_equals_column_lane and by the
-# fuzzy_wratio_correction oracle, whose SQL mirrors the float shapes):
+# costs Catalyst analysis per run. The functions below compute the blend
+# in Python with a fixed IEEE-double op sequence, which the
+# fuzzy_wratio_correction oracle SQL mirrors (pinned by
+# tests/test_operators.py::test_fuzzy_wratio_kernel_equals_oracle_sql):
 #
 #   * similarity: 100.0 * (1.0 - lev / max(la, lb, 1)) — int lev, int
 #     max, one double divide, one subtract, one multiply, same order;
@@ -147,9 +62,10 @@ def _wratio(a: Column, b: Column) -> Column:
 #     a utf-8 key reproduces that (not code-point order);
 #   * partial: per-window similarity with n = max(len(short), 1),
 #     window = substring(long, i, n) 1-based truncating, max over
-#     windows, 0.0 for an empty shorter string;
-#   * blend: max(...) over doubles with 0.95 * pscale folded left-first,
-#     exactly as the Column tree multiplies.
+#     windows, 0.0 for an empty shorter string (rapidfuzz/thefuzz
+#     semantics — legacy fuzzywuzzy's 100-on-empty would inflate every
+#     disjoint token_set pairing to 0.95*pscale*100);
+#   * blend: max(...) over doubles with 0.95 * pscale folded left-first.
 #
 # upper()/trim() stay IN THE PLAN (JVM semantics for case mapping), so
 # the kernel only ever sees the already-normalized strings.
@@ -224,6 +140,20 @@ def _py_partial(a: str, b: str) -> float:
 
 
 def _py_wratio(a: str, b: str) -> float:
+    """WRatio blend mirroring public fuzzywuzzy's structure:
+
+    - ``len_ratio < 1.5`` → max(base ratio, 0.95·token_sort, 0.95·token_set)
+    - ``len_ratio ≥ 1.5`` → max(base ratio, pscale·partial,
+      0.95·pscale·partial-token-sort, 0.95·pscale·partial-token-set)
+
+    where pscale is 0.9 normally and 0.6 in the "much much shorter" regime
+    (``len_ratio > 8``) — so a dim code embedded in a very long dirty
+    string scores 60, below the 85 correction threshold, exactly as the
+    reference's WRatio leaves it unchanged (cleaning.py:267). The one
+    deliberate divergence from public fuzzywuzzy: ratios are levenshtein
+    similarity, not difflib's 2M/T — the threshold-parity corpus in
+    tests/test_operators.py pins where the two metrics land on opposite
+    sides of 85."""
     tsa, tsb = _py_token_sort(a), _py_token_sort(b)
     sect, c1, c2 = _py_token_set_pieces(a, b)
     base = _py_sim(a, b)
@@ -273,15 +203,14 @@ def fuzzy_correct(
     pairs = dirty.crossJoin(F.broadcast(cands))
     if scorer == "wratio":
         # r12 (guide §4.2/§4.3): the WRatio blend runs as a Python pair
-        # scorer over the bounded |distinct dirty| x |dim| grid instead
-        # of the 4x-staged Column tree — the tree's partial-ratio
-        # windows executed on Spark's interpreted higher-order path and
-        # its analysis dominated the steady-state cost. The kernel is
-        # bit-equal to the Column lane (_py_wratio docstring; pinned by
-        # test_fuzzy_wratio_python_lane_equals_column_lane), and the
-        # normalization (upper/trim) stays in the plan so the kernel
-        # never applies Python case semantics. The corpus-side broadcast
-        # correction join below is untouched.
+        # scorer over the bounded |distinct dirty| x |dim| grid — a
+        # Column tree's partial-ratio windows execute on Spark's
+        # interpreted higher-order path and its analysis dominated the
+        # steady-state cost. The kernel equals the oracle SQL bit for
+        # bit (pinned by test_fuzzy_wratio_kernel_equals_oracle_sql),
+        # and the normalization (upper/trim) stays in the plan so the
+        # kernel never applies Python case semantics. The corpus-side
+        # broadcast correction join below is untouched.
         from pyspark.sql.types import DoubleType, StructField, StructType
 
         staged = pairs.select("_dirty", "_cand", a.alias("_ua"), b.alias("_ub"))

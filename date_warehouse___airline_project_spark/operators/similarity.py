@@ -23,6 +23,13 @@ anywhere, so the DuckDB oracle replicates the full algorithm, bucketing
 included, and results match exactly.
 
 Ties everywhere break on the lower id, making top-k cuts stable.
+
+Kernels that score against a bounded relation (a codebook or a probe
+batch) — ``assign_to_centroids``, ``cosine_cross_scores``,
+``centroid_distance_profile`` — have ONE lane each: an Arrow/NumPy
+``mapInPandas`` kernel that folds dimensions sequentially, so its doubles
+equal the DuckDB oracle's ``list_dot_product`` bit for bit.
+``pca_moment_cells`` still carries a relational ``impl="sql"`` twin.
 """
 
 from __future__ import annotations
@@ -140,66 +147,28 @@ def assign_to_centroids(
     cents: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "sql",
 ) -> DataFrame:
     """Nearest-centroid (cosine) assignment against an explicit centroid set
-    ``cents(_cid, _cvec)``. Broadcast centroids × data — map-side only; ties
-    break to the lower centroid id (max_by on (score, -cid)). Ranking uses
-    dot/centroid-norm (row norm is a per-row positive constant — the cosine
-    argmax up to float rounding on near-ties, safe because the oracle ranks
-    with the identical expression; one fold per pair instead of three).
+    ``cents(_cid, _cvec)``; ties break to the lower centroid id. Ranking
+    uses dot/centroid-norm (row norm is a per-row positive constant — the
+    cosine argmax up to float rounding on near-ties, safe because the
+    oracle ranks with the identical expression; one fold per pair instead
+    of three).
 
-    ``impl="sql"`` is the pure-relational fold; ``impl="arrow"`` is the
-    Arrow/NumPy fast lane (~10-100× on the interpreted fold) and is
-    BIT-EXACT to it: the NumPy accumulation is vectorized across rows but
-    sequential across dimensions, so every row performs the identical
+    Arrow/NumPy kernel, BIT-EXACT to the relational fold the DuckDB oracle
+    runs (``list_dot_product``): the accumulation is vectorized across rows
+    but sequential across dimensions, so every row performs the identical
     IEEE-double op sequence ((0 + x₀y₀) + x₁y₁) + …, and ``argmax`` over a
     cid-ascending centroid matrix reproduces the (score desc, cid asc)
-    max_by tie-break. Outputs are therefore interchangeable — the DuckDB
-    oracle certifies both.
+    tie-break. The centroid set is tiny by construction (a codebook); it
+    ships to the workers inside the UDF closure. At 100 TB the data side
+    streams through ``mapInPandas`` in Arrow batches; per-batch memory is
+    n_batch × k doubles for the score matrix.
 
-    Degenerate inputs are defined identically in both lanes: zero-norm
-    centroids are EXCLUDED from assignment (cosine is undefined against
-    them — without the guard the SQL lane divides by zero under ANSI and
-    the NumPy lane lets score/0=inf win every argmax), and rows with a
-    null vector get a null ``centroid_id``."""
-    if impl == "arrow":
-        return _assign_to_centroids_arrow(data, cents, id_col, vec_col)
-    cents = cents.select(
-        "_cid", "_cvec", F.sqrt(dot(F.col("_cvec"), F.col("_cvec"))).alias("_cnorm")
-    ).filter(F.col("_cnorm") > 0)
-    scored = data.crossJoin(F.broadcast(cents)).withColumn(
-        "_cos_c", dot(F.col(vec_col), F.col("_cvec")) / F.col("_cnorm")
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            # null scores (null vector) rank nothing: a when() guard makes
-            # max_by skip them, so an all-null row gets a null centroid —
-            # matching the arrow lane — instead of falling through to the
-            # -cid tiebreak
-            F.max_by(
-                "_cid",
-                F.when(
-                    F.col("_cos_c").isNotNull(),
-                    F.struct(F.col("_cos_c"), (-F.col("_cid")).alias("_nc")),
-                ),
-            ).alias("centroid_id")
-        )
-        .join(data, id_col)
-    )
-
-
-def _assign_to_centroids_arrow(
-    data: DataFrame, cents: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """Arrow/NumPy nearest-centroid assignment (see ``assign_to_centroids``).
-
-    The centroid set is tiny by construction (a codebook); it ships to the
-    workers inside the UDF closure — the same broadcast shape as the SQL
-    path. At 100 TB the data side streams through ``mapInPandas`` in Arrow
-    batches; per-batch memory is n_batch × k doubles for the score matrix.
-    """
+    Degenerate inputs: zero-norm centroids are EXCLUDED from assignment
+    (cosine is undefined against them — score/0=inf would win every
+    argmax), and rows whose vector is null or holds a null element get a
+    null ``centroid_id``."""
     import numpy as np
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -215,8 +184,7 @@ def _assign_to_centroids_arrow(
     for d in range(dim):
         acc = acc + C[:, d] * C[:, d]
     norms = np.sqrt(acc)
-    # zero-norm centroids are unrankable (see assign_to_centroids) — drop
-    # them here exactly as the SQL lane's _cnorm > 0 filter does
+    # zero-norm centroids are unrankable — drop them
     keep = norms > 0
     cids, C, norms = cids[keep], C[keep], norms[keep]
     k = int(keep.sum())
@@ -227,11 +195,10 @@ def _assign_to_centroids_arrow(
 
     # Null detection must happen JVM-side: Arrow surfaces null array
     # ELEMENTS as NaN in pandas, which would let a null-element vector
-    # win argmax (NaN ranks above every score) — whereas the SQL lane's
-    # when() guard excludes its null _cos_c entirely and assigns a null
+    # win argmax (NaN ranks above every score) instead of getting a null
     # centroid. Flag null-or-contains-null vectors in the plan, mask them
-    # in the kernel. (Genuine NaN elements stay NaN in BOTH lanes and
-    # resolve identically: all-NaN scores tie, smallest cid wins.)
+    # in the kernel. (Genuine NaN elements stay NaN: all-NaN scores tie,
+    # smallest cid wins.)
     vec_null = F.col(vec_col).isNull() | F.exists(
         F.col(vec_col), lambda e: e.isNull()
     )
@@ -267,7 +234,6 @@ def cosine_cross_scores(
     qid_col: str = "qid",
     qvec_col: str = "qv",
     carry: tuple = (),
-    impl: str = "arrow",
 ) -> DataFrame:
     """Every data row scored against every query vector —
     (id_col, *carry, qid_col, ``_cs``) with ``_cs`` = cosine(vec, qv).
@@ -276,44 +242,29 @@ def cosine_cross_scores(
     construction (a probe batch, ≤ ~100 rows) and ships inside the UDF
     closure exactly like the assign codebook.
 
-    ``impl="sql"`` is the interpreted higher-order fold (crossJoin +
-    ``cosine``); ``impl="arrow"`` (default) is the NumPy fast lane and is
-    BIT-EXACT to it: accumulation is vectorized across (row, query)
-    pairs but sequential across dimensions, so every pair performs the
-    identical IEEE-double op sequence ((0 + x₀y₀) + x₁y₁) + … for the
-    dot and both norms, then dot / (sqrt(n_a) * sqrt(n_b)) in the same
-    product-then-divide order. The higher-order fold runs on Spark's
-    interpreted expression path (~10x slower per element, guide §4.2) —
-    at sf0.1 the 40k-pair grid costs ~1 s interpreted vs ~0.1 s here;
-    at 100 TB the corpus side still streams through mapInPandas in Arrow
-    batches, each embedding shipped ONCE (the SQL lane's crossJoin
-    duplicates every vector Q times before scoring, §2.3).
+    NumPy kernel, BIT-EXACT to the sequential ``cosine`` fold and to the
+    DuckDB oracle's ``list_dot_product``: accumulation is vectorized
+    across (row, query) pairs but sequential across dimensions, so every
+    pair performs the identical IEEE-double op sequence
+    ((0 + x₀y₀) + x₁y₁) + … for the dot and both norms, then
+    dot / (sqrt(n_a) * sqrt(n_b)) in the same product-then-divide order.
+    Spark's higher-order fold runs on the interpreted expression path
+    (~10x slower per element, guide §4.2) — at sf0.1 the 40k-pair grid
+    costs ~1 s interpreted vs ~0.1 s here; at 100 TB the corpus side
+    streams through mapInPandas in Arrow batches, each embedding shipped
+    ONCE (a crossJoin would duplicate every vector Q times before
+    scoring, §2.3).
 
-    Degenerate inputs match the SQL lane exactly: data rows whose vector
-    is null or contains a null element yield a null ``_cs`` for every
-    query (flagged JVM-side — Arrow surfaces null elements as NaN); a
-    null/null-element QUERY vector yields null ``_cs`` for every data
-    row; zero norms divide to ±Inf/NaN identically in both lanes, and
-    genuine NaN elements propagate to NaN either way."""
-    qn = F.col(qvec_col).isNull() | F.exists(F.col(qvec_col), lambda e: e.isNull())
-    if impl != "arrow":
-        q = queries.select(
-            F.col(qid_col),
-            F.when(~qn, F.col(qvec_col)).alias(qvec_col),
-        )
-        return (
-            data.select(id_col, *carry, vec_col)
-            .crossJoin(F.broadcast(q))
-            .select(
-                id_col,
-                *carry,
-                qid_col,
-                cosine(F.col(vec_col), F.col(qvec_col)).alias("_cs"),
-            )
-        )
+    Degenerate inputs: data rows whose vector is null or contains a null
+    element yield a null ``_cs`` for every query (flagged JVM-side —
+    Arrow surfaces null elements as NaN); a null/null-element QUERY
+    vector yields null ``_cs`` for every data row, also when no query
+    vector is valid; zero norms divide to ±Inf/NaN, and genuine NaN
+    elements propagate to NaN."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
+    qn = F.col(qvec_col).isNull() | F.exists(F.col(qvec_col), lambda e: e.isNull())
     qrows = queries.select(qid_col, F.when(~qn, F.col(qvec_col)).alias("_qv")).collect()
     if not qrows:
         base = data.select(id_col, *carry).limit(0)
@@ -324,7 +275,8 @@ def cosine_cross_scores(
         )
     qids = [r[qid_col] for r in qrows]
     q_valid = np.array([r["_qv"] is not None for r in qrows], dtype=bool)
-    dim = next(len(r["_qv"]) for r in qrows if r["_qv"] is not None)
+    # no valid query vector: a zero-width grid, every pair masked to null
+    dim = next((len(r["_qv"]) for r in qrows if r["_qv"] is not None), 0)
     Qm = np.zeros((len(qrows), dim), dtype=np.float64)
     for i, r in enumerate(qrows):
         if r["_qv"] is not None:
@@ -398,7 +350,6 @@ def kmeans_lloyd(
     centroid_mod: int = 25,
     sample_mod: int = 4,
     iters: int = 2,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Deterministic Lloyd-trained centroids ``(_cid, _cvec)``.
 
@@ -415,19 +366,14 @@ def kmeans_lloyd(
     diverge. A float SUM here would drift with partition order and flip
     boundary assignments.
 
-    Plan shape per iteration: one broadcast-scoring pass over the sample +
-    one posexplode/groupBy((cid, dim)) mean + one per-cid re-pack. All
-    relational, no driver-side vectors.
+    Plan shape per iteration: one Arrow scoring pass over the sample
+    (``assign_to_centroids``) + one posexplode/groupBy((cid, dim)) mean +
+    one per-cid re-pack.
 
-    Side effect: each iteration eagerly persists + materializes the (tiny)
-    codebook — Spark jobs run at DataFrame-CONSTRUCTION time. Intermediate
-    iterations are unpersisted as soon as the next one materializes
-    (``persist`` registers with the CacheManager, so unlike
-    ``localCheckpoint`` the release actually happens); the RETURNED
-    codebook stays persisted — callers may ``unpersist()`` it when done.
-    Without the materialization every consumer would re-run the whole
-    training chain per reference; the logical plan still nests one
-    assign+mean subtree per iteration, but execution reads the cache.
+    Side effect: training runs at DataFrame-CONSTRUCTION time — each
+    iteration's assignment collects the previous codebook, and the final
+    (tiny) codebook is eagerly persisted + materialized. The RETURNED
+    codebook stays persisted in the memo below.
     """
     # Session-scoped memo: the trained/indexed IVF queries run the SAME
     # training (same corpus, same params) — train once, share the (tiny)
@@ -437,7 +383,7 @@ def kmeans_lloyd(
         memo_key = (
             emb.sparkSession.sparkContext.applicationId,
             emb.semanticHash(),
-            id_col, vec_col, centroid_mod, sample_mod, iters, impl,
+            id_col, vec_col, centroid_mod, sample_mod, iters,
         )
     except Exception:  # pragma: no cover - semanticHash unavailable
         memo_key = None
@@ -461,9 +407,8 @@ def kmeans_lloyd(
     sample = emb.filter(F.col(id_col) % sample_mod == 0).repartition(
         emb.sparkSession.sparkContext.defaultParallelism
     )
-    prev_ckpt = None
-    for it in range(iters):
-        assigned = assign_to_centroids(sample, cents, id_col, vec_col, impl=impl)
+    for _ in range(iters):
+        assigned = assign_to_centroids(sample, cents, id_col, vec_col)
         comps = (
             assigned.select(
                 F.col("centroid_id").alias("_cid"),
@@ -482,35 +427,20 @@ def kmeans_lloyd(
                 F.array_sort(F.collect_list(F.struct("_pos", "_comp"))), lambda s: s["_comp"]
             ).alias("_cvec")
         )
-        # Materialize the FINAL (tiny) codebook: without this every later
-        # consumer (probe, full assignment) would re-run the training
-        # chain per reference. Intermediate iterations in the arrow lane
-        # need no persist+count of their own (r12, guide §1.2): the next
-        # iteration's assign COLLECTS the codebook at construction time,
-        # which executes the chain exactly once — the old per-iteration
-        # persist+count ran the same chain a second time just to cache
-        # what the collect was about to consume. The SQL lane keeps the
-        # per-iteration materialization: its assign references cents
-        # lazily, so an unpersisted intermediate would nest (and
-        # re-execute) the whole chain per downstream reference.
-        if impl == "arrow" and it < iters - 1:
-            continue
-        cents = cents.persist()
-        cents.count()
-        # a previous SQL-lane iteration's cache is now dead: release it
-        # for real (persist + unpersist round-trips through the
-        # CacheManager; localCheckpoint's RDD would NOT be freed by
-        # Dataset.unpersist)
-        if prev_ckpt is not None:
-            prev_ckpt.unpersist()
-        prev_ckpt = cents
+    # Materialize the FINAL (tiny) codebook: without this every later
+    # consumer (probe, full assignment) would re-run the training chain
+    # per reference. Intermediate iterations need no persist of their own
+    # (r12, guide §1.2): the next iteration's assign COLLECTS the codebook
+    # at construction time, which executes the chain exactly once.
+    cents = cents.persist()
+    cents.count()
     # Report the span ONLY when the result lands in the memo: a
     # non-memoized call (memo_key None) is repeated per-query training
     # cost, and subtracting it from the triggering query's clock under a
     # memo label would mislabel it as a one-time build.
     if memo_key is not None:
         record_memo_timing(
-            f"kmeans_lloyd/{centroid_mod}/{sample_mod}/{iters}/{impl}",
+            f"kmeans_lloyd/{centroid_mod}/{sample_mod}/{iters}",
             _time.perf_counter() - _t0,
         )
     if memo_key is not None:
@@ -534,23 +464,21 @@ def ivf_topk_trained(
     centroid_mod: int = 25,
     sample_mod: int = 4,
     iters: int = 2,
-    impl: str = "arrow",
 ) -> DataFrame:
     """IVF search over Lloyd-trained centroids (see ``kmeans_lloyd``).
 
-    ``impl="arrow"`` (default) runs both the training assignments and the
-    full-corpus assignment through the bit-exact NumPy fast lane; the final
-    scoring of the probed cells stays relational (tiny after probing).
+    Training and the full-corpus assignment run through the bit-exact
+    NumPy ``assign_to_centroids``; the final scoring of the probed cells
+    stays relational (tiny after probing).
     """
-    # kmeans_lloyd materializes the codebook per iteration (localCheckpoint),
-    # so the full assignment and probe below reuse it without re-training.
-    cents = kmeans_lloyd(emb, id_col, vec_col, centroid_mod, sample_mod, iters, impl=impl)
+    # kmeans_lloyd persists the trained codebook, so the full assignment
+    # and probe below reuse it without re-training.
+    cents = kmeans_lloyd(emb, id_col, vec_col, centroid_mod, sample_mod, iters)
     assigned = assign_to_centroids(
         emb.repartition(emb.sparkSession.sparkContext.defaultParallelism),
         cents,
         id_col,
         vec_col,
-        impl=impl,
     )
     qvec = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("_qv"))
     probe = (
@@ -888,7 +816,6 @@ def save_ivf_index(
         cents,
         id_col,
         vec_col,
-        impl="arrow",
     ).select(id_col, "centroid_id").persist()
     try:
         (
@@ -1146,7 +1073,6 @@ def save_ivfpq_index(
             cents,
             id_col,
             vec_col,
-            impl="arrow",
         )
         codes = pq_codes_wide(
             emb,
@@ -1471,7 +1397,6 @@ def index_batch_rows(
         cents,
         id_col,
         vec_col,
-        impl="arrow",
     )
     if "codes" not in base_cols:
         return assigned.select(id_col, "centroid_id")
@@ -1726,7 +1651,6 @@ def centroid_distance_profile(
     cents: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-row centroid distance profile ``(id, cid, a_dist, b_dist)``:
     the own-cell assignment (rank = dot/|c|, ties to the lower cid — the
@@ -1735,62 +1659,16 @@ def centroid_distance_profile(
     every cluster-quality audit (silhouette, OOD screen) needs, reduced
     worker-side so the n x k grid never materializes as rows.
 
-    Distances are returned UNROUNDED: both lanes produce bit-identical
-    doubles (dot folds run sequentially over dims; cosine divides the dot
-    by the norm PRODUCT), and the consuming plan applies its own F.round
+    Arrow kernel: scores vectorized across rows, dims folded SEQUENTIALLY
+    (bit-identical to DuckDB's ``list_dot_product``), own cell by
+    first-max over cid-ascending columns (== rank desc, cid asc), b by
+    masked min. Distances are returned UNROUNDED (cosine divides the dot
+    by the norm PRODUCT) and the consuming plan applies its own F.round
     JVM-side, so numpy never rounds (F.round is half-up, np.round is
-    banker's — the repo rule).
-
-    ``impl="sql"`` scores the broadcast grid relationally (two window
-    functions on one vec_id shuffle); ``impl="arrow"`` streams Arrow
-    batches through the same fold vectorized across rows. Equivalence is
-    pinned by tests/test_operators.py::test_distance_profile_lane_equivalence.
+    banker's — the repo rule). Zero-norm centroids are excluded.
+    Equality with DuckDB is pinned by
+    tests/test_operators.py::test_distance_profile_matches_duckdb.
     """
-    if impl == "arrow":
-        return _centroid_distance_profile_arrow(data, cents, id_col, vec_col)
-    cn = cents.select(
-        "_cid", "_cvec", F.sqrt(dot(F.col("_cvec"), F.col("_cvec"))).alias("_cnorm")
-    ).filter(F.col("_cnorm") > 0)
-    en = data.withColumn(
-        "_enorm", F.sqrt(dot(F.col(vec_col), F.col(vec_col)))
-    )
-    scored = en.crossJoin(F.broadcast(cn)).select(
-        F.col(id_col),
-        F.col("_cid").alias("cid"),
-        dot(F.col(vec_col), F.col("_cvec")).alias("_dp"),
-        "_enorm",
-        "_cnorm",
-    ).select(
-        F.col(id_col),
-        "cid",
-        (F.col("_dp") / F.col("_cnorm")).alias("_rnk"),
-        # try_divide: a zero-norm data vector divides 0/0 — the degenerate
-        # contract is NULL (matching the Arrow lane), and ANSI mode would
-        # otherwise raise DIVIDE_BY_ZERO
-        (
-            F.lit(1.0)
-            - F.try_divide(F.col("_dp"), F.col("_enorm") * F.col("_cnorm"))
-        ).alias("_dist"),
-    )
-    w = W.partitionBy(id_col).orderBy(F.desc("_rnk"), "cid")
-    wp = W.partitionBy(id_col)
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .withColumn(
-            "b_dist", F.min(F.when(F.col("_rn") != 1, F.col("_dist"))).over(wp)
-        )
-        .filter(F.col("_rn") == 1)
-        .select(F.col(id_col), "cid", F.col("_dist").alias("a_dist"), "b_dist")
-    )
-
-
-def _centroid_distance_profile_arrow(
-    data: DataFrame, cents: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """Arrow lane for ``centroid_distance_profile``: scores vectorized
-    across rows, dims folded SEQUENTIALLY (bit-identical to the relational
-    aggregate fold), own cell by first-max over cid-ascending columns
-    (== rank desc, cid asc), b by masked min."""
     import numpy as np
     import pandas as pd
 
@@ -1809,8 +1687,7 @@ def _centroid_distance_profile_arrow(
     def profile(batches):
         for pdf in batches:
             if len(pdf) == 0 or k == 0:
-                # zero surviving centroids: the relational lane's
-                # crossJoin against an empty codebook emits no rows
+                # zero surviving centroids: no cell to profile against
                 continue
             X = np.asarray(pdf[vec_col].to_list(), dtype=np.float64)
             n = X.shape[0]
@@ -1827,12 +1704,10 @@ def _centroid_distance_profile_arrow(
             masked = dist.copy()
             masked[np.arange(n), own] = np.inf
             b = masked.min(axis=1)
-            # Degenerate-input contract (matches the relational lane,
-            # which yields NULL for both): a single surviving centroid
-            # leaves the masked min over an empty set (+inf here, empty
-            # MIN there), and a zero-norm data vector divides 0/0 (NaN
-            # here, NULL there). Map every non-finite to null so the
-            # lane-equivalence claim holds on ALL inputs.
+            # Degenerate inputs yield NULL, as an SQL MIN / division
+            # would: a single surviving centroid leaves the masked min
+            # over an empty set (+inf), and a zero-norm data vector
+            # divides 0/0 (NaN). Map every non-finite to null.
             a_s = pd.array(np.where(np.isfinite(a), a, np.nan), dtype="Float64")
             b_s = pd.array(np.where(np.isfinite(b), b, np.nan), dtype="Float64")
             a_s[~np.isfinite(a)] = pd.NA

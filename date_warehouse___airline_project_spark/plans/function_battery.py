@@ -199,8 +199,8 @@ _FUZZY_ORACLE = """
 
 
 # --- WRatio fuzzy correction (partial-ratio blend) ------------------------
-# SQL fragments mirroring operators/fuzzy.py::_wratio exactly (same float
-# expression shapes, so DuckDB reproduces the scores bit-for-bit).
+# SQL fragments mirroring operators/fuzzy.py::_py_wratio exactly (same float
+# op sequence, so DuckDB reproduces the scores bit-for-bit).
 def _sim_sql(x: str, y: str) -> str:
     return (
         f"100.0 * (1.0 - CAST(levenshtein({x}, {y}) AS DOUBLE)"
@@ -214,7 +214,7 @@ def _tsort_sql(x: str) -> str:
 
 def _partial_sql(x: str, y: str) -> str:
     """Best same-length-window levenshtein similarity of the shorter of
-    (x, y) against the longer — mirrors operators/fuzzy.py::_partial,
+    (x, y) against the longer — mirrors operators/fuzzy.py::_py_partial,
     including the empty-shorter → 0 guard (rapidfuzz semantics)."""
     s = f"CASE WHEN length({x}) <= length({y}) THEN {x} ELSE {y} END"
     l = f"CASE WHEN length({x}) <= length({y}) THEN {y} ELSE {x} END"
@@ -227,21 +227,11 @@ def _partial_sql(x: str, y: str) -> str:
     )
 
 
-_WRATIO_ORACLE = f"""
-    WITH dims AS (SELECT DISTINCT c_mktsegment AS seg FROM customer),
-    dirty AS (
-      SELECT c_custkey,
-             CASE c_custkey % 3
-               WHEN 0 THEN c_mktsegment || ' DEPT'
-               WHEN 1 THEN substr(c_mktsegment, 1, 1 + c_custkey % (length(c_mktsegment) - 1))
-                           || substr(c_mktsegment, 3 + c_custkey % (length(c_mktsegment) - 1))
-               ELSE 'QQQQQQQQ' END AS dirty_seg
-      FROM customer),
-    pre AS (
-      SELECT d.c_custkey, d.dirty_seg, m.seg,
-             upper(trim(d.dirty_seg)) AS a, upper(trim(m.seg)) AS b
-      FROM dirty d, dims m),
-    toks AS (
+# The WRatio scoring CTEs: read ``pre(c_custkey, dirty_seg, seg, a, b)``,
+# ``a``/``b`` being the upper/trimmed pair, and define ``scored(c_custkey,
+# dirty_seg, seg, score)``. Shared by the oracle below and by the test that
+# pins operators/fuzzy.py::_py_wratio to it.
+_WRATIO_SCORING_CTES = f"""toks AS (
       SELECT *,
              {_tsort_sql('a')} AS tsa, {_tsort_sql('b')} AS tsb,
              list_distinct(string_split_regex(trim(a), '\\s+')) AS ta,
@@ -278,7 +268,24 @@ _WRATIO_ORACLE = f"""
                        0.95 * CASE WHEN len_ratio > 8 THEN 0.6 ELSE 0.9 END * part_ts,
                        0.95 * CASE WHEN len_ratio > 8 THEN 0.6 ELSE 0.9 END * part_tset)
                   ELSE greatest(base, 0.95 * sim_ts, 0.95 * sim_tset) END AS score
-      FROM comp),
+      FROM comp)"""
+
+
+_WRATIO_ORACLE = f"""
+    WITH dims AS (SELECT DISTINCT c_mktsegment AS seg FROM customer),
+    dirty AS (
+      SELECT c_custkey,
+             CASE c_custkey % 3
+               WHEN 0 THEN c_mktsegment || ' DEPT'
+               WHEN 1 THEN substr(c_mktsegment, 1, 1 + c_custkey % (length(c_mktsegment) - 1))
+                           || substr(c_mktsegment, 3 + c_custkey % (length(c_mktsegment) - 1))
+               ELSE 'QQQQQQQQ' END AS dirty_seg
+      FROM customer),
+    pre AS (
+      SELECT d.c_custkey, d.dirty_seg, m.seg,
+             upper(trim(d.dirty_seg)) AS a, upper(trim(m.seg)) AS b
+      FROM dirty d, dims m),
+    {_WRATIO_SCORING_CTES},
     best AS (
       SELECT c_custkey, dirty_seg, seg, score,
              ROW_NUMBER() OVER (PARTITION BY c_custkey, dirty_seg

@@ -975,7 +975,7 @@ def emb_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_lloyd(e, centroid_mod=25, sample_mod=4, iters=2)
-    assigned = assign_to_centroids(e, cents, impl="arrow").select(
+    assigned = assign_to_centroids(e, cents).select(
         "vec_id", "embedding", F.col("centroid_id").alias("cid")
     )
     # r12 (guide §2.4, §1.2): ranked is referenced THREE times below (both
@@ -1235,7 +1235,7 @@ def emb_centroid_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_lloyd(e, centroid_mod=25, sample_mod=4, iters=2)
-    assigned = assign_to_centroids(e, cents, impl="arrow").select(
+    assigned = assign_to_centroids(e, cents).select(
         "vec_id", "embedding", F.col("centroid_id").alias("cid")
     )
     scored = assigned.join(
@@ -1651,7 +1651,7 @@ def emb_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one (cid, a, b) row per vector inside the scan — the grid never
     # materializes as rows, and the raw doubles are bit-identical to the
     # relational fold (lane-equivalence test)
-    sil_rows = centroid_distance_profile(e, cents, impl="arrow")
+    sil_rows = centroid_distance_profile(e, cents)
     sil = sil_rows.select(
         "cid",
         F.round(
@@ -2022,7 +2022,7 @@ def emb_outlier_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = kmeans_lloyd(e, centroid_mod=25, sample_mod=4, iters=2).orderBy(
         "_cid"
     ).limit(_AUDIT_CENTS)
-    own = centroid_distance_profile(e, cents, impl="arrow").select(
+    own = centroid_distance_profile(e, cents).select(
         "vec_id", "cid", F.round("a_dist", 8).alias("dist")
     )
     # per-cell stats as window aggregates over the SAME cid partitioning
@@ -2401,7 +2401,7 @@ def emb_ivf_nprobe_autotune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_TUNE_NQ)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
     )
-    assigned = assign_to_centroids(e, cents, impl="arrow").select(
+    assigned = assign_to_centroids(e, cents).select(
         "vec_id", "embedding", F.col("centroid_id").alias("_cid")
     )
     w_probe = W.partitionBy("qid").orderBy(
@@ -2636,7 +2636,6 @@ def _ivfpq_cand(
     assigned = assign_to_centroids(
         e.repartition(e.sparkSession.sparkContext.defaultParallelism),
         cents,
-        impl="arrow",
     )
     hits = (
         assigned.join(F.broadcast(probe), "centroid_id", "left_semi")

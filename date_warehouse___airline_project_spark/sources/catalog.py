@@ -102,9 +102,3 @@ def rebalance_compute(df: DataFrame) -> DataFrame:
     if df._jdf.queryExecution().toRdd().getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so plans can be written in SQL."""
-    for n in TABLES:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

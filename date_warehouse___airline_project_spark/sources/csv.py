@@ -26,10 +26,3 @@ def read_csv_all_string(spark: SparkSession, path: str, sanitize: bool = True) -
         renames = {c: header_sanitize(c) or c for c in df.columns}
         df = df.withColumnsRenamed(renames)
     return df
-
-
-def synthesize_all_string_ddl(columns: list[str], table: str) -> str:
-    """Header → CREATE TABLE (every column STRING) — the S2 dynamic-DDL
-    shape, emitted as Spark SQL instead of Postgres TEXT columns."""
-    cols = ",\n  ".join(f"{header_sanitize(c) or c} STRING" for c in columns)
-    return f"CREATE TABLE IF NOT EXISTS {table} (\n  {cols}\n) USING parquet"

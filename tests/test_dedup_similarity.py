@@ -131,20 +131,38 @@ def test_neardup_bucketed_finds_exact_dup(emb):
     assert pairs == {(1, 100): 1.0}
 
 
-def test_assign_arrow_impl_bit_exact_vs_sql(emb):
-    # The NumPy fast lane must be BIT-exact to the relational fold: same
-    # sequential-over-dims accumulation, same (score desc, cid asc)
-    # tie-break — so assignments are identical, not merely close.
+def test_assign_to_centroids_matches_duckdb_argmax(emb):
+    # The NumPy kernel must be BIT-exact to DuckDB's sequential fold
+    # (list_dot_product): argmax of dot/|c|, ties to the lower cid,
+    # zero-norm centroids excluded — so assignments are identical, not
+    # merely close.
+    import duckdb
+
     from date_warehouse___airline_project_spark.operators.similarity import (
         assign_to_centroids,
         kmeans_lloyd,
     )
 
-    cents = kmeans_lloyd(emb, centroid_mod=10, sample_mod=2, iters=1, impl="sql")
-    want = {(r.vec_id, r.centroid_id) for r in
-            assign_to_centroids(emb, cents, impl="sql").select("vec_id", "centroid_id").collect()}
+    cents = kmeans_lloyd(emb, centroid_mod=10, sample_mod=2, iters=1)
+    con = duckdb.connect()
+    con.register("emb_t", emb.select("vec_id", "embedding").toArrow())
+    con.register("cents_t", cents.select("_cid", "_cvec").toArrow())
+    want = set(
+        con.sql(
+            """
+            WITH c AS (SELECT _cid, _cvec, sqrt(list_dot_product(_cvec, _cvec)) AS cn
+                       FROM cents_t)
+            SELECT e.vec_id, c._cid
+            FROM emb_t e, c
+            WHERE c.cn > 0
+            QUALIFY row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(e.embedding, c._cvec) / c.cn DESC, c._cid) = 1
+            """
+        ).fetchall()
+    )
     got = {(r.vec_id, r.centroid_id) for r in
-           assign_to_centroids(emb, cents, impl="arrow").select("vec_id", "centroid_id").collect()}
+           assign_to_centroids(emb, cents).select("vec_id", "centroid_id").collect()}
     assert got == want and len(got) == 41
 
 
@@ -311,10 +329,9 @@ def test_round2_queries_survive_empty_corpus(spark, tmp_path):
     assert len(stats) == 1 and stats[0]["n_keys_built"] == 0 and stats[0]["n_maybe"] == 0
 
 
-def test_assign_lanes_agree_on_degenerate_inputs(spark):
-    # zero-norm centroid: excluded by BOTH lanes; null vector: null
-    # centroid_id in BOTH lanes — the lanes must agree, not just on the
-    # happy path.
+def test_assign_to_centroids_degenerate_inputs(spark):
+    # zero-norm centroid: excluded; null vector and null-element vector:
+    # null centroid_id — not just the happy path.
     from date_warehouse___airline_project_spark.operators.similarity import (
         assign_to_centroids,
     )
@@ -322,23 +339,54 @@ def test_assign_lanes_agree_on_degenerate_inputs(spark):
     cents = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, [0.0, 1.0])], ["_cid", "_cvec"]
     )
-    # 12: null vector; 13: vector with a null ELEMENT — the SQL lane's dot
-    # yields null for every centroid (when() guard → null centroid); the
-    # Arrow lane must mask it in the plan, because Arrow hands the kernel
-    # NaN for the null element and NaN would win argmax.
+    # 12: null vector; 13: vector with a null ELEMENT — the kernel must
+    # mask it in the plan, because Arrow hands the kernel NaN for the null
+    # element and NaN would win argmax.
     data = spark.createDataFrame(
         [(10, [1.0, 0.1]), (11, [0.1, 1.0]), (12, None), (13, [1.0, None])],
         "vec_id long, embedding array<double>",
     )
     want = {(10, 1), (11, 2), (12, None), (13, None)}
-    for impl in ("sql", "arrow"):
-        got = {
-            (r.vec_id, r.centroid_id)
-            for r in assign_to_centroids(data, cents, impl=impl)
-            .select("vec_id", "centroid_id")
-            .collect()
+    got = {
+        (r.vec_id, r.centroid_id)
+        for r in assign_to_centroids(data, cents)
+        .select("vec_id", "centroid_id")
+        .collect()
+    }
+    assert got == want
+
+
+def test_cosine_cross_scores_null_vectors_and_query_sets(spark):
+    # A null data vector or one with a null element scores null against
+    # every query; a query set whose vectors are all null (or hold a null
+    # element) scores null for every pair instead of raising; in a mixed
+    # set only the invalid query's column is null.
+    from date_warehouse___airline_project_spark.operators.similarity import (
+        cosine_cross_scores,
+    )
+
+    data = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [3.0, 4.0]), (3, None), (4, [1.0, None])],
+        "vec_id long, embedding array<double>",
+    )
+
+    def grid(qrows):
+        qs = spark.createDataFrame(qrows, "qid long, qv array<double>")
+        return {
+            (r.vec_id, r.qid): r._cs
+            for r in cosine_cross_scores(data, qs).collect()
         }
-        assert got == want, impl
+
+    for qrows in ([(7, None)], [(9, [None, 1.0])]):
+        qid = qrows[0][0]
+        assert grid(qrows) == {(v, qid): None for v in (1, 2, 3, 4)}
+    got = grid([(1, [1.0, 0.0]), (2, None), (3, [0.0, 2.0])])
+    assert got == {
+        (1, 1): 1.0, (1, 2): None, (1, 3): 0.0,
+        (2, 1): 0.6, (2, 2): None, (2, 3): 0.8,
+        (3, 1): None, (3, 2): None, (3, 3): None,
+        (4, 1): None, (4, 2): None, (4, 3): None,
+    }
 
 
 def test_multitable_pair_verify_handles_null_embeddings(spark):
@@ -502,7 +550,7 @@ def test_ivf_append_equals_rebuild(spark, tmp_path):
     cents = spark.read.parquet(f"{p1}/codebook")
     p2 = str(tmp_path / "rebuilt")
     cents.write.parquet(f"{p2}/codebook")
-    assign_to_centroids(e, cents, impl="arrow").select(
+    assign_to_centroids(e, cents).select(
         "vec_id", "centroid_id"
     ).repartition("centroid_id").write.partitionBy("centroid_id").parquet(
         f"{p2}/assignments"

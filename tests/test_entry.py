@@ -236,7 +236,7 @@ plans.load_all()
 spark = get_spark("fp_determinism")
 spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
 names = ["q1_pricing_summary", "simhash_dupes", "emb_mmr_diverse_topk"]
-out = {n: recert.fingerprint_versions(spark, plans.REGISTRY[n]) for n in names}
+out = {n: recert.fingerprint_one(spark, plans.REGISTRY[n]) for n in names}
 print("FPJSON:" + json.dumps(out, sort_keys=True))
 """
 

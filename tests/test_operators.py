@@ -254,50 +254,64 @@ _WRATIO_KNOWN_DIVERGENT: set[tuple[str, str]] = {
 }
 
 
-def test_fuzzy_wratio_threshold_parity_corpus(spark):
-    # The native scorer is levenshtein-based (whole-stage codegen), public
-    # WRatio is difflib-based — exact score parity is impossible, but for
-    # the dim-correction corpus both must fall on the SAME SIDE of the 85
+def test_fuzzy_wratio_threshold_parity_corpus():
+    # The native scorer is levenshtein-based, public WRatio is
+    # difflib-based — exact score parity is impossible, but for the
+    # dim-correction corpus both must fall on the SAME SIDE of the 85
     # correction threshold; divergences must be pinned, not silent.
-    from date_warehouse___airline_project_spark.operators.fuzzy import _wratio
+    from date_warehouse___airline_project_spark.operators.fuzzy import _py_wratio
 
-    df = spark.createDataFrame(_WRATIO_CORPUS, ["dirty", "cand"])
-    a = F.upper(F.trim(F.col("dirty")))
-    b = F.upper(F.trim(F.col("cand")))
-    rows = df.select("dirty", "cand", _wratio(a, b).alias("native")).collect()
     mismatches = []
-    for r in rows:
-        expect = _public_wratio(r["dirty"], r["cand"]) >= 85
-        got = r["native"] >= 85
-        key = (r["dirty"], r["cand"])
+    for dirty, cand in _WRATIO_CORPUS:
+        # the plan's upper(trim(...)) — Spark's trim strips spaces only
+        native = _py_wratio(dirty.strip(" ").upper(), cand.strip(" ").upper())
+        expect = _public_wratio(dirty, cand) >= 85
+        got = native >= 85
+        key = (dirty, cand)
         if (expect != got) != (key in _WRATIO_KNOWN_DIVERGENT):
-            mismatches.append((key, round(_public_wratio(*key), 1), round(r["native"], 1)))
+            mismatches.append((key, round(_public_wratio(*key), 1), round(native, 1)))
     assert not mismatches, f"(pair, public, native): {mismatches}"
 
 
-def test_fuzzy_wratio_python_lane_equals_column_lane(spark):
-    # r12: fuzzy_correct(scorer="wratio") scores pairs in a Python kernel
-    # (_py_wratio) instead of the staged Column tree. The two lanes must
-    # be BIT-equal — the DuckDB oracle mirrors the Column float shapes at
+def test_fuzzy_wratio_kernel_equals_oracle_sql():
+    # fuzzy_correct(scorer="wratio") scores pairs in a Python kernel
+    # (_py_wratio); the fuzzy_wratio_correction oracle scores them with
+    # its own DuckDB SQL. The two must be BIT-equal — the oracle rounds to
     # 6 dp, so any drift would flip rounded scores. Checked over the full
     # parity corpus (exact members, deletions, substitutions, suffix/
     # prefix noise, both partial regimes, token reorders, whitespace).
-    from date_warehouse___airline_project_spark.operators.fuzzy import (
-        _py_wratio,
-        _wratio,
+    import duckdb
+
+    from date_warehouse___airline_project_spark.operators.fuzzy import _py_wratio
+    from date_warehouse___airline_project_spark.plans.function_battery import (
+        _WRATIO_SCORING_CTES,
     )
 
-    df = spark.createDataFrame(_WRATIO_CORPUS, ["dirty", "cand"])
-    a = F.upper(F.trim(F.col("dirty")))
-    b = F.upper(F.trim(F.col("cand")))
-    rows = df.select("dirty", "cand", a.alias("ua"), b.alias("ub"),
-                     _wratio(a, b).alias("col_score")).collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE corpus (i INTEGER, dirty VARCHAR, cand VARCHAR)")
+    con.executemany(
+        "INSERT INTO corpus VALUES (?, ?, ?)",
+        [(i, d, c) for i, (d, c) in enumerate(_WRATIO_CORPUS)],
+    )
+    rows = con.sql(
+        f"""
+        WITH pre AS (
+          SELECT i AS c_custkey, dirty AS dirty_seg, cand AS seg,
+                 upper(trim(dirty)) AS a, upper(trim(cand)) AS b
+          FROM corpus),
+        {_WRATIO_SCORING_CTES}
+        SELECT p.dirty_seg, p.seg, p.a, p.b, s.score
+        FROM scored s JOIN pre p USING (c_custkey)
+        ORDER BY c_custkey
+        """
+    ).fetchall()
+    assert len(rows) == len(_WRATIO_CORPUS)
     diffs = [
-        (r["dirty"], r["cand"], r["col_score"], _py_wratio(r["ua"], r["ub"]))
-        for r in rows
-        if _py_wratio(r["ua"], r["ub"]) != r["col_score"]
+        (dirty, cand, score, _py_wratio(a, b))
+        for dirty, cand, a, b, score in rows
+        if _py_wratio(a, b) != score
     ]
-    assert not diffs, f"(dirty, cand, column, python): {diffs}"
+    assert not diffs, f"(dirty, cand, oracle, python): {diffs}"
 
 
 def test_fuzzy_wratio_short_strings_no_partial(spark):
@@ -479,8 +493,46 @@ def test_pca_moment_rounding_edge(spark):
         assert got[(1, 1)] == 1 + 0, got   # 0.5->1, 0.125->0
 
 
-def test_distance_profile_lane_equivalence(spark):
-    """Arrow distance-profile lane vs the relational window form: raw
+def _duckdb_distance_profile(e, cents) -> list[tuple]:
+    """The distance profile in DuckDB over the same rows: own cell by
+    dot/|c| desc, cid asc; raw 1 - dp/(|e||c|) distances; zero-norm
+    centroids excluded. Sorted (vec_id, cid, a_dist, b_dist) tuples."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("emb_t", e.select("vec_id", "embedding").toArrow())
+    con.register("cents_t", cents.select("_cid", "_cvec").toArrow())
+    return sorted(
+        con.sql(
+            """
+            WITH c AS (
+              SELECT _cid, CAST(_cvec AS DOUBLE[]) AS cv FROM cents_t),
+            cn AS (
+              SELECT _cid, cv, sqrt(list_dot_product(cv, cv)) AS cnorm FROM c),
+            v AS (
+              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM emb_t),
+            s AS (
+              SELECT v.vec_id, cn._cid AS cid, cn.cnorm,
+                     list_dot_product(v.ev, cn.cv) AS dp,
+                     sqrt(list_dot_product(v.ev, v.ev)) AS enorm
+              FROM v, cn WHERE cn.cnorm > 0),
+            r AS (
+              SELECT vec_id, cid, 1.0 - dp / (enorm * cnorm) AS dist,
+                     row_number() OVER (PARTITION BY vec_id
+                                        ORDER BY dp / cnorm DESC, cid) AS rn
+              FROM s)
+            SELECT vec_id,
+                   max(cid) FILTER (WHERE rn = 1),
+                   max(dist) FILTER (WHERE rn = 1),
+                   min(dist) FILTER (WHERE rn <> 1)
+            FROM r GROUP BY vec_id
+            """
+        ).fetchall()
+    )
+
+
+def test_distance_profile_matches_duckdb(spark):
+    """The Arrow distance profile vs DuckDB over the same rows: raw
     (unrounded) doubles for own-cell assignment and a/b distances must be
     BIT-identical (sequential-over-dims folds, product-then-divide cosine,
     first-max == rank desc / cid asc)."""
@@ -491,14 +543,9 @@ def test_distance_profile_lane_equivalence(spark):
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = kmeans_lloyd(e, centroid_mod=25, sample_mod=4, iters=2)
-    arrow = sorted(
-        tuple(r) for r in centroid_distance_profile(e, cents, impl="arrow").collect()
-    )
-    sql = sorted(
-        tuple(r) for r in centroid_distance_profile(e, cents, impl="sql").collect()
-    )
-    assert arrow == sql
-    assert len(arrow) == e.count()
+    got = sorted(tuple(r) for r in centroid_distance_profile(e, cents).collect())
+    assert got == _duckdb_distance_profile(e, cents)
+    assert len(got) == e.count()
 
 
 def test_ivf_cell_drift_empty_training_cell(spark, tmp_path):
@@ -528,9 +575,9 @@ def test_ivf_cell_drift_empty_training_cell(spark, tmp_path):
 
 
 def test_distance_profile_degenerate_inputs(spark):
-    """Lane-equivalence contract on degenerate inputs: a single surviving
-    centroid yields b_dist NULL in BOTH lanes (not +inf), and a zero-norm
-    data vector yields NULL distances in BOTH lanes (not NaN)."""
+    """Degenerate inputs: a single surviving centroid yields b_dist NULL
+    (not +inf), and a zero-norm data vector yields NULL distances (not
+    NaN) — as DuckDB's MIN over no rows and 0/0 do."""
     import math
 
     from date_warehouse___airline_project_spark.operators.similarity import (
@@ -548,24 +595,18 @@ def test_distance_profile_degenerate_inputs(spark):
         [(0, [1.0, 1.0]), (1, [-1.0, 1.0])], "_cid long, _cvec array<double>"
     )
     for cents in (one_cent, two_cents):
-        lanes = {
-            impl: {
-                r["vec_id"]: r
-                for r in centroid_distance_profile(e, cents, impl=impl).collect()
-            }
-            for impl in ("arrow", "sql")
+        rows = {
+            r["vec_id"]: r
+            for r in centroid_distance_profile(e, cents).collect()
         }
-        for impl, rows in lanes.items():
-            # zero-norm vector: both distances null, never NaN
-            assert rows[2]["a_dist"] is None, (impl, rows[2])
-            assert rows[2]["b_dist"] is None, (impl, rows[2])
+        # zero-norm vector: both distances null, never NaN
+        assert rows[2]["a_dist"] is None, rows[2]
+        assert rows[2]["b_dist"] is None, rows[2]
         if cents is one_cent:
-            for impl, rows in lanes.items():
-                assert rows[1]["b_dist"] is None, (impl, rows[1])
+            assert rows[1]["b_dist"] is None, rows[1]
         else:
-            for impl, rows in lanes.items():
-                assert rows[1]["b_dist"] is not None
-                assert not math.isnan(rows[1]["b_dist"])
-        assert sorted(tuple(r) for r in lanes["arrow"].values()) == sorted(
-            tuple(r) for r in lanes["sql"].values()
+            assert rows[1]["b_dist"] is not None
+            assert not math.isnan(rows[1]["b_dist"])
+        assert sorted(tuple(r) for r in rows.values()) == _duckdb_distance_profile(
+            e, cents
         )

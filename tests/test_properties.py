@@ -272,33 +272,25 @@ def test_gapfill_ffill_invariants(spark, obs):
     )
 )
 @settings(**SETTINGS)
-def test_wratio_bounds_and_dominance(spark, values):
+def test_wratio_bounds_and_dominance(values):
     """WRatio invariants on arbitrary ASCII strings: scores are within
     [0, 100]; an exact dim member always scores 100; and wratio never
     scores BELOW the plain levenshtein ratio for the same pair (it is a
     max over components that includes the base ratio)."""
     from date_warehouse___airline_project_spark.operators.fuzzy import (
-        _similarity,
-        _wratio,
+        _py_sim,
+        _py_wratio,
     )
 
-    rows = [(v,) for v in values]
-    df = spark.createDataFrame(rows, ["a"]).crossJoin(
-        spark.createDataFrame(rows, ["b"])
-    )
-    a = F.upper(F.trim(F.col("a")))
-    b = F.upper(F.trim(F.col("b")))
-    got = df.select(
-        "a",
-        "b",
-        _wratio(a, b).alias("w"),
-        _similarity(a, b).alias("base"),
-    ).collect()
-    for r in got:
-        assert -1e-9 <= r["w"] <= 100 + 1e-9, (r["a"], r["b"], r["w"])
-        assert r["w"] >= r["base"] - 1e-9, (r["a"], r["b"], r["w"], r["base"])
-        if r["a"].strip().upper() == r["b"].strip().upper():
-            assert abs(r["w"] - 100.0) < 1e-9
+    for va in values:
+        for vb in values:
+            # the plan's upper(trim(...)) — Spark's trim strips spaces only
+            a, b = va.strip(" ").upper(), vb.strip(" ").upper()
+            w, base = _py_wratio(a, b), _py_sim(a, b)
+            assert -1e-9 <= w <= 100 + 1e-9, (va, vb, w)
+            assert w >= base - 1e-9, (va, vb, w, base)
+            if va.strip().upper() == vb.strip().upper():
+                assert abs(w - 100.0) < 1e-9
 
 
 def test_pareto_frontier_exactness_properties(spark):

@@ -4,6 +4,11 @@
 set -e
 cd "$(dirname "$0")/.."
 python -m pytest tests/ -q
+# The benchmark reads package internals (similarity._KMEANS_MEMO,
+# text_dedup._DERIVED_CACHE, set_memo_instrumentation,
+# drain_memo_timings); its fast tests catch a rename before a benchmark
+# run would report it as failed operations. They never call bench.py.
+python -m pytest perfbench/test_perfbench.py -q
 python tools/oracle_check.py /root/testdata/sf0.001
 python tools/oracle_check.py /root/testdata/sf0.01
 python tools/plan_audit.py

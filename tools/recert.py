@@ -42,6 +42,11 @@ sys.path.insert(0, REPO)
 HASHES_PATH = os.path.join(REPO, "tools", "plan_hashes.json")
 RECERT_PATH = os.path.join(REPO, "tools", "recert_list.json")
 FINGERPRINT_SF_DIR = "/root/testdata/sf0.001"
+# spark.range() prints its default split count (defaultParallelism) into
+# the analyzed plan as ``splits=Some(N)``, so the fingerprinting session
+# runs at a fixed core count — the one the committed baseline was
+# written at — whatever the host's.
+FINGERPRINT_CPUS = 32
 
 _NORMALIZERS = [
     # Catalyst expression IDs: colname#1234 / #1234L
@@ -58,39 +63,25 @@ _NORMALIZERS = [
     # run-to-run varying statistics annotations
     (re.compile(r"Statistics\([^)]*\)"), "Statistics"),
     (re.compile(r"[ \t]+"), " "),
+    # Repartition targets come from sparkContext.defaultParallelism
+    # (spread(), rebalance_compute), i.e. the fingerprinting MACHINE's
+    # core count — a driver with a different core count would otherwise
+    # flag the whole text/dedup registry as drifted (v4).
+    (re.compile(r"\bRepartition \d+"), "Repartition N"),
 ]
 
-# v4 (r12, per the r11 ADVICE): Repartition targets come from
-# sparkContext.defaultParallelism (spread(), rebalance_compute), i.e.
-# the fingerprinting MACHINE's core count — a driver with a different
-# core count would flip every such digit and flag the whole text/dedup
-# registry as drifted. Normalized like the other session-varying state.
-# Introduced as an algorithm VERSION so the re-baseline rides the
-# committed migration path (diff with the algorithm that produced the
-# old baseline, re-baseline under the new one) instead of flooding the
-# recert window.
-_REPARTITION_RX = (re.compile(r"\bRepartition \d+"), "Repartition N")
 
-
-def normalize_plan(plan: str, version: str = "4") -> str:
+def normalize_plan(plan: str) -> str:
     for rx, rep in _NORMALIZERS:
         plan = rx.sub(rep, plan)
-    if version not in ("1", "2", "3"):
-        plan = _REPARTITION_RX[0].sub(_REPARTITION_RX[1], plan)
     return plan.strip()
 
 
 _PKG = "date_warehouse___airline_project_spark"
 
 # Fingerprint ALGORITHM version, stored inside plan_hashes.json under
-# VERSION_KEY. When the algorithm itself changes (e.g. v1's one-level
-# same-module source walk -> v2's transitive cross-module walk -> v3's
-# resolution of function-LOCAL imports -> v4's Repartition-target
-# normalization), every hash changes for reasons that are NOT behavior
-# drift; the migration in main() diffs the committed baseline with the
-# algorithm that PRODUCED it (so genuine drift is still caught), then
-# re-baselines under the new algorithm — without dumping all 172
-# queries into the recert window.
+# VERSION_KEY. A baseline written by another algorithm hashes differently
+# for reasons that are NOT behavior drift, so main() refuses to diff it.
 FP_VERSION = "4"
 VERSION_KEY = "__fp_version__"
 
@@ -159,17 +150,12 @@ def _fn_sources(fn) -> str:
     reachable through global-name references, walked recursively and
     across package modules (both ``from x import helper`` and
     ``import x; x.helper(...)`` styles), PLUS functions bound by imports
-    local to a function body (resolved via the AST — v3). Catches
-    behavior that never reaches the plan string: driver-side folds over
-    collected bounded relations (e.g. the MMR greedy loop's arithmetic
-    helpers) appear as a LocalRelation in the plan, so only their Python
-    source can witness a change — including second-level helpers (dot()
-    reached via cosine()), cross-module ones (missed by v1's one-level
-    same-module walk), and locally-imported ones (missed by v2)."""
-    return _fn_sources_walk(fn, local_imports=True)
-
-
-def _fn_sources_walk(fn, local_imports: bool) -> str:
+    local to a function body (resolved via the AST). Catches behavior
+    that never reaches the plan string: driver-side folds over collected
+    bounded relations (e.g. the MMR greedy loop's arithmetic helpers)
+    appear as a LocalRelation in the plan, so only their Python source
+    can witness a change — including second-level helpers (dot() reached
+    via cosine()), cross-module ones, and locally-imported ones."""
     import inspect
     import types
 
@@ -197,16 +183,15 @@ def _fn_sources_walk(fn, local_imports: bool) -> str:
             if isinstance(m, types.ModuleType)
             and (m.__name__ or "").startswith(_PKG)
         ]
-        if local_imports:
-            for obj in _local_import_objs(f):
-                if isinstance(obj, types.FunctionType) and (
-                    obj.__module__ or ""
-                ).startswith(_PKG):
-                    queue.append(obj)
-                elif isinstance(obj, types.ModuleType) and (
-                    obj.__name__ or ""
-                ).startswith(_PKG):
-                    mods.append(obj)
+        for obj in _local_import_objs(f):
+            if isinstance(obj, types.FunctionType) and (
+                obj.__module__ or ""
+            ).startswith(_PKG):
+                queue.append(obj)
+            elif isinstance(obj, types.ModuleType) and (
+                obj.__name__ or ""
+            ).startswith(_PKG):
+                mods.append(obj)
         for m in mods:
             for name in names:
                 obj = getattr(m, name, None)
@@ -218,64 +203,15 @@ def _fn_sources_walk(fn, local_imports: bool) -> str:
     return "\n".join(srcs)
 
 
-def _fn_sources_v2(fn) -> str:
-    """LEGACY v2 source walk (global-name references only; blind to
-    function-local imports) — kept so a committed v2 baseline can be
-    diffed with the algorithm that produced it during migration."""
-    return _fn_sources_walk(fn, local_imports=False)
-
-
-def _fn_sources_v1(fn) -> str:
-    """LEGACY v1 source walk (one level deep, same module only) — kept
-    solely so a committed v1 baseline can be diffed with the algorithm
-    that produced it during the v1 -> v2 migration."""
-    import inspect
-
-    srcs = [inspect.getsource(fn)]
-    mod = sys.modules.get(fn.__module__)
-    for name in fn.__code__.co_names:
-        obj = getattr(mod, name, None)
-        if inspect.isfunction(obj) and obj.__module__ == fn.__module__:
-            try:
-                srcs.append(inspect.getsource(obj))
-            except OSError:  # pragma: no cover
-                pass
-    return "\n".join(srcs)
-
-
-# v4 shares v3's source walk — the algorithm change is normalizer-only
-_SOURCE_WALKS = {
-    "1": _fn_sources_v1,
-    "2": _fn_sources_v2,
-    "3": _fn_sources,
-    "4": _fn_sources,
-}
-
-
-def fingerprint_one(
-    spark, q, sf_dir: str = FINGERPRINT_SF_DIR, version: str = FP_VERSION
-) -> str:
-    return fingerprint_versions(spark, q, sf_dir, (version,))[version]
-
-
-def fingerprint_versions(
-    spark, q, sf_dir: str = FINGERPRINT_SF_DIR, versions=tuple(_SOURCE_WALKS)
-) -> dict[str, str]:
-    """Fingerprint under each requested algorithm version in ONE plan
-    construction (the expensive part is building the DataFrame)."""
+def fingerprint_one(spark, q, sf_dir: str = FINGERPRINT_SF_DIR) -> str:
     df = q.fn(spark, sf_dir)
     plan = df._jdf.queryExecution().analyzed().toString()
-    out = {}
-    for v in versions:
-        base = "\0".join([normalize_plan(plan, v), q.oracle or ""])
-        out[v] = hashlib.sha256(
-            f"{base}\0{_SOURCE_WALKS[v](q.fn)}".encode()
-        ).hexdigest()
-    return out
+    base = "\0".join([normalize_plan(plan), q.oracle or ""])
+    return hashlib.sha256(f"{base}\0{_fn_sources(q.fn)}".encode()).hexdigest()
 
 
-def compute_fingerprints(versions=(FP_VERSION,)) -> dict[str, dict[str, str]]:
-    """{query: {version: digest}} for every registry query."""
+def compute_fingerprints() -> dict[str, str]:
+    """{query: digest} for every registry query."""
     # Full lineage, not checkpoint-truncated LogicalRDDs (see _materialize).
     # Value = OUR pid: fingerprint_session() in text_dedup only honors the
     # variable in the process that set it, so a leaked/inherited copy can't
@@ -286,18 +222,18 @@ def compute_fingerprints(versions=(FP_VERSION,)) -> dict[str, dict[str, str]]:
     from date_warehouse___airline_project_spark.session import get_spark
 
     plans.load_all()
-    spark = get_spark("recert")
+    spark = get_spark("recert", master=f"local[{FINGERPRINT_CPUS}]")
     # Plan strings truncate expression lists at spark.sql.debug.
     # maxToStringFields (default 25) — a 48-column aggregate change hashed
     # IDENTICAL under the default because the changed columns were elided
     # as "... N more fields". Fingerprints must see the whole tree.
     spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
-    out: dict[str, dict[str, str]] = {}
+    out: dict[str, str] = {}
     for name, q in plans.REGISTRY.items():
         try:
-            out[name] = fingerprint_versions(spark, q, versions=versions)
+            out[name] = fingerprint_one(spark, q)
         except Exception as exc:  # a broken plan must surface, not hide
-            out[name] = {v: f"ERROR:{type(exc).__name__}:{exc}" for v in versions}
+            out[name] = f"ERROR:{type(exc).__name__}:{exc}"
     return out
 
 
@@ -371,20 +307,18 @@ def main() -> None:
     if os.path.exists(HASHES_PATH):
         with open(HASHES_PATH) as f:
             old = json.load(f)
-    # A pre-versioning baseline is v1 by definition.
-    old_version = str(old.pop(VERSION_KEY, "1"))
-    # Behavior drift is detected by diffing the committed baseline with
-    # the ALGORITHM THAT PRODUCED IT; the new baseline is always written
-    # under the current algorithm. During a version migration this needs
-    # both digests — one plan construction, two source walks.
-    versions = (FP_VERSION,) if old_version == FP_VERSION else (old_version, FP_VERSION)
-    pairs = compute_fingerprints(versions=versions)
-    new_for_diff = {n: hs[old_version if old else FP_VERSION] for n, hs in pairs.items()}
-    new = {n: hs[FP_VERSION] for n, hs in pairs.items()}
+        old_version = str(old.pop(VERSION_KEY, "1"))
+        if old_version != FP_VERSION:
+            sys.exit(
+                f"{HASHES_PATH} holds fingerprint algorithm v{old_version} but "
+                f"this tool computes v{FP_VERSION}: every query would diff as "
+                "changed, so no comparison was made."
+            )
+    new = compute_fingerprints()
     # First run ever: the hashes file IS the baseline — queries keep their
     # existing green rows (their behavior at baseline is what those rows
     # certified as of this commit); only subsequent drift re-windows them.
-    changed = diff(old, new_for_diff) if old else []
+    changed = diff(old, new) if old else []
     old_recert: dict[str, int] | list[str] = []
     if os.path.exists(RECERT_PATH):
         with open(RECERT_PATH) as f:
@@ -393,8 +327,12 @@ def main() -> None:
     entry_round = (max(greens) if greens else 0) + 1
     recert = carry_over(old_recert, changed, greens, set(new), entry_round)
     errors = [n for n, h in new.items() if h.startswith("ERROR:")]
-    print(f"{len(new)} queries fingerprinted (algo v{old_version}->v{FP_VERSION}), "
-          f"{len(changed)} changed/new, "
+    listed = set(old_recert)
+    already = sum(n in listed for n in changed)
+    resolved = len(listed - set(recert))
+    print(f"{len(new)} queries fingerprinted (algo v{FP_VERSION}), "
+          f"{len(changed)} changed/new ({len(changed) - already} new to the "
+          f"recert list, {already} already in it), {resolved} resolved, "
           f"{len(recert)} to re-certify, {len(errors)} errored")
     for n in recert:
         print(f"  recert: {n}")
