@@ -1,9 +1,15 @@
 """validity_split — the core cleaner shape (SURVEY §2.2 P1).
 
 The reference builds a boolean mask and materializes df[mask] / df[~mask]
-(cleaning.py:386-388 et al.). Spark-first: ONE validity expression computed
-once, two lazy filters off the same plan — Catalyst shares the scan, and at
-100 TB both branches stream from a single pass when written together.
+(cleaning.py:386-388 et al.). Spark-first: ONE validity expression, two
+lazy filters off the same plan. Lazy means nothing is shared between
+ACTIONS: a count or write of each branch re-runs the whole upstream plan
+(for the transactions cleaner: 2 CSV scans and 4 exchanges over the two
+branches, none reused, in the pre-AQE plans). Only inside one plan — the
+branches unioned back together — does Spark reuse the shared exchange
+(1 scan, 1 ``ReusedExchange``). A caller that runs several actions over
+both branches should materialize them once, as ``pipelines/clean_file.py``
+does with one tagged, checkpointed union.
 """
 
 from __future__ import annotations

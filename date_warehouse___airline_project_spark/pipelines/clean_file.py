@@ -1,11 +1,18 @@
 """End-to-end ``clean_file`` driver — the reference's main ETL entry point
 (SURVEY §3.1: upload → extract → dispatch-by-type → clean → upsert staging
-+ quarantine CSV + run logs), collapsed into one Spark job.
++ quarantine CSV + run logs) in one process.
 
 What disappears vs the reference: the Node→Python child process, the 2 s
-PostgREST schema-cache sleep, and the per-call REST round-trips — the
-pipeline is one lazy plan from CSV scan to the two sinks; Catalyst owns
-planning.
+PostgREST schema-cache sleep, and the per-call REST round-trips.
+
+The cleaning plan (CSV scan, ffill repair, dedup windows) runs ONCE per
+call: the cleaner's two branches are unioned into one relation tagged
+``_q`` and materialized by an eager ``localCheckpoint``; the row counts
+(one ``groupBy("_q")``), the staging upsert and the quarantine export all
+read that checkpoint. Left lazy, every one of those actions re-ran the
+whole cleaning plan. ``rows_in`` stays a separate count of the CSV, so
+``rows_in == rows_clean + rows_quarantined`` is a real check. The run logs
+are written without Spark (``sinks.append_log``).
 
 Staging table names mirror server.js:33-39 (including the multi-source
 fact name for travel-agency transactions).
@@ -18,7 +25,9 @@ import time
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..operators.text_dedup import _release_blocks
 from ..sources.csv import read_csv_all_string
 from ..sources.sinks import append_log, safe_upsert, write_quarantine_csv
 from .cleaners import (
@@ -105,17 +114,34 @@ def clean_file(
     else:
         clean, quar = clean_airlinesales(df)
 
-    staging_table = STAGING_TABLES[file_type]
-    outcome = safe_upsert(
-        clean, os.path.join(staging_root, staging_table), UPSERT_KEYS[file_type]
+    # One materialized relation feeds every consumer below. Not persist():
+    # AQE does not coalesce a cached plan's partitions in this session
+    # (canChangeCachedPlanOutputPartitioning is off), so a 300-row upload
+    # would be cached as 32 partitions (one task each per read) where the
+    # checkpoint holds one.
+    tagged = (
+        clean.withColumn("_q", F.lit(False))
+        .unionByName(quar.withColumn("_q", F.lit(True)), allowMissingColumns=True)
+        .localCheckpoint(eager=True)
     )
-    rows_clean = clean.count()
-    log_step("LOAD_STAGING", "SUCCESS", outcome=outcome, rows=rows_clean)
+    try:
+        counts = dict(tagged.groupBy("_q").count().collect())
+        rows_clean, rows_quar = counts.get(False, 0), counts.get(True, 0)
 
-    quar_path = os.path.join(quarantine_dir, f"quarantined_{file_type}.csv")
-    write_quarantine_csv(quar, quar_path)
-    rows_quar = quar.count()
-    log_step("QUARANTINE_EXPORT", "SUCCESS", rows=rows_quar)
+        staging_table = STAGING_TABLES[file_type]
+        outcome = safe_upsert(
+            tagged.filter(~F.col("_q")).select(*clean.columns),
+            os.path.join(staging_root, staging_table),
+            UPSERT_KEYS[file_type],
+        )
+        log_step("LOAD_STAGING", "SUCCESS", outcome=outcome, rows=rows_clean)
+
+        quar_path = os.path.join(quarantine_dir, f"quarantined_{file_type}.csv")
+        # quar.columns: the column order is part of the CSV's bytes
+        write_quarantine_csv(tagged.filter(F.col("_q")).select(*quar.columns), quar_path)
+        log_step("QUARANTINE_EXPORT", "SUCCESS", rows=rows_quar)
+    finally:
+        _release_blocks(tagged)
 
     summary = {
         "status": "success",
@@ -130,7 +156,6 @@ def clean_file(
     }
     if log_root:
         append_log(
-            spark,
             os.path.join(log_root, "etl_file_logs"),
             [
                 {
@@ -142,5 +167,5 @@ def clean_file(
                 }
             ],
         )
-        append_log(spark, os.path.join(log_root, "etl_process_logs"), steps)
+        append_log(os.path.join(log_root, "etl_process_logs"), steps)
     return summary

@@ -43,6 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.scd2 import scd2_init, scd2_merge
 
 
+class SwapInError(RuntimeError):
+    """A swap-in failed after the live table was renamed aside, and the
+    backup could not be put back: the table path is missing."""
+
+
 class ParquetMergeTarget:
     """MERGE emulation over a parquet directory (see module docstring).
 
@@ -50,9 +55,12 @@ class ParquetMergeTarget:
     then the live dir is renamed aside and the temp renamed in — a crash
     can leave a brief reader-visible gap between the two renames, but
     never partial data, and the renamed-aside ``.old-*`` backup survives
-    any crash for manual recovery. TRUE reader-atomicity needs a
-    transaction log — that is exactly what the Delta target provides.
-    Single-writer by contract.
+    any crash for manual recovery. A swap that FAILS (raises) puts the
+    backup back before re-raising, so the live table is exactly what it
+    was; only when that restore also fails does ``SwapInError`` escape,
+    naming the backup. TRUE reader-atomicity needs a transaction log —
+    that is exactly what the Delta target provides. Single-writer by
+    contract.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -68,14 +76,27 @@ class ParquetMergeTarget:
     def _swap_in(self, df: DataFrame) -> None:
         run = uuid.uuid4().hex[:8]
         tmp = f"{self.path}.tmp-{run}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
+        try:
+            df.write.mode("overwrite").parquet(tmp)
+            if not os.path.exists(self.path):
+                os.rename(tmp, self.path)
+                return
             old = f"{self.path}.old-{run}"
             os.rename(self.path, old)  # atomic same-fs; data preserved
-            os.rename(tmp, self.path)
-            shutil.rmtree(old)  # only after the new state is live
-        else:
-            os.rename(tmp, self.path)
+            try:
+                os.rename(tmp, self.path)
+            except BaseException:
+                try:
+                    os.rename(old, self.path)
+                except OSError as restore:
+                    raise SwapInError(
+                        f"{self.path} is missing; its previous state is in {old}"
+                    ) from restore
+                raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        # only after the new state is live; a leftover backup is harmless
+        shutil.rmtree(old, ignore_errors=True)
 
     def upsert(self, df: DataFrame, key: Sequence[str]) -> str:
         key = list(key)

@@ -4,12 +4,18 @@
 (cleaning.py:771-779): nulls as empty strings, header always written even
 for zero rows.
 
-``safe_upsert`` reproduces the upsert→insert→skip fallback ladder
+``safe_upsert`` reproduces the upsert→insert fallback ladder
 (cleaning.py:165-199) against parquet paths (no Delta jars in this image;
-with Delta this is a single ``MERGE INTO``). Upsert = key-based anti-join
-merge: last write wins per key. The format-agnostic seam lives in
-``sources.merge_target`` (``make_merge_target`` → Delta when available,
-this parquet emulation otherwise); prefer it in new code.
+with Delta this is a single ``MERGE INTO``). The upsert itself is
+``sources.merge_target.ParquetMergeTarget.upsert`` — key-based anti-join
+merge, last write wins per key, tmp-write → backup-rename → swap — so
+there is one merge implementation; this module adds only the reference's
+insert fallback. New code that does not need the fallback should take
+the format-agnostic seam (``make_merge_target`` → Delta when available,
+the parquet emulation otherwise).
+
+``append_log`` writes its few rows with pyarrow on the driver: a log
+append is not worth a Spark job.
 """
 
 from __future__ import annotations
@@ -18,8 +24,12 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .merge_target import ParquetMergeTarget, SwapInError
 
 
 def write_quarantine_csv(df: DataFrame, path: str) -> None:
@@ -68,39 +78,60 @@ def write_quarantine_csv(df: DataFrame, path: str) -> None:
     shutil.rmtree(path + ".tmp")
 
 
-def append_log(spark: SparkSession, path: str, rows: list[dict]) -> None:
+# bigint and string: the Spark types ``spark.createDataFrame`` infers
+_LOG_TYPES = {int: pa.int64(), str: pa.string()}
+
+
+def append_log(path: str, rows: list[dict]) -> None:
     """Append-only log-table write (etl_file_logs / etl_process_logs /
-    pipeline_run_log shape, cleaning.py:88-121)."""
+    pipeline_run_log shape, cleaning.py:88-121): one parquet file per call.
+
+    The file carries the schema ``spark.createDataFrame(rows)`` infers —
+    columns in sorted key order, int → bigint, str → string — so it reads
+    back together with parts Spark wrote. A column with no value, with
+    values of two types, or of another type raises ``TypeError``. The
+    file is written under a hidden name (Spark's reader skips
+    ``.``-prefixed files) and renamed into place, so a reader never sees
+    a partial file."""
     if not rows:
         return
-    spark.createDataFrame(rows).write.mode("append").parquet(path)
+    columns = {}
+    for name in sorted({k for r in rows for k in r}):
+        values = [r.get(name) for r in rows]
+        kinds = {type(v) for v in values if v is not None}
+        if len(kinds) != 1 or next(iter(kinds)) not in _LOG_TYPES:
+            found = sorted(k.__name__ for k in kinds) or ["only None"]
+            raise TypeError(f"log column {name!r} cannot be typed from {found}")
+        columns[name] = pa.array(values, type=_LOG_TYPES[kinds.pop()])
+    os.makedirs(path, exist_ok=True)
+    part = f"part-{uuid.uuid4().hex}-c000.snappy.parquet"
+    tmp = os.path.join(path, f".{part}")
+    try:
+        pq.write_table(pa.table(columns), tmp, compression="snappy")
+        os.rename(tmp, os.path.join(path, part))
+    finally:
+        if os.path.exists(tmp):  # a failed write leaves no partial file
+            os.remove(tmp)
 
 
 def safe_upsert(df: DataFrame, path: str, key: list[str]) -> str:
     """Upsert df into the parquet table at ``path`` on ``key``.
 
     Returns the outcome tag ('upserted' | 'inserted') mirroring the
-    reference's fallback ladder. New data wins on key collision.
+    reference's fallback ladder. New data wins on key collision. When the
+    merge fails it falls back to appending the batch — but only if the
+    failure left the live table as it was (``ParquetMergeTarget`` puts
+    its backup back before re-raising). ``SwapInError`` means the table
+    could not be restored, and an append would leave a table holding
+    only this batch, so it propagates.
     """
-    spark = df.sparkSession
-    # per-key uniqueness holds within the batch too (kept row arbitrary)
-    df = df.dropDuplicates(list(key))
-    if not os.path.exists(path):
-        df.write.mode("overwrite").parquet(path)
-        return "inserted"
     try:
-        existing = spark.read.parquet(path)
-        merged = existing.join(df.select(key), key, "left_anti").unionByName(
-            df, allowMissingColumns=True
-        )
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path)
-        shutil.move(tmp, path)
-        return "upserted"
+        return ParquetMergeTarget(df.sparkSession, path).upsert(df, key)
+    except SwapInError:
+        raise
     except Exception:
         # fallback: plain append (reference's insert-on-upsert-failure)
-        df.write.mode("append").parquet(path)
+        df.dropDuplicates(list(key)).write.mode("append").parquet(path)
         return "inserted"
 
 

@@ -148,3 +148,161 @@ def test_quarantine_csv_byte_parity_with_reference(spark, tmp_path):
     ref_empty = tmp_path / "ref_empty.csv"
     pd.DataFrame().to_csv(ref_empty, index=False)
     assert empty_path.read_bytes() == ref_empty.read_bytes() == b"\n"
+
+
+# --- one-pass counts: edge inputs -------------------------------------------
+
+
+def test_all_clean_upload_writes_the_empty_quarantine(spark, dirs):
+    s = clean_file(spark, _write(dirs, "al.csv", AIRLINES_CSV), "airlines",
+                   str(dirs / "staging"), str(dirs / "quarantine"))
+    assert (s["rows_in"], s["rows_clean"], s["rows_quarantined"]) == (3, 3, 0)
+    assert (dirs / "quarantine" / "quarantined_airlines.csv").read_bytes() == b"\n"
+
+
+def test_all_quarantined_upload_stages_no_row(spark, dirs):
+    bad = "AirlineKey,AirlineName,Alliance\nA,One,oneworld\nTOOLONG,Two,oneworld\n"
+    s = clean_file(spark, _write(dirs, "al.csv", bad), "airlines",
+                   str(dirs / "staging"), str(dirs / "quarantine"))
+    assert (s["rows_in"], s["rows_clean"], s["rows_quarantined"]) == (2, 0, 2)
+    assert spark.read.parquet(str(dirs / "staging" / "staging_airlines")).count() == 0
+    quar = (dirs / "quarantine" / "quarantined_airlines.csv").read_text(encoding="utf-8-sig")
+    assert quar.count("invalid_airlinekey") == 2
+
+
+def test_header_only_upload(spark, dirs):
+    s = clean_file(spark, _write(dirs, "al.csv", "AirlineKey,AirlineName,Alliance\n"),
+                   "airlines", str(dirs / "staging"), str(dirs / "quarantine"),
+                   str(dirs / "logs"))
+    assert (s["rows_in"], s["rows_clean"], s["rows_quarantined"]) == (0, 0, 0)
+    assert (dirs / "quarantine" / "quarantined_airlines.csv").read_bytes() == b"\n"
+
+
+# --- storage released ---------------------------------------------------------
+
+
+def test_clean_file_releases_its_blocks(spark, dirs, monkeypatch):
+    import date_warehouse___airline_project_spark.pipelines.clean_file as cf
+
+    def persistent():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    path = _write(dirs, "sales.csv", TRANSACTIONS_CSV)
+    args = ("transactions", str(dirs / "staging"), str(dirs / "quarantine"))
+    before = persistent()
+    clean_file(spark, path, *args, str(dirs / "logs"))
+    assert persistent() == before
+
+    def failing_upsert(*a, **kw):
+        raise RuntimeError("injected upsert failure")
+
+    monkeypatch.setattr(cf, "safe_upsert", failing_upsert)
+    with pytest.raises(RuntimeError, match="injected"):
+        clean_file(spark, path, *args)
+    assert persistent() == before
+
+
+# --- safe_upsert failure paths -----------------------------------------------
+
+
+def _fail_swap_onto(monkeypatch, path, also_restore=False):
+    """Make moving a directory onto ``path`` fail: the new state from its
+    ``.tmp-*`` dir and, with ``also_restore``, the backup from ``.old-*``."""
+    import os
+    import shutil
+
+    real_rename = os.rename
+    blocked = (".tmp-", ".old-") if also_restore else (".tmp-",)
+
+    def rename(src, dst, *a, **kw):
+        if str(dst) == path and any(b in os.path.basename(str(src)) for b in blocked):
+            raise OSError("injected rename failure")
+        return real_rename(src, dst, *a, **kw)
+
+    def move(src, dst, *a, **kw):  # no copy fallback: a blocked move fails
+        rename(src, dst)
+        return dst
+
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(shutil, "move", move)
+
+
+def _table(spark, tmp_path, n=10):
+    from date_warehouse___airline_project_spark.sources.sinks import safe_upsert
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(n)], "k long, v string")
+    assert safe_upsert(df, path, ["k"]) == "inserted"
+    return path
+
+
+def test_safe_upsert_failed_swap_keeps_the_table(spark, tmp_path, monkeypatch):
+    import os
+
+    from date_warehouse___airline_project_spark.sources.sinks import safe_upsert
+
+    path = _table(spark, tmp_path)
+    batch = spark.createDataFrame([(9, "new9"), (10, "new10")], "k long, v string")
+    _fail_swap_onto(monkeypatch, path)
+    # the merge cannot be swapped in; the live table is untouched, so the
+    # reference's insert fallback appends the batch to it
+    assert safe_upsert(batch, path, ["k"]) == "inserted"
+    monkeypatch.undo()
+    rows = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert rows == sorted([(i, f"v{i}") for i in range(10)] + [(9, "new9"), (10, "new10")])
+    assert os.listdir(tmp_path) == ["t"]  # no orphaned .tmp-* or .old-* dir
+
+
+def test_safe_upsert_unrestorable_swap_raises(spark, tmp_path, monkeypatch):
+    import os
+
+    from date_warehouse___airline_project_spark.sources.merge_target import SwapInError
+    from date_warehouse___airline_project_spark.sources.sinks import safe_upsert
+
+    path = _table(spark, tmp_path)
+    batch = spark.createDataFrame([(9, "new9"), (10, "new10")], "k long, v string")
+    _fail_swap_onto(monkeypatch, path, also_restore=True)
+    # no fallback append: it would leave a table holding just the batch
+    with pytest.raises(SwapInError, match=r"t\.old-"):
+        safe_upsert(batch, path, ["k"])
+    monkeypatch.undo()
+    assert not os.path.exists(path)
+    (backup,) = os.listdir(tmp_path)
+    assert backup.startswith("t.old-")
+    assert spark.read.parquet(str(tmp_path / backup)).count() == 10
+
+
+# --- append_log -------------------------------------------------------------------
+
+
+def test_append_log_reads_like_a_spark_written_log(spark, tmp_path):
+    import os
+
+    from date_warehouse___airline_project_spark.sources.sinks import append_log
+
+    def rows(tag):
+        return [{"step_name": f"{tag}{i}", "status": "SUCCESS", "rows": i} for i in range(3)]
+
+    path = str(tmp_path / "etl_process_logs")
+    # a log directory that already holds a part written by Spark
+    spark.createDataFrame(rows("spark")).write.mode("append").parquet(path)
+    spark_schema = spark.read.parquet(path).schema
+    spark_files = set(os.listdir(path))
+
+    append_log(path, rows("a"))
+    append_log(path, rows("b"))
+    new_files = set(os.listdir(path)) - spark_files
+    assert len(new_files) == 2  # one file per call
+    assert not [f for f in new_files if f.startswith((".", "_"))]  # no temp left behind
+
+    spark_schema_only = spark.read.parquet(*(os.path.join(path, f) for f in new_files)).schema
+    assert spark_schema_only == spark_schema
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    want = sorted(tuple(r[k] for k in sorted(r)) for t in ("spark", "a", "b") for r in rows(t))
+    assert got == want
+
+    with pytest.raises(TypeError):
+        append_log(path, [{"status": None}])
+    with pytest.raises(TypeError):
+        append_log(path, [{"rows": 1}, {"rows": "one"}])
+    assert set(os.listdir(path)) - spark_files == new_files

@@ -6,8 +6,10 @@ cd "$(dirname "$0")/.."
 python -m pytest tests/ -q
 # The benchmark reads package internals (similarity._KMEANS_MEMO,
 # text_dedup._DERIVED_CACHE, set_memo_instrumentation,
-# drain_memo_timings); its fast tests catch a rename before a benchmark
-# run would report it as failed operations. They never call bench.py.
+# drain_memo_timings) and wraps four names on the clean_file module
+# (safe_upsert, write_quarantine_csv, append_log, read_csv_all_string);
+# its fast tests catch a rename before a benchmark run would report it
+# as failed operations. They never call bench.py.
 python -m pytest perfbench/test_perfbench.py -q
 python tools/oracle_check.py /root/testdata/sf0.001
 python tools/oracle_check.py /root/testdata/sf0.01
