@@ -15,12 +15,12 @@ Certification bookkeeping is MECHANICAL (no hand-maintained lists):
     the committed tools/plan_hashes.json each round), so the old row
     certifies behavior that no longer exists and they re-enter the window.
 
-The driver hash-checks the FIRST 50 entries of ``queries()`` each round,
-so ordering is: re-certifications first, then never-certified queries in
-registry order, then the certified remainder ORDERED OLDEST-GREEN-FIRST
-(still registered, still bench'd). The oldest-first tail bounds
-certification age: the window's spare slots re-oracle the stalest greens
-every round (a query whose transitive source never changes would
+The driver hash-checks the FIRST ``DRIVER_WINDOW`` (50) entries of
+``queries()`` each round, so ordering is: re-certifications first, then
+never-certified queries in registry order, then the certified remainder
+ORDERED OLDEST-GREEN-FIRST (still registered, still bench'd). The
+oldest-first tail bounds certification age: the window's spare slots
+re-oracle the stalest greens every round (a query whose transitive source never changes would
 otherwise stay green forever on one ancient row — an engine-version bump
 could invalidate all of them with no signal), and a query re-certified
 this round moves to the back of the rotation automatically because its
@@ -42,6 +42,8 @@ plans.load_all()
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
+# The driver hash-checks this many leading entries of ``queries()``.
+DRIVER_WINDOW = 50
 
 
 def _round_num(path: str) -> int:

@@ -26,10 +26,16 @@ Ties everywhere break on the lower id, making top-k cuts stable.
 
 Kernels that score against a bounded relation (a codebook or a probe
 batch) — ``assign_to_centroids``, ``cosine_cross_scores``,
-``centroid_distance_profile`` — have ONE lane each: an Arrow/NumPy
-``mapInPandas`` kernel that folds dimensions sequentially, so its doubles
-equal the DuckDB oracle's ``list_dot_product`` bit for bit.
-``pca_moment_cells`` still carries a relational ``impl="sql"`` twin.
+``centroid_distance_profile`` — and the ``pca_moment_cells`` moment fold
+have ONE lane each: an Arrow/NumPy ``mapInPandas`` kernel that folds
+dimensions sequentially, so its doubles equal the DuckDB oracle's
+``list_dot_product`` bit for bit.
+
+``cosine_cross_scores`` is the one exact corpus x probe-set cosine grid:
+``emb_knn_join``, ``emb_knn_label_audit``, ``emb_dim_truncation_overlap``
+(full and 16-dim slices) and ``emb_ivf_nprobe_autotune``'s ground truth
+score through it, and each cuts its per-probe top-k with ``salted_topk``,
+as does the ``ivfpq_knn_join`` shortlist.
 """
 
 from __future__ import annotations
@@ -335,6 +341,32 @@ def cosine_cross_scores(
             yield pd.DataFrame(out)
 
     return flagged.mapInPandas(score, out_schema)
+
+
+def salted_topk(
+    scored: DataFrame,
+    k: int,
+    score_col: str,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Per-``qid`` top-``k`` rows of ``scored`` by (score desc, id asc);
+    null scores rank last. Two phases: a window over (qid, salt) with
+    salt = pmod(hash(id), 32) keeps each slice's top-k, then a window
+    over qid alone ranks the ≤ 32 x k survivors. The candidate-scale
+    shuffle is therefore never partitioned by qid alone, so a small probe
+    set cannot skew the reducers at 100 TB. Columns of ``scored`` pass
+    through unchanged."""
+    order = (F.desc(score_col), F.asc(id_col))
+    w1 = W.partitionBy("qid", "_salt").orderBy(*order)
+    w2 = W.partitionBy("qid").orderBy(*order)
+    return (
+        scored.withColumn("_salt", F.pmod(F.hash(id_col), F.lit(32)))
+        .withColumn("_rn", F.row_number().over(w1))
+        .filter(F.col("_rn") <= k)
+        .withColumn("_rn2", F.row_number().over(w2))
+        .filter(F.col("_rn2") <= k)
+        .drop("_salt", "_rn", "_rn2")
+    )
 
 
 from collections import OrderedDict
@@ -1247,10 +1279,9 @@ def ivfpq_knn_join(
          one broadcast (qid, g, code) weight table — same per-g max-when
          pivot and fixed-order sum as the single-query path, so scores
          are bit-equal to it;
-      4. per-query top-``rerank`` shortlists come from the salted
-         two-phase window (the ``emb_knn_join`` discipline: the
-         candidate-scale shuffle is partitioned by (qid, salt), never by
-         qid alone, so a small query set cannot skew reducers at 100 TB);
+      4. per-query top-``rerank`` shortlists come from ``salted_topk``
+         (the candidate-scale shuffle is partitioned by (qid, salt), never
+         by qid alone, so a small query set cannot skew reducers);
       5. exact cosine re-ranks only the Q x ``rerank`` shortlist rows
          (broadcast join back to the raw vectors).
     """
@@ -1324,16 +1355,7 @@ def ivfpq_knn_join(
     for i in range(1, n_sub):
         approx = approx + F.col(f"w{i}")
     scored = appx.select("qid", id_col, *payload, approx.alias("approx_dot"))
-    w1 = W.partitionBy("qid", "_salt").orderBy(F.desc("approx_dot"), F.asc(id_col))
-    w2 = W.partitionBy("qid").orderBy(F.desc("approx_dot"), F.asc(id_col))
-    shortlist = (
-        scored.withColumn("_salt", F.pmod(F.hash(id_col), F.lit(32)))
-        .withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= rerank)
-        .withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= rerank)
-        .drop("_salt", "_rn", "_rn2")
-    )
+    shortlist = salted_topk(scored, rerank, "approx_dot", id_col)
     wk = W.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc(id_col))
     return (
         F.broadcast(shortlist)
@@ -1570,58 +1592,60 @@ def pca_moment_cells(
     vec_col: str = "embedding",
     d: int = 64,
     scale: float = 1e8,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Scaled-integer second-moment cells ``(i, j, s2)`` of a vector column:
-    s2(i, j) = SUM over rows of round_half_away(x_i * x_j * scale) as BIGINT.
+    s2(i, j) = SUM over rows of round_half_away(x_i * x_j * scale) as
+    BIGINT, cell for cell DuckDB's ``SUM(ROUND(x_i * x_j * scale))``.
 
     Per-term integer scaling makes the corpus reduce EXACT under any
-    partitioning (plain long addition), which is what lets the Arrow lane
-    below be bit-identical to the relational fold — there is no float
-    accumulation to order. |x| < 1 and scale 1e8 keep the sum int64-safe
-    beyond 1e9 rows; switch to DECIMAL sums past that.
+    partitioning (plain long addition): there is no float accumulation to
+    order. |x| < 1 and scale 1e8 keep the sum int64-safe beyond 1e9 rows;
+    switch to DECIMAL sums past that.
 
-    ``impl="sql"`` is the relational fold (nested transform -> posexplode
-    -> groupBy); ``impl="arrow"`` computes per-batch outer products in
-    NumPy via mapInPandas and emits per-slice integer partials — ~10x on
-    the interpreted higher-order-lambda path, certified equal by
-    tests/test_operators.py::test_pca_moment_lane_equivalence.
+    Arrow kernel: per-slice NumPy outer products, rounded half away from
+    zero EXACTLY like F.round/DuckDB ROUND (the fraction is compared
+    exactly — no ``floor(x + 0.5)`` absorption), summed as int64 partials,
+    one (i, j, partial) block per task.
+
+    Nulls follow SQL SUM: a product with a null factor is skipped, and a
+    cell with no non-null product is null. Null elements are flagged
+    JVM-side (Arrow surfaces them as NaN) as a per-element mask on the
+    rows that hold one; a null vector contributes no product.
+    Equality with DuckDB is pinned by
+    tests/test_operators.py::test_pca_moment_cells_matches_duckdb.
     """
-    if impl == "arrow":
-        return _pca_moment_cells_arrow(emb, vec_col, d, scale)
-    col = F.col(vec_col).cast("array<double>")
-    prods = F.flatten(F.transform(col, lambda x: F.transform(col, lambda y: x * y)))
-    return (
-        emb.select(F.posexplode(prods).alias("idx", "p"))
-        .groupBy(
-            (F.col("idx") / d).cast("int").alias("i"),
-            (F.col("idx") % d).cast("int").alias("j"),
-        )
-        .agg(
-            F.sum(F.round(F.col("p") * scale, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("s2")
-        )
-    )
-
-
-def _pca_moment_cells_arrow(
-    emb: DataFrame, vec_col: str, d: int, scale: float
-) -> DataFrame:
-    """Arrow lane for ``pca_moment_cells``: per-slice NumPy outer products,
-    rounded half-away-from-zero EXACTLY like F.round/duckdb ROUND (fraction
-    compared exactly — no ``floor(x + 0.5)`` absorption bug), summed as
-    int64 partials; one (i, j, partial) block per input batch slice."""
     import numpy as np
     import pandas as pd
 
+    v = F.col(vec_col).cast("array<double>")
+    has_null = v.isNotNull() & (F.size(F.array_compact(v)) < F.size(v))
+    flagged = emb.select(
+        v.alias(vec_col),
+        F.when(has_null, F.transform(v, lambda x: x.isNull())).alias("_nulls"),
+    )
+
     def fold(batches):
         acc = np.zeros((d, d), dtype=np.int64)
+        hit = np.zeros((d, d), dtype=bool)  # cell has a non-null product
         seen = False
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            seen = True
+            present = pdf[vec_col].notna().to_numpy()
+            if not present.any():
+                continue
+            M = np.stack(pdf.loc[present, vec_col].to_numpy()).astype(np.float64)
+            masks = pdf.loc[present, "_nulls"].to_numpy()
+            masked = [r for r, m in enumerate(masks) if m is not None]
+            if masked:
+                ok = np.ones(M.shape, dtype=bool)
+                for r in masked:
+                    ok[r] = ~np.asarray(masks[r], dtype=bool)
+                M[~ok] = 0.0
+                hit |= (ok.T.astype(np.float64) @ ok) > 0
+            else:
+                hit[:] = True
             for lo in range(0, M.shape[0], 512):
                 sl = M[lo : lo + 512]
                 P = np.einsum("ri,rj->rij", sl, sl) * scale
@@ -1629,20 +1653,19 @@ def _pca_moment_cells_arrow(
                 fl = np.floor(a)
                 r = (fl + (a - fl >= 0.5)) * np.sign(P)
                 acc += r.astype(np.int64).sum(axis=0)
-                seen = True
         if seen:
             ii, jj = np.meshgrid(np.arange(d), np.arange(d), indexing="ij")
+            p = pd.array(acc.ravel(), dtype="Int64")
+            p[~hit.ravel()] = pd.NA
             yield pd.DataFrame(
                 {
                     "i": ii.ravel().astype("int32"),
                     "j": jj.ravel().astype("int32"),
-                    "p": acc.ravel(),
+                    "p": p,
                 }
             )
 
-    partials = emb.select(F.col(vec_col).cast("array<double>").alias(vec_col)).mapInPandas(
-        fold, schema="i int, j int, p long"
-    )
+    partials = flagged.mapInPandas(fold, schema="i int, j int, p long")
     return partials.groupBy("i", "j").agg(F.sum("p").cast("bigint").alias("s2"))
 
 

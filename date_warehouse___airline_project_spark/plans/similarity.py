@@ -13,9 +13,10 @@ as a belt-and-braces measure.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.similarity import cosine, cosine_cross_scores, dot, salted_topk
 from ..session import session_tmpdir
 from ..sources.catalog import load_table
 from .registry import query
@@ -24,19 +25,6 @@ from .registry import query
 # the on-disk analogue of operators.similarity._KMEANS_MEMO. See
 # emb_ivf_indexed_topk for why the build is amortized out of the search.
 _IVF_INDEX_MEMO: dict[tuple, str] = {}
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential double-precision dot product of two array columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 @query(
@@ -72,7 +60,7 @@ def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared oracle fragment: cosine of two DOUBLE[] lists (sequential fold —
-# bit-identical to the Spark aggregate fold above).
+# bit-identical to the Spark ``cosine`` fold).
 def _cos_sql(a: str, b: str) -> str:
     return (
         f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
@@ -1109,7 +1097,7 @@ def _round6_half_up(x: float) -> float:
 
 
 def _cos_py(a: list[float], b: list[float]) -> float:
-    """Bit-exact replica of the ``cosine`` Column above: sequential
+    """Bit-exact replica of the ``cosine`` Column: sequential
     left-fold float64 dot products (same IEEE op order as F.aggregate).
     A zero-norm vector divides by 0.0, which Spark's double division
     yields NaN for — Python float division raises, so guard it to match
@@ -1388,59 +1376,43 @@ _KNN_JOIN_ORACLE = f"""
 """
 
 
+def _probe_set(e: DataFrame, mod: int) -> DataFrame:
+    """``(qid, qv, label)`` of the first 100 vectors with vec_id % mod == 0.
+    CAPPED at 100 ids: a probe modulus alone grows with the corpus and
+    the grid goes quadratic (measured, SCALING.md); the cap is a no-op at
+    certification SFs."""
+    return (
+        e.filter(F.col("vec_id") % mod == 0)
+        .orderBy("vec_id")
+        .limit(100)
+        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"), "label")
+    )
+
+
+def _exact_topk(data: DataFrame, probes: DataFrame, k: int, carry: tuple = ()) -> DataFrame:
+    """Each probe's ``k`` exact-cosine nearest corpus rows, itself excluded:
+    (vec_id, *carry, qid, _cs) with ``_cs`` unrounded."""
+    scored = cosine_cross_scores(data, probes, carry=carry).filter(
+        F.col("vec_id") != F.col("qid")
+    )
+    return salted_topk(scored, k, "_cs")
+
+
 @query(
     "emb_knn_join",
     oracle=_KNN_JOIN_ORACLE,
     doc="Batch k-NN join: exact cosine top-3 for every query in a "
     "broadcast query set (vec_id % 100 == 0) in ONE corpus pass. "
-    "Two-phase top-k: a salted window (qid, salt) takes per-slice "
-    "top-3 with balanced partitions, then a final window over the "
-    "Q x salt x 3 survivors — the corpus-scale shuffle is never "
-    "partitioned by qid alone, so a small query set cannot skew "
-    "reducers at 100 TB. Scoring is map-side (query set broadcast).",
+    "The corpus x probe-set grid is the Arrow cosine_cross_scores "
+    "kernel (each embedding shipped once, dims folded bit-exactly "
+    "like the oracle); salted_topk cuts the top-3 per query in two "
+    "phases, so the corpus-scale shuffle is never partitioned by qid "
+    "alone and a small query set cannot skew reducers at 100 TB.",
 )
 def emb_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = 3
     e = load_table(spark, sf_dir, "embeddings")
-    # probe set CAPPED at the first 100 ids: a probe modulus alone grows
-    # with the corpus and the grid goes quadratic (measured, SCALING.md);
-    # the cap is a no-op at certification SFs
-    q = (
-        e.filter(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(100)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("_qnorm"),
-        )
-    )
-    # hoisted norms: one dot fold per (row, probe) pair; cos = dp/(|e||q|)
-    # in the oracle's exact product-then-divide order
-    en = e.withColumn(
-        "_enorm", F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-    )
-    scored = (
-        en.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            (
-                dot(F.col("embedding"), F.col("qv"))
-                / (F.col("_enorm") * F.col("_qnorm"))
-            ).alias("_cs"),
-            F.pmod(F.hash("vec_id"), F.lit(32)).alias("_salt"),
-        )
-    )
-    w1 = W.partitionBy("qid", "_salt").orderBy(F.desc("_cs"), F.asc("vec_id"))
-    w2 = W.partitionBy("qid").orderBy(F.desc("_cs"), F.asc("vec_id"))
     return (
-        scored.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= k)
-        .withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= k)
+        _exact_topk(e, _probe_set(e, 100), 3, carry=("label",))
         .select("qid", "vec_id", "label", F.round("_cs", 6).alias("cos_sim"))
         .orderBy("qid", F.desc("cos_sim"), "vec_id")
     )
@@ -1497,68 +1469,20 @@ _TRUNC_ORACLE = f"""
     f"the FULL 64d cosine top-10 and the top-10 using only the first "
     f"{_TRUNC_DIMS} dims — the measurement that decides whether a "
     f"truncated index is good enough before switching storage to it. "
-    f"Both rankings come from the same broadcast query-set pass "
-    f"(slice() is computed inline, no second corpus materialization); "
-    f"output is one row per query regardless of corpus size.",
+    f"Two cosine_cross_scores grids against the same probe set, one on "
+    f"the full vectors and one on slice(1, {_TRUNC_DIMS}) of both sides, "
+    f"each cut by salted_topk; output is one row per query regardless "
+    f"of corpus size.",
 )
 def emb_dim_truncation_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    # probe set CAPPED at the first 100 ids: a probe modulus alone grows
-    # with the corpus and the grid goes quadratic (measured, SCALING.md);
-    # the cap is a no-op at certification SFs
-    q = (
-        e.filter(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(100)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-    )
-    # hoisted norms for BOTH metrics (full and first-_TRUNC_DIMS slice):
-    # two dot folds per pair instead of six, same product-then-divide
-    # cosine as the oracle
-    qn = q.select(
-        "qid",
-        "qv",
-        F.sqrt(dot(F.col("qv"), F.col("qv"))).alias("_qnorm"),
-        F.slice(F.col("qv"), 1, _TRUNC_DIMS).alias("_qvt"),
-    ).withColumn("_qnorm_t", F.sqrt(dot(F.col("_qvt"), F.col("_qvt"))))
-    en = e.withColumn(
-        "_enorm", F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-    ).withColumn(
-        "_et", F.slice(F.col("embedding"), 1, _TRUNC_DIMS)
-    ).withColumn("_enorm_t", F.sqrt(dot(F.col("_et"), F.col("_et"))))
-    scored = (
-        en.crossJoin(F.broadcast(qn))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (
-                dot(F.col("embedding"), F.col("qv"))
-                / (F.col("_enorm") * F.col("_qnorm"))
-            ).alias("_cs_full"),
-            (
-                dot(F.col("_et"), F.col("_qvt"))
-                / (F.col("_enorm_t") * F.col("_qnorm_t"))
-            ).alias("_cs_trunc"),
-            F.pmod(F.hash("vec_id"), F.lit(32)).alias("_salt"),
-        )
-    )
-
-    def top10(score_col: str) -> DataFrame:
-        # salted two-phase top-k (same scale discipline as emb_knn_join):
-        # the corpus-scale window partitions by (qid, salt), never qid alone
-        w1 = W.partitionBy("qid", "_salt").orderBy(F.desc(score_col), F.asc("vec_id"))
-        w2 = W.partitionBy("qid").orderBy(F.desc(score_col), F.asc("vec_id"))
-        return (
-            scored.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") <= 10)
-            .withColumn("_rn2", F.row_number().over(w2))
-            .filter(F.col("_rn2") <= 10)
-            .select("qid", "vec_id")
-        )
-
-    full_top = top10("_cs_full")
-    trunc_top = top10("_cs_trunc").withColumn("_hit", F.lit(1))
+    q = _probe_set(e, 100)
+    full_top = _exact_topk(e, q, 10).select("qid", "vec_id")
+    trunc_top = _exact_topk(
+        e.select("vec_id", F.slice("embedding", 1, _TRUNC_DIMS).alias("embedding")),
+        q.select("qid", F.slice("qv", 1, _TRUNC_DIMS).alias("qv")),
+        10,
+    ).select("qid", "vec_id", F.lit(1).alias("_hit"))
     return (
         full_top.join(trunc_top, ["qid", "vec_id"], "left")
         .groupBy("qid")
@@ -1764,8 +1688,7 @@ _PCA_ORACLE = f"""
     doc=f"Top principal component of the embedding corpus: ONE moment pass "
     f"(scaled-integer sums of x_i*x_j — {_PCA_D}x{_PCA_D} mergeable "
     f"cells, EXACT under any partitioning, via the Arrow outer-product "
-    f"lane operators/similarity.py::pca_moment_cells whose integer "
-    f"partials are bit-identical to the relational fold), covariance "
+    f"kernel operators/similarity.py::pca_moment_cells), covariance "
     f"closed-form from the sums, then {_PCA_ITERS} power-iteration steps "
     f"on the collected {_PCA_D}x{_PCA_D} matrix (a documented bounded "
     f"driver fold, like the Lloyd codebook) with the eigvector re-"
@@ -1781,13 +1704,13 @@ def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = F.col("embedding").cast("array<double>")
     # scaled-long moment sums (operators/similarity.py::pca_moment_cells):
     # round(term * 1e8) summed as BIGINT — exact integer merge under any
-    # partitioning, which is what makes the Arrow/NumPy outer-product lane
-    # bit-identical to the relational fold (no float accumulation order).
-    # |x| < 1 here, so the sum stays int64-safe far beyond 1e9 rows.
+    # partitioning, so the cells equal the oracle's (no float
+    # accumulation order). |x| < 1 here, so the sum stays int64-safe far
+    # beyond 1e9 rows.
     from ..operators.similarity import pca_moment_cells
 
     cells = (
-        pca_moment_cells(e, "embedding", d=d, scale=1e8, impl="arrow")
+        pca_moment_cells(e, "embedding", d=d, scale=1e8)
         # materialize the 4096-cell moment relation ONCE: the driver fold
         # below collects it and the returned plan re-reads the same
         # checkpoint instead of re-running the d^2-per-row corpus pass
@@ -1897,53 +1820,16 @@ _KNN_AUDIT_ORACLE = f"""
     "the majority label of its 10 exact-cosine nearest neighbors "
     "(self excluded, ties to the smaller label) vs its own label — "
     "rows their neighborhood outvotes are the mislabel candidates a "
-    "labeled corpus gets cleaned on. Same salted two-phase top-k as "
-    "emb_knn_join (corpus shuffle partitioned by (qid, salt), never "
-    "qid alone), then a votes rollup bounded by probes x labels.",
+    "labeled corpus gets cleaned on. Same cosine_cross_scores grid and "
+    "salted_topk cut as emb_knn_join, the probe's own label broadcast-"
+    "joined back onto its neighbors, then a votes rollup bounded by "
+    "probes x labels.",
 )
 def emb_knn_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = 10
     e = load_table(spark, sf_dir, "embeddings")
-    # probe set capped at the first 100 ids (see emb_knn_join) — bounded
-    # audit cost at any corpus size, no-op at certification SFs
-    q = (
-        e.filter(F.col("vec_id") % 50 == 0)
-        .orderBy("vec_id")
-        .limit(100)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            F.col("label").alias("true_label"),
-            F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("_qnorm"),
-        )
-    )
-    # hoisted norms: one dot fold per (row, probe) pair; cosine =
-    # dot/(|e||q|) in the oracle's exact product-then-divide order
-    en = e.withColumn(
-        "_enorm", F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-    )
-    scored = (
-        en.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "true_label",
-            "vec_id",
-            "label",
-            (
-                dot(F.col("embedding"), F.col("qv"))
-                / (F.col("_enorm") * F.col("_qnorm"))
-            ).alias("_cs"),
-            F.pmod(F.hash("vec_id"), F.lit(32)).alias("_salt"),
-        )
-    )
-    w1 = W.partitionBy("qid", "_salt").orderBy(F.desc("_cs"), F.asc("vec_id"))
-    w2 = W.partitionBy("qid").orderBy(F.desc("_cs"), F.asc("vec_id"))
-    nn = (
-        scored.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= k)
-        .withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= k)
+    q = _probe_set(e, 50)
+    nn = _exact_topk(e, q, 10, carry=("label",)).join(
+        F.broadcast(q.select("qid", F.col("label").alias("true_label"))), "qid"
     )
     votes = nn.groupBy(
         "qid", "true_label", F.col("label").alias("predicted_label")
@@ -2424,33 +2310,12 @@ def emb_ivf_nprobe_autotune(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # ground truth: one exact corpus x batch pass, salted two-phase top-10
-    # (the emb_knn_join discipline — the corpus-scale shuffle is never
-    # keyed by qid alone). r12: the corpus x batch cosine grid runs
-    # through the bit-exact Arrow lane (cosine_cross_scores) instead of
-    # the interpreted higher-order fold — guide §4.2; each embedding
-    # ships into the kernel once instead of being crossJoin-duplicated
-    # per query.
-    from ..operators.similarity import cosine_cross_scores
-
     grid = (
         cosine_cross_scores(e.select("vec_id", "embedding"), qs)
         .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.round(F.col("_cs"), 6).alias("cs"),
-            F.pmod(F.hash("vec_id"), F.lit(32)).alias("_salt"),
-        )
+        .select("qid", "vec_id", F.round(F.col("_cs"), 6).alias("cs"))
     )
-    w1 = W.partitionBy("qid", "_salt").orderBy(F.desc("cs"), F.asc("vec_id"))
-    w2 = W.partitionBy("qid").orderBy(F.desc("cs"), F.asc("vec_id"))
-    truth = (
-        grid.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= 10)
-        .withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= 10)
-        .select("qid", "vec_id")
-    )
+    truth = salted_topk(grid, 10, "cs").select("qid", "vec_id")
     # ONE candidate pass for the whole level grid (r11, optimization
     # guide §2.4): the per-level loop re-evaluated the cand subtree —
     # arrow centroid assignment over the corpus included — once per

@@ -389,6 +389,126 @@ def test_cosine_cross_scores_null_vectors_and_query_sets(spark):
     }
 
 
+def test_salted_topk_matches_duckdb_qualify(spark):
+    # salted_topk must equal a plain per-qid ROW_NUMBER cut however the
+    # ids fall into salts: exact ties straddling the k-th place across
+    # salts (qid 1), every candidate in ONE salt (qid 2), fewer candidates
+    # than k (qid 3), and null scores, which rank last (qid 4).
+    import duckdb
+
+    from date_warehouse___airline_project_spark.operators.similarity import (
+        salted_topk,
+    )
+
+    salt = {
+        r.id: r.s
+        for r in spark.range(400)
+        .select("id", F.pmod(F.hash("id"), F.lit(32)).alias("s"))
+        .collect()
+    }
+    by_salt: dict[int, list[int]] = {}
+    for i, s_ in sorted(salt.items()):
+        by_salt.setdefault(s_, []).append(i)
+    spread = [ids[0] for ids in by_salt.values()][:5]  # five distinct salts
+    one_salt = next(ids for ids in by_salt.values() if len(ids) >= 5)[:5]
+    assert len({salt[i] for i in spread}) == 5
+    assert len({salt[i] for i in one_salt}) == 1
+    rows = (
+        [(1, i, s_) for i, s_ in zip(sorted(spread), [0.5, 0.9, 0.5, 0.5, 0.1])]
+        + [(2, i, s_) for i, s_ in zip(one_salt, [0.3, 0.3, 0.2, 0.8, 0.3])]
+        + [(3, 7, 0.4), (3, 8, 0.4)]
+        + [(4, 21, None), (4, 20, 0.4), (4, 19, None), (4, 22, 0.1)]
+    )
+    df = spark.createDataFrame(rows, "qid long, id long, s double")
+    k = 3
+    got = sorted(
+        tuple(r)
+        for r in salted_topk(df, k, "s", id_col="id").select("qid", "id", "s").collect()
+    )
+    con = duckdb.connect()
+    con.register("t", df.toArrow())
+    want = sorted(
+        con.sql(
+            f"SELECT qid, id, s FROM t QUALIFY ROW_NUMBER() OVER "
+            f"(PARTITION BY qid ORDER BY s DESC, id) <= {k}"
+        ).fetchall()
+    )
+    assert got == want
+    tied = sorted(spread)[0], sorted(spread)[2], sorted(spread)[3]
+    assert (1, tied[0], 0.5) in got and (1, tied[1], 0.5) in got
+    assert (1, tied[2], 0.5) not in got
+    assert (4, 19, None) in got and (4, 21, None) not in got
+
+
+def _degenerate_embeddings(tmp_path):
+    """Tiny ``embeddings`` table for the probe-set grid queries: vec 5 is
+    a null vector, vec 6 holds a null element inside the first 16 dims,
+    vecs 3 and 7 are identical, so they tie exactly for every probe and,
+    for probe 0, straddle the top-3 cut behind the two planted nearest
+    neighbours 9 and 10. Also writes the oracle's copy, in which vec 6
+    is a null vector: DuckDB's list_dot_product raises on a null element,
+    and the engine scores a null-element vector like a null one."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(11)
+    ids = [*range(12), 50, 100, 101]
+    vecs = {i: rng.standard_normal(20) for i in ids}
+    p = vecs[0]
+    vecs[9] = p + 0.01 * rng.standard_normal(20)
+    vecs[10] = p + 0.02 * rng.standard_normal(20)
+    vecs[3] = p + 0.5 * rng.standard_normal(20)
+    vecs[7] = vecs[3]
+    vecs[101] = vecs[100] + 0.05 * rng.standard_normal(20)
+    emb = {i: [float(np.float32(x)) for x in v] for i, v in vecs.items()}
+    emb[5] = None
+    emb[6][2] = None
+    schema = pa.schema(
+        [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())), ("label", pa.int32())]
+    )
+    paths = []
+    for sub, null_elem in (("spark", emb[6]), ("oracle", None)):
+        d = tmp_path / sub
+        d.mkdir()
+        table = pa.table(
+            {
+                "vec_id": ids,
+                "embedding": [null_elem if i == 6 else emb[i] for i in ids],
+                "label": [i % 3 for i in ids],
+            },
+            schema=schema,
+        )
+        pq.write_table(table, d / "embeddings.parquet")
+        paths.append(str(d))
+    return paths
+
+
+def test_grid_queries_degenerate_vectors_match_oracle(spark, tmp_path):
+    # Null vectors, null elements and exact ties through the three
+    # corpus x probe-set grid queries: each plan must equal its registered
+    # oracle, nulls ranking last and ties breaking to the lower vec_id.
+    import duckdb
+
+    from date_warehouse___airline_project_spark.plans import REGISTRY, load_all
+    from tools.oracle_check import compare
+
+    load_all()
+    spark_dir, oracle_dir = _degenerate_embeddings(tmp_path)
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{oracle_dir}/embeddings.parquet')"
+    )
+    for name in ("emb_knn_join", "emb_knn_label_audit", "emb_dim_truncation_overlap"):
+        q = REGISTRY[name]
+        got = q.fn(spark, spark_dir).toPandas()
+        assert compare(name, got, con.sql(q.oracle).df()) == [], name
+        if name == "emb_knn_join":
+            top = got[got.qid == 0].vec_id.tolist()
+            assert top == [9, 10, 3], top  # 7 ties 3 and loses on id
+
+
 def test_multitable_pair_verify_handles_null_embeddings(spark):
     # A null (or null-element) embedding still LSH-buckets (null sign →
     # bit 0), so it reaches the Arrow cosine verify — which previously

@@ -148,6 +148,19 @@ def test_window_composition_is_mechanical():
     assert tail_rounds == sorted(tail_rounds)
 
 
+def test_recert_backlog_fits_the_window():
+    """Certification debt is a per-round budget: every name in
+    tools/recert_list.json must fit the driver's window, or some
+    fingerprint-moved query ships certified only by local sweeps."""
+    import __spark_entry__ as m
+
+    backlog = m._recert_list()
+    assert len(backlog) <= m.DRIVER_WINDOW, (
+        f"{len(backlog)} names to re-certify against a "
+        f"{m.DRIVER_WINDOW}-query window"
+    )
+
+
 def test_recert_diff_flags_doctored_fingerprint():
     """A behavior change MUST re-enter the window: doctoring one stored
     hash makes diff() (and therefore recert_list) pick the query up."""

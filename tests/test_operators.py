@@ -445,52 +445,82 @@ def test_salted_join_left_outer_keeps_unmatched(spark):
     assert rows == {(1, 1, "a"), (9, 2, None)}
 
 
-def test_pca_moment_lane_equivalence(spark):
-    """The Arrow outer-product lane must be BIT-identical to the relational
-    fold: both round each scaled product half-away-from-zero to int64 and
-    merge by plain integer addition, so no float-accumulation order can
-    leak in. Certified cell-for-cell on the real embeddings table."""
+def _duckdb_moment_cells(df, d: int, scale: float) -> dict:
+    """``SUM(ROUND(x_i * x_j * scale))`` per (i, j) in DuckDB over the same
+    rows — the oracle's moment-cell formulation (a null factor makes the
+    product null, which SUM skips; a cell with no non-null product is
+    NULL)."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("emb_t", df.toArrow())
+    rows = con.sql(
+        f"""
+        WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS emb FROM emb_t)
+        SELECT i.i, j.j,
+               CAST(SUM(CAST(ROUND(emb[i.i + 1] * emb[j.j + 1] * {scale}, 0)
+                             AS BIGINT)) AS BIGINT) AS s2
+        FROM e,
+             UNNEST(GENERATE_SERIES(0, {d - 1})) AS i(i),
+             UNNEST(GENERATE_SERIES(0, {d - 1})) AS j(j)
+        GROUP BY i.i, j.j
+        """
+    ).fetchall()
+    return {(i, j): s2 for i, j, s2 in rows}
+
+
+def _moment_cells(df, **kw) -> dict:
     from date_warehouse___airline_project_spark.operators.similarity import (
         pca_moment_cells,
     )
 
+    return {(r["i"], r["j"]): r["s2"] for r in pca_moment_cells(df, **kw).collect()}
+
+
+def test_pca_moment_cells_matches_duckdb(spark):
+    """Each scaled product is rounded half away from zero to int64 and the
+    cells merge by plain integer addition, so no float-accumulation order
+    can leak in: the cells equal DuckDB's, all 64 x 64 of them, on the
+    real embeddings table."""
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    arrow = {
-        (r["i"], r["j"]): r["s2"]
-        for r in pca_moment_cells(e, impl="arrow").collect()
-    }
-    sql = {
-        (r["i"], r["j"]): r["s2"]
-        for r in pca_moment_cells(e, impl="sql").collect()
-    }
-    assert arrow == sql
-    assert len(sql) == 64 * 64
+    got = _moment_cells(e)
+    assert len(got) == 64 * 64
+    assert got == _duckdb_moment_cells(e, 64, 1e8)
+
+
+def test_pca_moment_cells_null_products_match_duckdb(spark):
+    """A null element or a null vector contributes no product to a cell,
+    as SQL SUM skips nulls: Arrow hands null elements over as NaN, which
+    must neither be summed as garbage nor crash the outer product."""
+    schema = "vec_id long, embedding array<double>"
+    for rows, want in (
+        ([(1, [0.5, None]), (2, [0.25, 0.75])],
+         {(0, 0): 25 + 6, (0, 1): 19, (1, 0): 19, (1, 1): 56}),
+        ([(1, None), (2, [0.25, 0.75])],
+         {(0, 0): 6, (0, 1): 19, (1, 0): 19, (1, 1): 56}),
+        ([(1, [None, 0.5])], {(0, 0): None, (0, 1): None, (1, 0): None, (1, 1): 25}),
+    ):
+        df = spark.createDataFrame(rows, schema)
+        got = _moment_cells(df, d=2, scale=100.0)
+        assert got == _duckdb_moment_cells(df, 2, 100.0) == want, rows
 
 
 def test_pca_moment_rounding_edge(spark):
-    """Half-away-from-zero edge: the arrow lane compares the fraction
-    exactly (no floor(x+0.5) absorption), so values that sit just under
-    .5 after scaling stay down and exact .5 goes away from zero — in
-    BOTH lanes, including negatives."""
-    from date_warehouse___airline_project_spark.operators.similarity import (
-        pca_moment_cells,
-    )
-
+    """Half-away-from-zero edge: the fraction is compared exactly (no
+    floor(x+0.5) absorption), so values that sit just under .5 after
+    scaling stay down and exact .5 goes away from zero, including
+    negatives."""
     rows = [
         (1, [0.5, -0.5]),        # products: 0.25, -0.25, 0.25 -> .5 ties at scale 2
         (2, [0.75, 0.25]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for impl in ("arrow", "sql"):
-        got = {
-            (r["i"], r["j"]): r["s2"]
-            for r in pca_moment_cells(df, d=2, scale=2.0, impl=impl).collect()
-        }
-        # row1: [0.25*2=0.5 -> 1, -0.5 -> -1]; row2: [1.125->1.0... ]
-        # 0.5625*2=1.125 -> 1; 0.1875*2=0.375 -> 0; 0.0625*2=0.125 -> 0
-        assert got[(0, 0)] == 1 + 1, got   # 0.5->1 plus 1.125->1
-        assert got[(0, 1)] == -1 + 0, got  # -0.5 -> -1 (away from zero)
-        assert got[(1, 1)] == 1 + 0, got   # 0.5->1, 0.125->0
+    got = _moment_cells(df, d=2, scale=2.0)
+    # row1: [0.25*2=0.5 -> 1, -0.5 -> -1]; row2: [1.125->1.0... ]
+    # 0.5625*2=1.125 -> 1; 0.1875*2=0.375 -> 0; 0.0625*2=0.125 -> 0
+    assert got[(0, 0)] == 1 + 1, got   # 0.5->1 plus 1.125->1
+    assert got[(0, 1)] == -1 + 0, got  # -0.5 -> -1 (away from zero)
+    assert got[(1, 1)] == 1 + 0, got   # 0.5->1, 0.125->0
 
 
 def _duckdb_distance_profile(e, cents) -> list[tuple]:

@@ -330,10 +330,13 @@ def main() -> None:
     listed = set(old_recert)
     already = sum(n in listed for n in changed)
     resolved = len(listed - set(recert))
+    from __spark_entry__ import DRIVER_WINDOW
+
     print(f"{len(new)} queries fingerprinted (algo v{FP_VERSION}), "
           f"{len(changed)} changed/new ({len(changed) - already} new to the "
           f"recert list, {already} already in it), {resolved} resolved, "
-          f"{len(recert)} to re-certify, {len(errors)} errored")
+          f"{len(recert)} to re-certify ({len(recert)}/{DRIVER_WINDOW} "
+          f"window slots), {len(errors)} errored")
     for n in recert:
         print(f"  recert: {n}")
     for n in errors:
