@@ -13,8 +13,8 @@ log with Kafka's read protocol —
     ``startingOffsets`` earliest|latest) and its exact output schema
     (``key``/``value`` binary, ``topic``, ``partition``, ``offset``,
     ``timestamp``, ``timestampType``),
-  * replayable offset-range reads (``partitions(start, end)``), so
-    Structured Streaming checkpoints resume mid-topic and a crashed
+  * replayable offset-range reads (``readBetweenOffsets(start, end)``),
+    so Structured Streaming checkpoints resume mid-topic and a crashed
     micro-batch is re-read bit-identically — the at-least-once consumer
     contract the reference worker assumes (kafkaworker.js:28-44).
 
@@ -30,10 +30,20 @@ streaming state tables): one JSONL file per partition, offset == line
 number, appends are single ``write()`` calls of one line (atomic for
 this size on POSIX). At 100 TB you run a broker; this is the seam's
 executable contract, not a broker.
+
+Because the log is driver-local, the streaming reader is a
+``SimpleDataSourceStreamReader``: the driver-side source process reads a
+micro-batch's new lines while it plans the batch's end offset and hands
+them to the engine with the plan, so a batch runs no executor Python task
+for its source. A read stops before a line not yet terminated by its
+newline. Only recovery, replaying a batch from the checkpoint's offset
+log, reads through ``readBetweenOffsets`` in an executor task. The batch
+reader keeps one input partition per topic partition.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import time
@@ -42,8 +52,8 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 
 _SCHEMA = (
@@ -157,26 +167,29 @@ class _OffsetRange(InputPartition):
         self.partition, self.start, self.end = partition, start, end
 
 
-def _read_range(part: _OffsetRange) -> Iterator[tuple]:
-    import datetime
+def _record(line: str | bytes, topic: str, partition: int, offset: int) -> tuple:
+    """One log line as a row of the Kafka source's schema."""
+    rec = json.loads(line)
+    key = rec.get("key")
+    return (
+        key.encode("utf-8") if key is not None else None,
+        rec["value"].encode("utf-8"),
+        topic,
+        partition,
+        offset,
+        datetime.datetime.fromtimestamp(rec["ts"] / 1000.0),
+        0,  # CreateTime, the Kafka default
+    )
 
+
+def _read_range(part: _OffsetRange) -> Iterator[tuple]:
     with open(part.path, encoding="utf-8") as f:
         for offset, line in enumerate(f):
             if offset < part.start:
                 continue
             if offset >= part.end:
                 break
-            rec = json.loads(line)
-            key = rec.get("key")
-            yield (
-                key.encode("utf-8") if key is not None else None,
-                rec["value"].encode("utf-8"),
-                part.topic,
-                part.partition,
-                offset,
-                datetime.datetime.fromtimestamp(rec["ts"] / 1000.0),
-                0,  # CreateTime, the Kafka default
-            )
+            yield _record(line, part.topic, part.partition, offset)
 
 
 class KafkaLogBatchReader(DataSourceReader):
@@ -197,43 +210,54 @@ class KafkaLogBatchReader(DataSourceReader):
         return _read_range(partition)
 
 
-class KafkaLogStreamReader(DataSourceStreamReader):
-    """Streaming form. Offsets are ``{partition(str): next_offset}`` maps
-    (JSON-serialized into the checkpoint by the engine), advancing
-    monotonically per partition — Kafka's offset contract. ``commit`` is
-    a no-op: the log is the retention store and the checkpoint owns
-    consumer progress (exactly the real source's division of labor)."""
+class KafkaLogSimpleStreamReader(SimpleDataSourceStreamReader):
+    """Streaming form, read on the driver. Offsets are ``{partition(str):
+    next_offset}`` maps (JSON-serialized into the checkpoint by the
+    engine), advancing monotonically per partition — Kafka's offset
+    contract. ``commit`` is a no-op: the log is the retention store and
+    the checkpoint owns consumer progress (exactly the real source's
+    division of labor)."""
 
     def __init__(self, root: str, topic: str, starting_offsets: str) -> None:
         self.root, self.topic = root, topic
         self.starting = starting_offsets
 
-    def _current(self) -> dict[str, int]:
-        return {
-            str(p): _line_count(f)
-            for p, f in enumerate(_partition_files(self.root, self.topic))
-        }
+    def _scan(
+        self, p: int, path: str, start: int | None, end: int | None = None
+    ) -> tuple[list[tuple], int]:
+        """Rows of partition ``p`` at offsets [start, end) and the offset
+        after the last complete line scanned. ``end=None`` scans to the
+        last complete line; ``start=None`` only counts."""
+        rows, offset = [], 0
+        with open(path, "rb") as f:
+            while end is None or offset < end:
+                line = f.readline()
+                if not line.endswith(b"\n"):
+                    break  # end of file, or a line still being written
+                if start is not None and offset >= start:
+                    rows.append(_record(line, self.topic, p, offset))
+                offset += 1
+        return rows, offset
 
     def initialOffset(self) -> dict:
-        if self.starting == "latest":
-            return self._current()
-        return {k: 0 for k in self._current()}
-
-    def latestOffset(self) -> dict:
-        return self._current()
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         files = _partition_files(self.root, self.topic)
-        out = []
-        for p, f in enumerate(files):
-            s = int(start.get(str(p), 0))
-            e = int(end.get(str(p), s))
-            if e > s:
-                out.append(_OffsetRange(f, self.topic, p, s, e))
-        return out
+        if self.starting == "latest":
+            return {str(p): self._scan(p, f, None)[1] for p, f in enumerate(files)}
+        return {str(p): 0 for p in range(len(files))}
 
-    def read(self, partition: _OffsetRange) -> Iterator[tuple]:
-        return _read_range(partition)
+    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+        rows, end = [], {}
+        for p, f in enumerate(_partition_files(self.root, self.topic)):
+            got, end[str(p)] = self._scan(p, f, int(start.get(str(p), 0)))
+            rows += got
+        return iter(rows), end
+
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+        rows = []
+        for p, f in enumerate(_partition_files(self.root, self.topic)):
+            s = int(start.get(str(p), 0))
+            rows += self._scan(p, f, s, int(end.get(str(p), s)))[0]
+        return iter(rows)
 
     def commit(self, end: dict) -> None:
         pass  # checkpoint owns progress; the log is retention
@@ -266,9 +290,9 @@ class KafkaLogDataSource(DataSource):
         root, topic, _ = self._conf()
         return KafkaLogBatchReader(root, topic)
 
-    def streamReader(self, schema) -> KafkaLogStreamReader:
+    def simpleStreamReader(self, schema) -> KafkaLogSimpleStreamReader:
         root, topic, starting = self._conf()
-        return KafkaLogStreamReader(root, topic, starting)
+        return KafkaLogSimpleStreamReader(root, topic, starting)
 
 
 def register_kafka_log_source(spark) -> None:

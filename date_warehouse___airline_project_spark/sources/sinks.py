@@ -15,7 +15,8 @@ the format-agnostic seam (``make_merge_target`` → Delta when available,
 the parquet emulation otherwise).
 
 ``append_log`` writes its few rows with pyarrow on the driver: a log
-append is not worth a Spark job.
+append is not worth a Spark job. ``write_parquet_file`` is its one
+tmp-then-rename writer, shared with the eligibility stream's batch parts.
 """
 
 from __future__ import annotations
@@ -90,9 +91,8 @@ def append_log(path: str, rows: list[dict]) -> None:
     columns in sorted key order, int → bigint, str → string — so it reads
     back together with parts Spark wrote. A column with no value, with
     values of two types, or of another type raises ``TypeError``. The
-    file is written under a hidden name (Spark's reader skips
-    ``.``-prefixed files) and renamed into place, so a reader never sees
-    a partial file."""
+    file is written by ``write_parquet_file``, so a reader never sees a
+    partial file."""
     if not rows:
         return
     columns = {}
@@ -103,12 +103,22 @@ def append_log(path: str, rows: list[dict]) -> None:
             found = sorted(k.__name__ for k in kinds) or ["only None"]
             raise TypeError(f"log column {name!r} cannot be typed from {found}")
         columns[name] = pa.array(values, type=_LOG_TYPES[kinds.pop()])
+    write_parquet_file(
+        pa.table(columns), path, f"part-{uuid.uuid4().hex}-c000.snappy.parquet"
+    )
+
+
+def write_parquet_file(table: pa.Table, path: str, name: str) -> None:
+    """Write ``table`` to the parquet file ``<path>/<name>``, creating the
+    directory. The file is written under the hidden name ``.<name>``
+    (Spark's and pyarrow's readers skip ``.``-prefixed files) and renamed
+    into place, so a reader never sees a partial file, and writing the
+    same name again replaces the file whole."""
     os.makedirs(path, exist_ok=True)
-    part = f"part-{uuid.uuid4().hex}-c000.snappy.parquet"
-    tmp = os.path.join(path, f".{part}")
+    tmp = os.path.join(path, f".{name}")
     try:
-        pq.write_table(pa.table(columns), tmp, compression="snappy")
-        os.rename(tmp, os.path.join(path, part))
+        pq.write_table(table, tmp, compression="snappy")
+        os.rename(tmp, os.path.join(path, name))
     finally:
         if os.path.exists(tmp):  # a failed write leaves no partial file
             os.remove(tmp)

@@ -5,9 +5,10 @@ results table → realtime push, spread over three processes
 (supabaseWatcher.js, kafkaProducer.js, kafkaworker.js). Here the same
 shapes collapse into single fault-tolerant Structured Streaming queries:
 
-  eligibility_stream   message stream → parse (raw fallback) → type filter
-                       → stream-static join vs flights → verdict exprs →
-                       foreachBatch {audit append; results append}
+  eligibility_stream   message stream → parse (raw fallback) →
+                       stream-static join vs flights → verdict exprs →
+                       foreachBatch {one toArrow; audit part; type filter
+                       → results part}
   windows              watermarked tumbling/sliding/session aggregations
                        (the late-data semantics the reference lacks)
   file_ingest          drop-directory CSV ingest (the uploads/incoming

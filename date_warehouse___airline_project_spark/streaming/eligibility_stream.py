@@ -7,20 +7,29 @@ Reference dataflow (SURVEY §3.3): INSERT on ``outbox`` → Realtime watcher
 delay/eligibility with a six-value reasons enum, and appends
 ``eligibility_results``.
 
-Spark-first collapse: ONE streaming query.
+Spark-first collapse: ONE streaming query, its plan built once.
 
-  readStream (text lines = Kafka values)
+  readStream (Kafka values; the kafkalog source reads them on the driver)
     → from_json with raw-string fallback (kafkaworker.js:47-52 JSON.parse
       try/catch re-expressed as a null-check coalesce — F-J2)
-    → foreachBatch:
-        audit append        (every message, kafka_messages shape — ST2/ST5)
-        filter type → stream-static join vs flights → verdicts
-        results append      (eligibility_results shape)
+    → stream-static left join vs the latest flight row → verdict columns,
+      one row per message (``processed_at`` is the micro-batch timestamp)
+    → foreachBatch, one Spark action (``toArrow``) per micro-batch, then
+      pyarrow on the driver:
+        audit part      (every message, kafka_messages shape — ST2/ST5)
+        results part    (type == 'eligibility_check', eligibility_results
+                         shape)
 
 foreachBatch is used (rather than two independent sinks) because the
-reference's worker performs BOTH side effects per message batch; the
-checkpoint makes replay idempotent-at-batch granularity — an uplift over
-the reference's at-least-once consumer.
+reference's worker performs BOTH side effects per message batch. Each
+part is one parquet file whose name is fixed by the checkpoint and the
+batch id, written under a hidden name and renamed into place
+(``sources.sinks.write_parquet_file``). A micro-batch the checkpoint
+replays after a crash re-reads the same offsets and replaces its parts
+rather than adding rows, so replay is idempotent at batch granularity —
+an uplift over the reference's at-least-once consumer. The parts are
+message-sized, like the relation ``kafka_log_values_sink`` collects; with
+the real connector ``maxOffsetsPerTrigger`` bounds a backlog.
 
 The verdict logic is ``pipelines.eligibility.check_eligibility`` — the
 exact same lazy plan serves batch and streaming (stream-static joins are
@@ -30,11 +39,17 @@ streaming form.
 
 from __future__ import annotations
 
+import hashlib
+import os
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pipelines.eligibility import check_eligibility
+from ..sources.sinks import write_parquet_file
 
 # kafkaworker.js:67-70 message envelope: {type, payload:{passengerId,
 # firstName, lastName, flightNumber}, requested_at}
@@ -56,6 +71,10 @@ MESSAGE_SCHEMA = T.StructType(
     ]
 )
 
+# the audit part's columns (kafka_messages shape); the results part takes
+# the verdict rows' columns other than the message's raw value and type
+_AUDIT_COLUMNS = ["batch_id", "raw_value", "type", "processed_at"]
+
 
 def parse_messages(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """JSON parse with raw fallback: unparseable payloads survive as
@@ -73,13 +92,6 @@ def parse_messages(raw: DataFrame, value_col: str = "value") -> DataFrame:
         F.col("msg.payload.lastName").alias("last_name"),
         F.col("msg.payload.flightNumber").alias("flight_number"),
         F.col("msg.requested_at").alias("requested_at"),
-    )
-
-
-def eligibility_requests(messages: DataFrame) -> DataFrame:
-    """Dispatch: only eligibility_check messages become requests (F-J4)."""
-    return messages.filter(F.col("type") == "eligibility_check").select(
-        "passenger_id", "first_name", "last_name", "flight_number", "requested_at"
     )
 
 
@@ -213,26 +225,29 @@ def run_eligibility_stream(
     of the pipeline is unchanged. Returns the StreamingQuery handle.
     """
     raw = source if source is not None else spark.readStream.format("text").load(input_dir)
+    rows = check_eligibility(parse_messages(raw, "value"), flights)
+    result_columns = [c for c in rows.columns if c not in ("raw_value", "type")]
+    # parts are named per checkpoint, so two queries sharing an output
+    # directory never replace each other's batches
+    tag = hashlib.sha1(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        msgs = parse_messages(batch_df, "value").persist()
-        try:
-            # ST2/ST5: audit-append every message before dispatch
-            (
-                msgs.withColumn("batch_id", F.lit(batch_id))
-                .withColumn("processed_at", F.current_timestamp())
-                .select("batch_id", "raw_value", "type", "processed_at")
-                .write.mode("append")
-                .parquet(audit_dir)
-            )
-            requests = eligibility_requests(msgs)
-            verdicts = check_eligibility(requests, flights)
-            verdicts.write.mode("append").parquet(results_dir)
-        finally:
-            msgs.unpersist()
+        tbl = batch_df.withColumn("batch_id", F.lit(batch_id)).toArrow()
+        # toArrow labels timestamps with the session time zone; the parts
+        # are labelled UTC whatever the session's zone
+        at = tbl.schema.get_field_index("processed_at")
+        tbl = tbl.set_column(
+            at, "processed_at", tbl["processed_at"].cast(pa.timestamp("us", tz="UTC"))
+        )
+        name = f"part-{batch_id:05d}-{tag}.snappy.parquet"
+        # ST2/ST5: the audit part lands before the verdicts
+        write_parquet_file(tbl.select(_AUDIT_COLUMNS), audit_dir, name)
+        # F-J4 dispatch: only eligibility_check messages get a verdict row
+        checks = tbl.filter(pc.equal(tbl["type"], "eligibility_check"))
+        write_parquet_file(checks.select(result_columns), results_dir, name)
 
     writer = (
-        raw.writeStream.foreachBatch(process_batch)
+        rows.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .queryName("eligibility_stream")
     )

@@ -4695,3 +4695,125 @@ def test_full_reference_dataflow_outbox_to_kafka_to_worker(
     res = {r.passenger_id: r for r in spark.read.parquet(results).collect()}
     assert set(res) == {"P1", "P2", "P5"}
     assert res["P5"].reason == "flight_not_found"
+
+
+def _eligibility_over_kafka_log(spark, tmp_path, flights_df, messages):
+    """Send ``messages`` (pid, type, flight) keyed on the passenger to the
+    kafkalog topic under ``tmp_path`` and run the eligibility stream over
+    it to the end of the topic. Returns the (audit, results, checkpoint)
+    directories."""
+    from date_warehouse___airline_project_spark.sources.kafka_log import KafkaLogProducer
+    from date_warehouse___airline_project_spark.streaming.eligibility_stream import (
+        kafka_log_messages_source,
+    )
+
+    root = str(tmp_path / "log")
+    dirs = tuple(str(tmp_path / d) for d in ("audit", "results", "ckpt"))
+    prod = KafkaLogProducer(root, n_partitions=2)
+    for pid, mtype, flight in messages:
+        prod.send("requests", _msg(mtype, pid, flight), key=pid)
+    prod.close()
+    src = kafka_log_messages_source(spark, root, "requests")
+    run_eligibility_stream(spark, "unused", flights_df, *dirs, source=src).awaitTermination(120)
+    return dirs
+
+
+def test_eligibility_stream_replayed_batch_writes_once(spark, tmp_path, flights_df):
+    """A micro-batch the checkpoint replays (its offsets logged, its commit
+    lost in a crash) re-reads the same offsets through
+    ``readBetweenOffsets`` and replaces its audit and results parts: no
+    message is audited or answered twice."""
+    msgs = [("P1", "eligibility_check", "AA100"), ("P2", "eligibility_check", "BB200"),
+            ("P6", "other_event", "AA100")]
+    audit, results, ckpt = _eligibility_over_kafka_log(spark, tmp_path, flights_df, msgs)
+    before = sorted(map(tuple, spark.read.parquet(results).drop("processed_at").collect()))
+    assert spark.read.parquet(audit).count() == 3 and len(before) == 2
+
+    os.remove(os.path.join(ckpt, "commits", "0"))
+    os.remove(os.path.join(ckpt, "commits", ".0.crc"))
+    _eligibility_over_kafka_log(spark, tmp_path, flights_df, [])  # restart, nothing new
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))  # batch 0 ran again
+    assert spark.read.parquet(audit).count() == 3
+    after = sorted(map(tuple, spark.read.parquet(results).drop("processed_at").collect()))
+    assert after == before
+
+
+AUDIT_SCHEMA = "batch_id int, raw_value string, type string, processed_at timestamp"
+RESULTS_SCHEMA = (
+    "passenger_id string, first_name string, last_name string, flight_number string, "
+    "requested_at string, delay_minutes bigint, eligible boolean, reason string, "
+    "processed_at timestamp"
+)
+
+
+def test_eligibility_stream_output_schemas(spark, tmp_path, flights_df):
+    """The audit and results parts read through Spark with the schemas
+    Spark's own appends gave them, also in a directory that already holds
+    a Spark-written part; audit and verdicts of one batch carry the same
+    micro-batch ``processed_at``."""
+    import datetime
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    audit_t, results_t = (_parse_datatype_string(s) for s in (AUDIT_SCHEMA, RESULTS_SCHEMA))
+    then = datetime.datetime(2026, 1, 1, 12, 0)
+    # one part in the format the Spark appends wrote before
+    spark.createDataFrame([(7, "{}", None, then)], audit_t).write.parquet(
+        str(tmp_path / "audit"))
+    spark.createDataFrame(
+        [("P0", "Ada", "Lovelace", "AA100", "2026-01-01", 180, True,
+          "delay_threshold_met", then)], results_t,
+    ).write.parquet(str(tmp_path / "results"))
+
+    msgs = [("P1", "eligibility_check", "AA100"), ("P5", "eligibility_check", "ZZ999"),
+            ("P6", "other_event", "AA100")]
+    audit, results, _ = _eligibility_over_kafka_log(spark, tmp_path, flights_df, msgs)
+    aud, res = spark.read.parquet(audit), spark.read.parquet(results)
+    assert aud.schema.simpleString() == audit_t.simpleString()
+    assert res.schema.simpleString() == results_t.simpleString()
+    assert aud.count() == 4 and res.count() == 3
+    new = aud.filter(F.col("batch_id") == 0)
+    stamps = {r.processed_at for r in new.collect()}
+    stamps |= {r.processed_at for r in res.filter(F.col("passenger_id") != "P0").collect()}
+    assert len(stamps) == 1 and then not in stamps
+    assert {r.passenger_id: r.delay_minutes for r in res.collect()} == {
+        "P0": 180, "P1": 180, "P5": None}
+
+
+def test_kafka_log_stream_starting_offsets_latest(spark, tmp_path):
+    """``startingOffsets=latest`` skips what the topic held at the start;
+    each message sent after it is read once, with its partition offset."""
+    from date_warehouse___airline_project_spark.sources.kafka_log import (
+        KafkaLogProducer,
+        register_kafka_log_source,
+    )
+
+    root = str(tmp_path / "log")
+    prod = KafkaLogProducer(root, n_partitions=2)
+    prod.send("requests", "old-0")
+    prod.send("requests", "old-1")
+    register_kafka_log_source(spark)
+    q = (
+        spark.readStream.format("kafkalog")
+        .option("path", root)
+        .option("subscribe", "requests")
+        .option("startingOffsets", "latest")
+        .load()
+        .select(F.col("value").cast("string").alias("v"), "partition", "offset")
+        .writeStream.format("memory")
+        .queryName("kafkalog_latest")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        for i in range(3):
+            prod.send("requests", f"new-{i}")
+        q.processAllAvailable()
+        q.processAllAvailable()  # nothing new: nothing read again
+        got = sorted(map(tuple, spark.table("kafkalog_latest").collect()))
+    finally:
+        q.stop()
+        prod.close()
+    # unkeyed sends round-robin: old-0 p0@0, old-1 p1@0, new-0 p0@1, ...
+    assert got == [("new-0", 0, 1), ("new-1", 1, 1), ("new-2", 0, 2)]

@@ -9,7 +9,12 @@ python -m pytest tests/ -q
 # drain_memo_timings) and wraps four names on the clean_file module
 # (safe_upsert, write_quarantine_csv, append_log, read_csv_all_string);
 # its fast tests catch a rename before a benchmark run would report it
-# as failed operations. They never call bench.py.
+# as failed operations. They never call bench.py. The operations workload
+# also relies on run_eligibility_stream(..., available_now=False,
+# source=kafka_log_messages_source(...)), KafkaLogProducer(root,
+# n_partitions=2).send, and audit and results directories that pyarrow
+# can read, with columns batch_id, raw_value, passenger_id, eligible,
+# reason and delay_minutes.
 python -m pytest perfbench/test_perfbench.py -q
 python tools/oracle_check.py /root/testdata/sf0.001
 python tools/oracle_check.py /root/testdata/sf0.01
