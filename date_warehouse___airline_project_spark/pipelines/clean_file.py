@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.text_dedup import _release_blocks
 from ..sources.csv import read_csv_all_string
+from ..sources.merge_target import ParquetMergeTarget
 from ..sources.sinks import append_log, safe_upsert, write_quarantine_csv
 from .cleaners import (
     clean_airlines,
@@ -67,10 +68,11 @@ def _staging(spark: SparkSession, root: str, name: str, fallback_cols: list[str]
     """Load a staging table if it exists, else an empty frame with the
     expected key column (lets flights clean before dims are loaded —
     everything quarantines as invalid-prefix/airport, same as the
-    reference's empty-dim behavior)."""
-    path = os.path.join(root, name)
-    if os.path.exists(path):
-        return spark.read.parquet(path)
+    reference's empty-dim behavior). Read through the merge target, so
+    a table stranded by a crash inside its swap is restored first."""
+    table = ParquetMergeTarget(spark, os.path.join(root, name))
+    if table.exists():
+        return table.read()
     schema = ", ".join(f"{c} string" for c in fallback_cols)
     return spark.createDataFrame([], schema)
 

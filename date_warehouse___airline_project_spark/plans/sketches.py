@@ -21,6 +21,8 @@ probe never shuffles the big side.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -215,8 +217,11 @@ def cms_frequency_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HLL_M = 64  # registers (p = 6); alpha_64 = 0.709 (Flajolet et al. 2007)
 
-def hll_registers(rows: DataFrame, key_col: str) -> DataFrame:
-    """(idx, r) HLL registers for one relation — MAX rank per register.
+def hll_registers(
+    rows: DataFrame, key_col: str, group_cols: Sequence[str] = ()
+) -> DataFrame:
+    """(*group_cols, idx, r) HLL registers — MAX rank per register, one
+    register set per group (a single set without ``group_cols``).
 
     Mergeable by construction: registers(A ∪ B) = per-idx MAX of
     registers(A) and registers(B) (pinned in tests/test_functions.py),
@@ -230,7 +235,8 @@ def hll_registers(rows: DataFrame, key_col: str) -> DataFrame:
     lbv = spark.createDataFrame(
         [(j, 1 << j) for j in range(50)], "j int, lowbit long"
     )
-    parts = rows.select(hash56(F.col(key_col)).alias("hv")).select(
+    parts = rows.select(*group_cols, hash56(F.col(key_col)).alias("hv")).select(
+        *group_cols,
         (F.col("hv") % _HLL_M).alias("idx"),
         F.expr(f"hv div {_HLL_M}").alias("rest"),
     )
@@ -239,11 +245,12 @@ def hll_registers(rows: DataFrame, key_col: str) -> DataFrame:
             F.broadcast(lbv), F.expr("rest & (-rest)") == F.col("lowbit"), "left"
         )
         .select(
+            *group_cols,
             "idx",
             F.when(F.col("rest") == 0, F.lit(51)).otherwise(F.col("j") + 1).alias("rank"),
         )
     )
-    return rk.groupBy("idx").agg(F.max("rank").alias("r"))
+    return rk.groupBy(*group_cols, "idx").agg(F.max("rank").alias("r"))
 
 
 
@@ -528,37 +535,18 @@ _GHLL_ORACLE = f"""
     f"count rides along per group to expose the estimation error.",
 )
 def hll_grouped_daily_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.hashing import hash56
-
     ev = load_table(spark, sf_dir, "events")
-    lbv = ev.sparkSession.createDataFrame(
-        [(j, 1 << j) for j in range(50)], "j int, lowbit long"
-    )
-    parts = ev.select(
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
-        hash56(F.col("user_id")).alias("hv"),
-    ).select(
-        "day",
-        (F.col("hv") % _HLL_M).alias("idx"),
-        F.expr(f"hv div {_HLL_M}").alias("rest"),
-    )
-    rk = parts.join(
-        F.broadcast(lbv), F.expr("rest & (-rest)") == F.col("lowbit"), "left"
-    ).select(
-        "day",
-        "idx",
-        F.when(F.col("rest") == 0, F.lit(51)).otherwise(F.col("j") + 1).alias("rank"),
-    )
-    regs = rk.groupBy("day", "idx").agg(F.max("rank").alias("r"))
+    day = F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day")
+    regs = hll_registers(ev.select(day, "user_id"), "user_id", ["day"])
     summary = regs.groupBy("day").agg(
         F.count("*").cast("bigint").alias("n_registers_set"),
         F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 51 - r)"))
         .cast("bigint")
         .alias("s_scaled"),
     )
-    exact = ev.groupBy(
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day")
-    ).agg(F.count_distinct("user_id").cast("bigint").alias("n_exact"))
+    exact = ev.groupBy(day).agg(
+        F.count_distinct("user_id").cast("bigint").alias("n_exact")
+    )
     est = summary.join(exact, "day").withColumn(
         "e_raw",
         F.lit(0.709 * _HLL_M * _HLL_M)

@@ -3186,12 +3186,12 @@ def doc_release_backfill_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
 def recover_shard_backfill(out_dir: str) -> None:
     """Finish or undo an interrupted ``apply_backfill_to_shards`` — the
     takedown's per-shard rename-swap recovery with the backfill's own
-    prefixes (same primitive, ``state_table.recover_rename_swap``): a
+    prefixes (same primitive, ``sources/swap.py::recover_rename_swap``): a
     ``.backfill-old-<token>-<s>`` dir with NO live ``shard=<s>`` rolls
     BACK (the rewrite is idempotent and re-runnable); post-swap debris
     and orphaned tmp roots are swept."""
+    from ..sources.swap import recover_rename_swap
     from ..streaming.ivf_stream import _require_local_path
-    from ..streaming.state_table import recover_rename_swap
 
     out_dir = _require_local_path(out_dir)
     recover_rename_swap(
@@ -3228,24 +3228,17 @@ def apply_backfill_to_shards(
     is proportional to the revision's blast radius, not the release.
 
     Crash protocol mirrors ``apply_takedown_to_shards``: rewritten
-    shards land in one ``.backfill-tmp-<token>`` dir, then swap live via
-    existence-guarded renames (``recover_shard_backfill`` rolls a crash
-    between the renames back); a shard the revision fully retracts is
-    rewritten as an empty schema'd table, a shard the revision newly
-    populates (no live dir) renames straight in. Idempotent: a re-run
+    shards land in one ``.backfill-tmp-<token>`` dir, then swap live one
+    by one through ``rename_swap`` (``recover_shard_backfill`` rolls a
+    crash between the renames back); a shard the revision fully
+    retracts is rewritten as an empty schema'd table, a shard the
+    revision newly populates (no live dir) renames straight in. Idempotent: a re-run
     finds zero changed shards. Returns the rewritten shard ids. The
     persisted release STATE is rebased separately —
     ``release_stream.apply_backfill_to_release_state`` — so future
     incremental folds resume off the corrected corpus."""
-    import os
-    import shutil
-    import uuid
-
     from ..streaming.ivf_stream import _require_local_path
-    from ..streaming.state_table import (
-        maintainer_lease,
-        verify_maintainer_lease,
-    )
+    from ..streaming.state_table import maintainer_lease
 
     out_dir = _require_local_path(out_dir, spark)
     with maintainer_lease(out_dir, lease, owner="shard-backfill") as lease:
@@ -3256,10 +3249,7 @@ def _apply_backfill_to_shards_locked(
     spark: SparkSession, out_dir: str, corrected: DataFrame, lease: dict
 ) -> list[int]:
     import os
-    import shutil
     import uuid
-
-    from ..streaming.state_table import verify_maintainer_lease
 
     recover_shard_backfill(out_dir)
     files = spark.read.parquet(out_dir).withColumn(
@@ -3291,24 +3281,7 @@ def _apply_backfill_to_shards_locked(
     token = uuid.uuid4().hex[:8]
     tmp = os.path.join(out_dir, f".backfill-tmp-{token}")
     _write_shards(asg2.filter(F.col("shard").isin(changed)), tmp)
-    verify_maintainer_lease(lease)  # fencing before the swap renames
-    for s in changed:
-        live = os.path.join(out_dir, f"shard={s}")
-        new = os.path.join(tmp, f"shard={s}")
-        old = os.path.join(out_dir, f".backfill-old-{token}-{s}")
-        if os.path.isdir(live):
-            os.rename(live, old)
-        if os.path.isdir(new):
-            os.rename(new, live)
-        else:
-            # shard fully retracted: keep a readable empty schema'd table
-            # (no shard column inside — the dir name IS the partition),
-            # mirroring the takedown's emptied-shard branch
-            asg2.limit(0).drop("shard").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(live)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
+    _swap_shards(out_dir, tmp, f".backfill-old-{token}-", changed, asg2, lease)
     return changed
 
 
@@ -3319,8 +3292,8 @@ def recover_shard_takedown(out_dir: str) -> None:
     re-runnable and idempotent, so restoring the pre-takedown shard is
     always safe); an old dir WITH a live shard is post-swap debris —
     delete it, along with any leftover tmp root."""
+    from ..sources.swap import recover_rename_swap
     from ..streaming.ivf_stream import _require_local_path
-    from ..streaming.state_table import recover_rename_swap
 
     out_dir = _require_local_path(out_dir)
     recover_rename_swap(
@@ -3352,10 +3325,6 @@ def apply_takedown_to_shards(
     renames back — combined with idempotence (re-running removes nothing
     new), the rewrite is safe to re-run from any crash point. Returns the
     rewritten shard ids."""
-    import os
-    import shutil
-    import uuid
-
     from ..streaming.ivf_stream import _require_local_path
     from ..streaming.state_table import maintainer_lease
 
@@ -3374,10 +3343,7 @@ def _apply_takedown_to_shards_locked(
     lease: dict,
 ) -> list[int]:
     import os
-    import shutil
     import uuid
-
-    from ..streaming.state_table import verify_maintainer_lease
 
     recover_shard_takedown(out_dir)
     files = spark.read.parquet(out_dir).withColumn(
@@ -3389,12 +3355,12 @@ def _apply_takedown_to_shards_locked(
     else:
         listed = files.filter(_hash56(F.col("doc_id")) % takedown_mod == 0)
     changed = sorted(
-        r["shard"] for r in listed.select("shard").distinct().collect()
+        int(r["shard"]) for r in listed.select("shard").distinct().collect()
     )
     if not changed:
         return []
     w = W.partitionBy("shard").orderBy("pos")
-    in_changed = files.filter(F.col("shard").isin([int(s) for s in changed]))
+    in_changed = files.filter(F.col("shard").isin(changed))
     if takedown_ids is not None:
         surviving = in_changed.join(ids, "doc_id", "left_anti")
     else:
@@ -3408,27 +3374,39 @@ def _apply_takedown_to_shards_locked(
         .partitionBy("shard")
         .parquet(tmp)
     )
+    _swap_shards(out_dir, tmp, f".takedown-old-{token}-", changed, kept, lease)
+    return changed
+
+
+def _swap_shards(
+    out_dir: str, tmp: str, old_prefix: str, changed: list[int],
+    rows: DataFrame, lease: dict,
+) -> None:
+    """``rename_swap`` each rewritten ``<tmp>/shard=<s>`` in for the live
+    ``<out_dir>/shard=<s>`` (backup ``<old_prefix><s>``), then drop the
+    tmp root. A shard left with no rows gets an empty schema'd table
+    (``rows``' schema minus the partition column): a bare empty dir
+    would break ``spark.read.parquet(out_dir)`` once EVERY shard is
+    emptied, mirroring the IVF empty-index branch in
+    ``remove_from_ivf_index``."""
+    import os
+    import shutil
+
+    from ..sources.swap import rename_swap
+    from ..streaming.state_table import verify_maintainer_lease
+
+    for s in changed:
+        new = os.path.join(tmp, f"shard={s}")
+        if not os.path.isdir(new):
+            rows.limit(0).drop("shard").coalesce(1).write.parquet(new)
     verify_maintainer_lease(lease)  # fencing before the swap renames
     for s in changed:
-        live = os.path.join(out_dir, f"shard={s}")
-        new = os.path.join(tmp, f"shard={s}")
-        old = os.path.join(out_dir, f".takedown-old-{token}-{s}")
-        os.rename(live, old)
-        if os.path.isdir(new):
-            os.rename(new, live)
-        else:
-            # shard emptied entirely: a bare empty dir would break
-            # spark.read.parquet(out_dir) if the takedown empties EVERY
-            # shard (no part files anywhere → schema inference fails, and
-            # this function's own rerun couldn't even start). Write an
-            # empty schema'd part file instead, mirroring the IVF
-            # empty-index branch in remove_from_ivf_index.
-            kept.limit(0).drop("shard").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(live)
-        shutil.rmtree(old, ignore_errors=True)
+        rename_swap(
+            os.path.join(tmp, f"shard={s}"),
+            os.path.join(out_dir, f"shard={s}"),
+            os.path.join(out_dir, f"{old_prefix}{s}"),
+        )
     shutil.rmtree(tmp, ignore_errors=True)
-    return [int(s) for s in changed]
 
 
 # ---------------------------------------------------------------------------

@@ -66,11 +66,13 @@ def _partition_files(root: str, topic: str) -> list[str]:
     tdir = os.path.join(root, topic)
     if not os.path.isdir(tdir):
         return []
-    return sorted(
-        os.path.join(tdir, n)
+    # ordered by partition number: a name sort puts p10 before p2
+    parts = {
+        int(n[1:-6]): n
         for n in os.listdir(tdir)
-        if n.startswith("p") and n.endswith(".jsonl")
-    )
+        if n.startswith("p") and n.endswith(".jsonl") and n[1:-6].isdigit()
+    }
+    return [os.path.join(tdir, parts[p]) for p in sorted(parts)]
 
 
 def _line_count(path: str) -> int:

@@ -41,36 +41,43 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.scd2 import scd2_init, scd2_merge
-
-
-class SwapInError(RuntimeError):
-    """A swap-in failed after the live table was renamed aside, and the
-    backup could not be put back: the table path is missing."""
+from .swap import SwapInError, recover_rename_swap, rename_swap  # noqa: F401
 
 
 class ParquetMergeTarget:
     """MERGE emulation over a parquet directory (see module docstring).
 
-    Swap-in discipline: new state is fully written to a temp dir first,
-    then the live dir is renamed aside and the temp renamed in — a crash
-    can leave a brief reader-visible gap between the two renames, but
-    never partial data, and the renamed-aside ``.old-*`` backup survives
-    any crash for manual recovery. A swap that FAILS (raises) puts the
-    backup back before re-raising, so the live table is exactly what it
-    was; only when that restore also fails does ``SwapInError`` escape,
-    naming the backup. TRUE reader-atomicity needs a transaction log —
-    that is exactly what the Delta target provides. Single-writer by
-    contract.
+    Swap-in discipline: ``sources/swap.py::rename_swap``. New state is
+    fully written to a ``<path>.tmp-*`` sibling, then the live dir is
+    renamed aside to ``<path>.old-*`` and the tmp renamed in. A swap that
+    FAILS (raises) puts the backup back before re-raising, so the live
+    table is exactly what it was; only when that restore also fails does
+    ``SwapInError`` escape, naming the backup. A crash between the two
+    renames leaves a backup and no live table: every mutation first runs
+    ``recover_rename_swap`` (restoring the newest backup and sweeping
+    stale siblings), and ``exists``/``read`` run its reader form, which
+    restores but never sweeps. TRUE reader-atomicity needs a transaction
+    log — that is exactly what the Delta target provides. Single-writer
+    by contract.
     """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
+    def _recover(self, sweep_orphans: bool = True) -> None:
+        parent, base = os.path.split(self.path.rstrip("/"))
+        recover_rename_swap(
+            parent or ".", f"{base}.old-", f"{base}.tmp-", lambda _: base,
+            sweep_orphans=sweep_orphans,
+        )
+
     def exists(self) -> bool:
+        self._recover(sweep_orphans=False)
         return os.path.exists(self.path)
 
     def read(self) -> DataFrame:
+        self._recover(sweep_orphans=False)
         return self.spark.read.parquet(self.path)
 
     def _swap_in(self, df: DataFrame) -> None:
@@ -78,25 +85,9 @@ class ParquetMergeTarget:
         tmp = f"{self.path}.tmp-{run}"
         try:
             df.write.mode("overwrite").parquet(tmp)
-            if not os.path.exists(self.path):
-                os.rename(tmp, self.path)
-                return
-            old = f"{self.path}.old-{run}"
-            os.rename(self.path, old)  # atomic same-fs; data preserved
-            try:
-                os.rename(tmp, self.path)
-            except BaseException:
-                try:
-                    os.rename(old, self.path)
-                except OSError as restore:
-                    raise SwapInError(
-                        f"{self.path} is missing; its previous state is in {old}"
-                    ) from restore
-                raise
+            rename_swap(tmp, self.path, f"{self.path}.old-{run}")
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        # only after the new state is live; a leftover backup is harmless
-        shutil.rmtree(old, ignore_errors=True)
 
     def upsert(self, df: DataFrame, key: Sequence[str]) -> str:
         key = list(key)
@@ -104,10 +95,11 @@ class ParquetMergeTarget:
         # (Delta's MERGE errors on duplicate matches; here the kept row per
         # key is arbitrary — dedupe upstream if batch content matters)
         df = df.dropDuplicates(key)
-        if not self.exists():
+        self._recover()
+        if not os.path.exists(self.path):
             df.write.mode("overwrite").parquet(self.path)
             return "inserted"
-        existing = self.read()
+        existing = self.spark.read.parquet(self.path)
         merged = existing.join(df.select(key), key, "left_anti").unionByName(
             df, allowMissingColumns=True
         )
@@ -121,12 +113,14 @@ class ParquetMergeTarget:
         tracked: Sequence[str],
         batch_ts: str,
     ) -> DataFrame:
-        if not self.exists():
+        self._recover()
+        if not os.path.exists(self.path):
             new_dim = scd2_init(updates, batch_ts)
         else:
-            new_dim = scd2_merge(self.read(), updates, natural_key, tracked, batch_ts)
+            current = self.spark.read.parquet(self.path)
+            new_dim = scd2_merge(current, updates, natural_key, tracked, batch_ts)
         self._swap_in(new_dim)
-        return self.read()
+        return self.spark.read.parquet(self.path)
 
 
 class DeltaMergeTarget:

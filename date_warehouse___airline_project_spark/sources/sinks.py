@@ -8,10 +8,11 @@ for zero rows.
 (cleaning.py:165-199) against parquet paths (no Delta jars in this image;
 with Delta this is a single ``MERGE INTO``). The upsert itself is
 ``sources.merge_target.ParquetMergeTarget.upsert`` — key-based anti-join
-merge, last write wins per key, tmp-write → backup-rename → swap — so
-there is one merge implementation; this module adds only the reference's
-insert fallback. New code that does not need the fallback should take
-the format-agnostic seam (``make_merge_target`` → Delta when available,
+merge, last write wins per key, swapped in by
+``sources/swap.py::rename_swap`` — so there is one merge
+implementation; this module adds only the reference's insert fallback.
+New code that does not need the fallback should take the
+format-agnostic seam (``make_merge_target`` → Delta when available,
 the parquet emulation otherwise).
 
 ``append_log`` writes its few rows with pyarrow on the driver: a log
@@ -30,7 +31,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .merge_target import ParquetMergeTarget, SwapInError
+from .merge_target import ParquetMergeTarget
+from .swap import SwapInError, rename_swap
 
 
 def write_quarantine_csv(df: DataFrame, path: str) -> None:
@@ -195,11 +197,12 @@ def compact_parquet(
     file costs a task, a footer read, and an open — a table ingested by
     many streaming micro-batches degrades until compacted. Production
     systems run this per table-partition under a transactional commit
-    (Delta/Iceberg OPTIMIZE); this is the parquet emulation with the
-    repo's tmp-write → backup-rename → swap discipline
-    (sources/merge_target.py), so readers see either the old layout or
-    the new one, never a partial directory. Row content is preserved
-    exactly; intra-file order is not a contract (layout-only operation).
+    (Delta/Iceberg OPTIMIZE); this is the parquet emulation: the rewrite
+    lands in a ``.tmp-*`` sibling and ``sources/swap.py::rename_swap``
+    swaps it in, so readers see either the old layout or the new one,
+    never a partial directory, and a failed swap leaves the old layout
+    live. Row content is preserved exactly; intra-file order is not a
+    contract (layout-only operation).
 
     The size estimate reads filesystem metadata only — no data pass
     beyond the single rewrite itself, which is one coalesce (no shuffle).
@@ -213,13 +216,14 @@ def compact_parquet(
                 total += os.path.getsize(os.path.join(root, f))
     n_files = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    # coalesce, not repartition: merging splits needs no shuffle
-    df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    run = uuid.uuid4().hex[:8]
+    tmp = f"{path}.tmp-{run}"
+    try:
+        # coalesce, not repartition: merging splits needs no shuffle
+        df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
+        rename_swap(tmp, path, f"{path}.old-{run}")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return n_files
 
 

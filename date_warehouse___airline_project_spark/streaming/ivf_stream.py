@@ -42,10 +42,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.swap import recover_rename_swap, rename_swap
 from .state_table import (
     maintainer_lease,
     recover_marker_commit,
-    recover_rename_swap,
     verify_maintainer_lease,
     write_commit_marker,
 )
@@ -334,9 +334,9 @@ def recover_rebuild(path: str, sweep_orphans: bool = True) -> None:
     roll BACK by restoring the backup (the rebuild is idempotent and
     re-runnable); post-swap backup debris and orphaned
     ``.rebuild-tmp-*`` builds are swept. Shares
-    ``state_table.recover_rename_swap`` with the tombstone and shard
-    swaps. Single-maintainer discipline applies: the sweep treats any
-    tmp sibling as a crashed build, so one process runs
+    ``sources/swap.py::recover_rename_swap`` with every other
+    whole-directory swap. Single-maintainer discipline applies: the
+    sweep treats any tmp sibling as a crashed build, so one process runs
     rebuild/append/compaction for an index at a time (the module-wide
     assumption)."""
     parent = os.path.dirname(path.rstrip("/")) or "."
@@ -484,15 +484,13 @@ def _rebuild_ivf_index_locked(
         )
     from .state_table import heartbeat_maintainer_lease
 
-    old = f"{path}.rebuild-old-{token}"
     # the save above is the tick's longest phase: refresh liveness AND
     # fence (heartbeat verifies first) immediately before the swap — a
     # superseded rebuild aborts HERE, before any rename touches the live
     # tree
     heartbeat_maintainer_lease(lease)
-    os.rename(path, old)
-    os.rename(tmp, path)  # commit point (recover_rebuild repairs between)
-    shutil.rmtree(old, ignore_errors=True)
+    # commit point (recover_rebuild repairs a crash between the renames)
+    rename_swap(tmp, path, f"{path}.rebuild-old-{token}")
     return n_cur
 
 
@@ -595,10 +593,10 @@ def recover_tombstones(path: str, sweep_orphans: bool = True) -> None:
     batch. Roll BACK by restoring the backup (the interrupted merge is
     idempotent and re-runnable); sweep post-swap ``.tombstones-old-*``
     debris and orphaned ``.tombstones-tmp-*`` writes. Shares
-    ``state_table.recover_rename_swap`` with the shard takedown so the
-    two crash protocols cannot drift. Runs from ``recover_compaction``
-    (every read/compact/stream-start path) and before every tombstone
-    read/rewrite."""
+    ``sources/swap.py::recover_rename_swap`` with every other
+    whole-directory swap, so the crash protocols cannot drift. Runs from
+    ``recover_compaction`` (every read/compact/stream-start path) and
+    before every tombstone read/rewrite."""
     recover_rename_swap(
         path,
         old_prefix=".tombstones-old-",
@@ -758,14 +756,7 @@ def _fold_tombstone_set(
     if n_drop == 0:
         return 0
     kept = tomb.join(live, id_col, "semi")
-    tmp = os.path.join(path, f".tombstones-tmp-{uuid.uuid4().hex[:8]}")
-    kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if lease is not None:
-        verify_maintainer_lease(lease)  # fencing before the commit renames
-    old = os.path.join(path, f".tombstones-old-{uuid.uuid4().hex[:8]}")
-    os.rename(tdir, old)
-    os.rename(tmp, tdir)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_tombstones(path, kept, lease)
     return n_drop
 
 
@@ -921,17 +912,22 @@ def _tombstone_ids(
         merged = existing.unionByName(new_ids).distinct()
     else:
         merged = ids.distinct()
-    tmp = os.path.join(path, f".tombstones-tmp-{uuid.uuid4().hex[:8]}")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+    _swap_tombstones(path, merged, lease)
+
+
+def _swap_tombstones(path: str, ids: DataFrame, lease: dict | None) -> None:
+    """Write ``ids`` as the index's whole tombstone set and swap it in;
+    ``recover_tombstones`` repairs a crash between the renames."""
+    token = uuid.uuid4().hex[:8]
+    tmp = os.path.join(path, f".tombstones-tmp-{token}")
+    ids.coalesce(1).write.mode("overwrite").parquet(tmp)
     if lease is not None:
         verify_maintainer_lease(lease)  # fencing before the commit renames
-    if os.path.isdir(tdir):
-        old = os.path.join(path, f".tombstones-old-{uuid.uuid4().hex[:8]}")
-        os.rename(tdir, old)
-        os.rename(tmp, tdir)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        os.rename(tmp, tdir)
+    rename_swap(
+        tmp,
+        os.path.join(path, "tombstones"),
+        os.path.join(path, f".tombstones-old-{token}"),
+    )
 
 
 def remove_from_ivf_index(

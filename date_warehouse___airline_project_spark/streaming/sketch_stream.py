@@ -239,32 +239,7 @@ def run_grouped_hll_stream(
             F.col("_p").getItem(0).alias("grp"),
             F.col("_p").getItem(1).cast("long").alias("user_id"),
         ).where(F.col("grp").isNotNull() & F.col("user_id").isNotNull())
-        # reuse the global register computation per group: hll_registers
-        # groups only by idx, so apply it via a grouped re-aggregation
-        from ..functions.hashing import hash56
-
-        lbv = spark.createDataFrame(
-            [(j, 1 << j) for j in range(50)], "j int, lowbit long"
-        )
-        parts = parsed.select(
-            "grp", hash56(F.col("user_id")).alias("hv")
-        ).select(
-            "grp",
-            (F.col("hv") % 64).alias("idx"),
-            F.expr("hv div 64").alias("rest"),
-        )
-        regs = (
-            parts.join(
-                F.broadcast(lbv), F.expr("rest & (-rest)") == F.col("lowbit"), "left"
-            )
-            .select(
-                "grp",
-                "idx",
-                F.when(F.col("rest") == 0, F.lit(51)).otherwise(F.col("j") + 1).alias("rank"),
-            )
-            .groupBy("grp", "idx")
-            .agg(F.max("rank").alias("r"))
-        )
+        regs = hll_registers(parsed, "user_id", ["grp"])
         fold_into_state(spark, state_dir, batch_id, regs, merge_grouped_registers)
 
     writer = (

@@ -4,10 +4,12 @@ maintenance (Count-Min cells, continuous aggregates).
 One pattern, two invariants:
 
   * **Atomic swap-in.** New state is fully written to a ``.tmp-*`` sibling,
-    then renamed live (the previous state renamed aside first). A crash can
-    leave a brief no-live-dir window but never partial data;
-    ``recover_state`` repairs that window at start and inside every batch
-    by restoring the newest ``.old-*`` backup and sweeping stale siblings.
+    then ``sources/swap.py::rename_swap`` renames it live (the previous
+    state renamed aside first, and put back if the swap fails). A crash
+    can leave a brief no-live-dir window but never partial data;
+    ``recover_state`` (``recover_rename_swap``) repairs that window at
+    start and inside every batch by restoring the newest ``.old-*``
+    backup and sweeping stale siblings.
   * **Idempotent fold.** foreachBatch is AT-LEAST-ONCE and a sum/merge fold
     is not idempotent, so the last-applied ``batch_id`` is written INSIDE
     the state dir in the same swap; a redelivered batch id is skipped.
@@ -32,6 +34,8 @@ from collections.abc import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.swap import recover_rename_swap, rename_swap
 
 _BATCH_ID_FILE = "_last_batch_id"  # underscore-prefixed: parquet readers skip it
 
@@ -336,11 +340,12 @@ def guard_append_only(
 
 
 # ---------------------------------------------------------------------------
-# Marker-file commit protocol (shared by the IVF compaction/takedown, the
-# release-state compaction, and — in its rename-swap form — the shard
-# takedown). One primitive, three thin adapters: the three crash protocols
-# MUST stay behaviorally identical, and three hand-maintained near-copies
-# were the drift risk the round-8 review flagged.
+# Marker-file commit protocol (shared by the IVF compaction/takedown and
+# the release-state compaction; directories replaced whole without a
+# marker go through ``sources/swap.py::rename_swap``). One primitive,
+# thin adapters: the crash protocols MUST stay behaviorally identical,
+# and hand-maintained near-copies were the drift risk the round-8 review
+# flagged.
 #
 # Protocol: every replaced relation is fully written to a tmp location,
 # then a marker file {"token": ..., "batches": [...]} is committed via
@@ -439,40 +444,6 @@ def recover_marker_commit(
                 os.remove(full)  # orphaned half-written marker tmp
 
 
-def recover_rename_swap(
-    root: str,
-    old_prefix: str,
-    tmp_prefix: str,
-    live_of: Callable[[str], str],
-    sweep_orphans: bool = True,
-) -> None:
-    """The per-item rename-swap recovery (shard takedown's shape): an
-    ``<old_prefix><token>-<item>`` backup with NO live dir
-    (``live_of(item)``, a dirname under ``root``) means the crash hit
-    between the two renames — roll BACK by restoring the backup (the
-    rewrite is idempotent and re-runnable, so restoring the pre-swap
-    item is always safe); a backup WITH a live dir is post-swap debris —
-    delete it, along with any leftover ``<tmp_prefix>*`` root. ``<item>``
-    is the partition value after the last ``-`` of the backup name.
-    ``sweep_orphans=False`` is the READER form (see
-    ``recover_marker_commit``): restore stranded backups — a reader
-    needs the live dir back — but never delete a ``<tmp_prefix>*``
-    sibling, which may be a maintainer's in-flight build."""
-    if not os.path.isdir(root):
-        return
-    for name in os.listdir(root):
-        if name.startswith(old_prefix):
-            item = name.rsplit("-", 1)[1]
-            live = os.path.join(root, live_of(item))
-            old = os.path.join(root, name)
-            if not os.path.isdir(live):
-                os.rename(old, live)  # roll back the half-swapped item
-            else:
-                shutil.rmtree(old, ignore_errors=True)
-        elif sweep_orphans and name.startswith(tmp_prefix):
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-
-
 def last_applied_batch_id(state_dir: str) -> int:
     """Batch id folded into the current state, -1 if none/absent."""
     path = os.path.join(state_dir, _BATCH_ID_FILE)
@@ -485,27 +456,16 @@ def last_applied_batch_id(state_dir: str) -> int:
 def recover_state(state_dir: str) -> None:
     """Repair the swap after a crash and sweep stale siblings.
 
-    Crash window between ``rename(state_dir, old)`` and
-    ``rename(tmp, state_dir)`` leaves NO live state dir — without
-    recovery the next batch would take the 'no state' branch and
-    silently restart the state from empty while the checkpoint still
-    marks earlier batches done. Restore the newest backup (always a
-    consistent pre-batch state; the interrupted batch redelivers and
-    re-applies on top), then delete every leftover ``.tmp-*``/``.old-*``.
+    Crash window between the two renames of ``rename_swap`` leaves NO
+    live state dir — without recovery the next batch would take the 'no
+    state' branch and silently restart the state from empty while the
+    checkpoint still marks earlier batches done. ``recover_rename_swap``
+    restores the newest backup (always a consistent pre-batch state; the
+    interrupted batch redelivers and re-applies on top), then deletes
+    every leftover ``.tmp-*``/``.old-*``.
     """
-    parent = os.path.dirname(state_dir) or "."
-    base = os.path.basename(state_dir)
-    if not os.path.isdir(parent):
-        return
-    sibs = [os.path.join(parent, n) for n in os.listdir(parent)]
-    olds = [p for p in sibs if os.path.basename(p).startswith(f"{base}.old-")]
-    tmps = [p for p in sibs if os.path.basename(p).startswith(f"{base}.tmp-")]
-    if not os.path.exists(state_dir) and olds:
-        newest = max(olds, key=os.path.getmtime)
-        os.rename(newest, state_dir)
-        olds.remove(newest)
-    for p in olds + tmps:
-        shutil.rmtree(p, ignore_errors=True)
+    parent, base = os.path.split(state_dir)
+    recover_rename_swap(parent or ".", f"{base}.old-", f"{base}.tmp-", lambda _: base)
 
 
 def fold_into_state(
@@ -545,14 +505,9 @@ def swap_in_state(state_dir: str, batch_id: int, merged: DataFrame) -> None:
     ``batch_id`` in the same swap. ``merged`` may lazily READ the live
     ``state_dir`` — it is fully materialized into the ``.tmp-*`` sibling
     before any rename touches the live dir."""
-    tmp = f"{state_dir}.tmp-{uuid.uuid4().hex[:8]}"
+    token = uuid.uuid4().hex[:8]
+    tmp = f"{state_dir}.tmp-{token}"
     merged.write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, _BATCH_ID_FILE), "w", encoding="ascii") as f:
         f.write(str(batch_id))
-    if os.path.exists(state_dir):
-        old = f"{state_dir}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(state_dir, old)
-        os.rename(tmp, state_dir)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, state_dir)
+    rename_swap(tmp, state_dir, f"{state_dir}.old-{token}")

@@ -4544,6 +4544,33 @@ def test_kafka_log_batch_roundtrip(spark, tmp_path):
     assert all(len(ps) == 1 for ps in keyed.values())
 
 
+def test_kafka_log_partition_number_names_its_file(spark, tmp_path):
+    """With 10 or more partitions the partition ``send`` returns, the
+    ``p<N>.jsonl`` it wrote and the reader's ``partition`` column agree
+    (a name sort would order p10 before p2)."""
+    from date_warehouse___airline_project_spark.sources.kafka_log import (
+        KafkaLogProducer,
+        register_kafka_log_source,
+    )
+
+    root = str(tmp_path / "log")
+    prod = KafkaLogProducer(root, 12)
+    p, offset = prod.send("t", "x", key="K")
+    prod.close()
+    tdir = os.path.join(root, "t")
+    written = [n for n in os.listdir(tdir) if os.path.getsize(os.path.join(tdir, n))]
+    assert written == [f"p{p}.jsonl"]
+    register_kafka_log_source(spark)
+    rows = (
+        spark.read.format("kafkalog")
+        .option("path", root)
+        .option("subscribe", "t")
+        .load()
+        .collect()
+    )
+    assert [(r["partition"], r["offset"]) for r in rows] == [(p, offset)]
+
+
 def test_eligibility_stream_over_kafka_log_source(spark, tmp_path, flights_df):
     """r11: S10 EXECUTED — the eligibility worker pipeline consumes a
     Kafka-shaped topic end-to-end (subscribe/startingOffsets options,

@@ -3,7 +3,7 @@
 # plan-shape audit. Mirrors what the external driver and judge check.
 set -e
 cd "$(dirname "$0")/.."
-python -m pytest tests/ -q
+python -m pytest tests/ -q --durations=25
 # The benchmark reads package internals (similarity._KMEANS_MEMO,
 # text_dedup._DERIVED_CACHE, set_memo_instrumentation,
 # drain_memo_timings) and wraps four names on the clean_file module
