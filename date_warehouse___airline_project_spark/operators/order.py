@@ -7,13 +7,17 @@ transaction-id forward-fill repair (cleaning.py:554-570). A naive
 sort — unacceptable at scale. ``ffill_repair_ids`` instead does the
 classic two-pass scan fix-up:
 
-  pass 1 (narrow, parallel): partition-local last-valid-id via a window
-          partitioned by spark_partition_id()
+  pass 1 (parallel): partition-local last-valid-id via a window
+          partitioned by spark_partition_id(); unless the input is
+          already one partition, the plan hash-partitions the rows on
+          that id (a shuffle of the data, each input partition kept
+          whole in one task)
   pass 2 (tiny): one row per partition (last valid id) aggregated,
           prefix-carried on the driver (bounded by #partitions, like a
-          dim fetch), broadcast-joined back
+          dim fetch), broadcast-joined back. Skipped when the input is
+          planned as one partition, whose carry-in is always null.
 
-No global sort, no shuffle of the data itself.
+No global sort.
 """
 
 from __future__ import annotations
@@ -42,9 +46,13 @@ def ffill_repair_ids(df: DataFrame, id_col: str, valid_regex: str = "^[0-9]+$") 
     Reference semantics (cleaning.py:554-570): coerce non-matching ids to
     null, forward-fill the last numeric id in ingest order, invalid rows
     get prev+1. Rows before any valid id stay null (quarantined later).
+
+    Building the result runs a Spark job (pass 2's bounds) only when the
+    input is not known to be one partition.
     """
     if INGEST_COL not in df.columns:
         df = with_ingest_order(df)
+    one_partition = _planned_as_one_partition(df)
     df = df.withColumn(_PID, F.spark_partition_id())
     numeric = F.when(F.col(id_col).rlike(valid_regex), F.col(id_col).cast("long"))
     df = df.withColumn("_id_num", numeric)
@@ -55,6 +63,36 @@ def ffill_repair_ids(df: DataFrame, id_col: str, valid_regex: str = "^[0-9]+$") 
     )
     df = df.withColumn("_local_ffill", F.last("_id_num", ignorenulls=True).over(local_w))
 
+    if one_partition:
+        repaired = F.col("_local_ffill")
+    else:
+        df = _join_carry_in(df)
+        repaired = F.coalesce(F.col("_local_ffill"), F.col("_carry_in"))
+    return (
+        df.withColumn(
+            id_col,
+            F.when(F.col("_id_num").isNotNull(), F.col(id_col)).otherwise(
+                (repaired + 1).cast("string")
+            ),
+        )
+        .drop(_PID, "_id_num", "_local_ffill", "_carry_in")
+    )
+
+
+def _planned_as_one_partition(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan has exactly one partition, read off
+    the planned RDD without running a job. An adaptive plan (one with a
+    shuffle) learns its final partition count only by running its
+    shuffles, so it counts as not one partition."""
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return False
+    return qe.toRdd().getNumPartitions() == 1
+
+
+def _join_carry_in(df: DataFrame) -> DataFrame:
+    """Pass 2: attach ``_carry_in``, the last valid id of all earlier
+    partitions, to every row of ``df``."""
     # pass 2: last valid id per partition → prefix carry-in per partition.
     # ONE aggregate over every partition (valid-less partitions included —
     # their _last_valid comes back null), so no extra distinct() scan just
@@ -84,15 +122,4 @@ def ffill_repair_ids(df: DataFrame, id_col: str, valid_regex: str = "^[0-9]+$") 
     carry_df = df.sparkSession.createDataFrame(
         carry_rows, schema=f"{_PID} int, _carry_in long"
     )
-    df = df.join(F.broadcast(carry_df), on=_PID, how="left")
-
-    repaired = F.coalesce(F.col("_local_ffill"), F.col("_carry_in"))
-    return (
-        df.withColumn(
-            id_col,
-            F.when(F.col("_id_num").isNotNull(), F.col(id_col)).otherwise(
-                (repaired + 1).cast("string")
-            ),
-        )
-        .drop(_PID, "_id_num", "_local_ffill", "_carry_in")
-    )
+    return df.join(F.broadcast(carry_df), on=_PID, how="left")

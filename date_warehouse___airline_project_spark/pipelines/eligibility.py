@@ -13,8 +13,18 @@ scheduled_departure, actual_departure):
   * full reasons enum: delay_threshold_met | delay_below_threshold |
     flight_not_found | invalid_time_format | missing_time_data
 
-The streaming form (streaming/eligibility_stream.py) reuses this exact
-plan via a stream-static join — same function, both execution modes.
+Two steps, so each execution mode pays the reduction once:
+
+  * ``latest_flights`` reduces the flights table to its latest row per
+    flight (a shuffle on flight_number);
+  * ``join_verdicts`` left-joins requests to that reduced relation and
+    derives the verdict columns.
+
+``check_eligibility`` is the batch form, the two steps in one plan. The
+streaming form (streaming/eligibility_stream.py) runs ``latest_flights``
+once when the query starts, materializes it, and stream-static joins
+every micro-batch through the same ``join_verdicts``, so tests of the
+batch form certify the verdict logic of both modes.
 """
 
 from __future__ import annotations
@@ -38,8 +48,14 @@ def latest_flights(flights: DataFrame) -> DataFrame:
 
 
 def check_eligibility(requests: DataFrame, flights: DataFrame) -> DataFrame:
-    """Left join requests → latest flight; verdict columns per the enum."""
-    fl = latest_flights(flights).select(
+    """Verdicts of ``requests`` against the latest row of each flight."""
+    return join_verdicts(requests, latest_flights(flights))
+
+
+def join_verdicts(requests: DataFrame, latest: DataFrame) -> DataFrame:
+    """Left join requests → ``latest`` (one row per flight_number, as
+    ``latest_flights`` returns); verdict columns per the enum."""
+    fl = latest.select(
         F.col("flight_number").alias("_fl_number"),
         F.col("scheduled_departure").try_cast("timestamp").alias("_sched"),
         F.col("actual_departure").try_cast("timestamp").alias("_actual"),

@@ -3,10 +3,11 @@
 Local testing runs a single JVM (``local[N]``); production target is a
 multi-executor cluster reading ~100 TB. Every config here is chosen to be
 correct for both: AQE handles runtime re-planning (partition coalescing,
-skew joins), shuffle partitions default to the local core count but are
-overridable via env for cluster runs, and the session timezone is pinned
-UTC so results are reproducible (and comparable to the DuckDB oracle,
-whose timestamps are UTC-naive).
+skew joins), shuffle partitions default to 32 whatever the core count
+(an upper bound AQE coalesces down; overridable via
+``SPARK_GRAFT_SHUFFLE_PARTITIONS`` for cluster runs), and the session
+timezone is pinned UTC so results are reproducible (and comparable to
+the DuckDB oracle, whose timestamps are UTC-naive).
 """
 
 from __future__ import annotations

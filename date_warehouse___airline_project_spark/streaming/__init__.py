@@ -6,7 +6,8 @@ results table → realtime push, spread over three processes
 shapes collapse into single fault-tolerant Structured Streaming queries:
 
   eligibility_stream   message stream → parse (raw fallback) →
-                       stream-static join vs flights → verdict exprs →
+                       stream-static join vs the latest-flight snapshot
+                       materialized at start → verdict exprs →
                        foreachBatch {one toArrow; audit part; type filter
                        → results part}
   windows              watermarked tumbling/sliding/session aggregations

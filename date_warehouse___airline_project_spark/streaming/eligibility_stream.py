@@ -9,11 +9,12 @@ delay/eligibility with a six-value reasons enum, and appends
 
 Spark-first collapse: ONE streaming query, its plan built once.
 
+  at start: latest flight row per flight_number, materialized once
   readStream (Kafka values; the kafkalog source reads them on the driver)
     → from_json with raw-string fallback (kafkaworker.js:47-52 JSON.parse
       try/catch re-expressed as a null-check coalesce — F-J2)
-    → stream-static left join vs the latest flight row → verdict columns,
-      one row per message (``processed_at`` is the micro-batch timestamp)
+    → stream-static left join vs that snapshot → verdict columns, one row
+      per message (``processed_at`` is the micro-batch timestamp)
     → foreachBatch, one Spark action (``toArrow``) per micro-batch, then
       pyarrow on the driver:
         audit part      (every message, kafka_messages shape — ST2/ST5)
@@ -31,10 +32,21 @@ an uplift over the reference's at-least-once consumer. The parts are
 message-sized, like the relation ``kafka_log_values_sink`` collects; with
 the real connector ``maxOffsetsPerTrigger`` bounds a backlog.
 
-The verdict logic is ``pipelines.eligibility.check_eligibility`` — the
-exact same lazy plan serves batch and streaming (stream-static joins are
-natively supported), so correctness tests on the batch form certify the
-streaming form.
+The verdict logic is ``pipelines.eligibility.join_verdicts``, the same
+function the batch ``check_eligibility`` runs, so correctness tests on
+the batch form certify the streaming form. The flights side is reduced
+by ``latest_flights`` and materialized (an eager ``localCheckpoint``)
+once, when the query starts, so a micro-batch runs only its message side
+plus the broadcast of the snapshot. The snapshot's blocks are released
+when the query terminates (stopped, failed, or done with its
+``availableNow`` backlog).
+
+Snapshot semantics: ``spark.read.parquet`` fixes its file listing when
+the DataFrame is created, so the stream never saw files added to the
+flights table after the call; it now also serves those files' content as
+of the start. Restarting the query re-materializes the snapshot, and a
+batch replayed on restart replaces its own parts (below), so a replay
+answers from the new snapshot without duplicating rows.
 """
 
 from __future__ import annotations
@@ -47,8 +59,10 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQueryListener
 
-from ..pipelines.eligibility import check_eligibility
+from ..operators.text_dedup import _release_blocks
+from ..pipelines.eligibility import join_verdicts, latest_flights
 from ..sources.sinks import write_parquet_file
 
 # kafkaworker.js:67-70 message envelope: {type, payload:{passengerId,
@@ -74,6 +88,8 @@ MESSAGE_SCHEMA = T.StructType(
 # the audit part's columns (kafka_messages shape); the results part takes
 # the verdict rows' columns other than the message's raw value and type
 _AUDIT_COLUMNS = ["batch_id", "raw_value", "type", "processed_at"]
+
+_QUERY_NAME = "eligibility_stream"
 
 
 def parse_messages(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -223,9 +239,19 @@ def run_eligibility_stream(
     kafka_messages_source(...)`` to run the identical plan off a real
     topic — the source emits the same ``value: string`` shape, so the rest
     of the pipeline is unchanged. Returns the StreamingQuery handle.
+
+    The latest row per flight of ``flights`` is computed and materialized
+    here, once; every micro-batch joins that snapshot (see the module
+    docstring for what this fixes), and its blocks are released when the
+    query terminates.
     """
     raw = source if source is not None else spark.readStream.format("text").load(input_dir)
-    rows = check_eligibility(parse_messages(raw, "value"), flights)
+    # Not persist(): AQE does not coalesce a cached plan's partitions in
+    # this session, so the window's 32 shuffle partitions would each be a
+    # task of every batch's broadcast job; the checkpoint keeps the
+    # partitions AQE coalesced.
+    latest = latest_flights(flights).localCheckpoint(eager=True)
+    rows = join_verdicts(parse_messages(raw, "value"), latest)
     result_columns = [c for c in rows.columns if c not in ("raw_value", "type")]
     # parts are named per checkpoint, so two queries sharing an output
     # directory never replace each other's batches
@@ -249,8 +275,45 @@ def run_eligibility_stream(
     writer = (
         rows.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .queryName("eligibility_stream")
+        .queryName(_QUERY_NAME)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    releaser = _ReleaseOnTermination(spark, latest)
+    spark.streams.addListener(releaser)
+    try:
+        return writer.start()
+    except BaseException:
+        releaser.release()
+        raise
+
+
+class _ReleaseOnTermination(StreamingQueryListener):
+    """Releases the flight snapshot of one eligibility query when that
+    query terminates, then unregisters itself.
+
+    The query is recognised by its start event: Spark delivers
+    ``onQueryStarted`` synchronously, on the query's own thread, before
+    ``start()`` returns, and no two active queries of a session share a
+    name, so the first start named ``_QUERY_NAME`` after registration is
+    this listener's query. Termination events arrive later, from the
+    listener bus."""
+
+    def __init__(self, spark: SparkSession, snapshot: DataFrame) -> None:
+        self._spark, self._snapshot = spark, snapshot
+        self._run_id = None
+
+    def release(self) -> None:
+        self._spark.streams.removeListener(self)
+        _release_blocks(self._snapshot)
+
+    def onQueryStarted(self, event) -> None:
+        if self._run_id is None and event.name == _QUERY_NAME:
+            self._run_id = event.runId
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        if event.runId == self._run_id:
+            self.release()

@@ -91,6 +91,24 @@ def test_ffill_repair_plan_uses_broadcast_carry(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
+def test_ffill_repair_one_partition_builds_without_a_job(spark, tmp_path):
+    # A one-partition input (a small CSV upload) has no carry-in to
+    # compute, so building the repaired relation runs no Spark job.
+    path = tmp_path / "sales.csv"
+    path.write_text("transactionid\n40001\n4AN\n40007\n4G4\n4GW\n")
+    df = spark.read.option("header", True).csv(str(path))
+    sc = spark.sparkContext
+    sc.setJobGroup("ffill-one-partition", "build")
+    try:
+        out = ffill_repair_ids(df, "transactionid")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup("ffill-one-partition")) == 0
+    got = [r["transactionid"] for r in out.orderBy("_ingest_order").collect()]
+    assert got == ["40001", "40002", "40007", "40008", "40008"]
+
+
 def test_fuzzy_correct(spark):
     dim = spark.createDataFrame([("JFK",), ("LAX",), ("SFO",)], ["airportkey"])
     df = spark.createDataFrame([("JFX",), ("LAX",), ("ZZZ",)], ["code"])

@@ -4807,6 +4807,124 @@ def test_eligibility_stream_output_schemas(spark, tmp_path, flights_df):
         "P0": 180, "P1": 180, "P5": None}
 
 
+def test_eligibility_stream_verdicts_equal_batch_form(spark, tmp_path, flights_df):
+    """The stream answers the messages exactly as the batch
+    ``check_eligibility`` answers the same requests, the latest of
+    AA100's two flight rows included."""
+    from date_warehouse___airline_project_spark.pipelines import check_eligibility
+    from date_warehouse___airline_project_spark.streaming import parse_messages
+
+    msgs = [("P1", "eligibility_check", "AA100"), ("P2", "eligibility_check", "BB200"),
+            ("P3", "eligibility_check", "CC300"), ("P4", "eligibility_check", "DD400"),
+            ("P5", "eligibility_check", "ZZ999"), ("P6", "other_event", "AA100")]
+    _, results, _ = _eligibility_over_kafka_log(spark, tmp_path, flights_df, msgs)
+    values = spark.createDataFrame([(_msg(t, p, f),) for p, t, f in msgs], ["value"])
+    requests = (
+        parse_messages(values)
+        .filter(F.col("type") == "eligibility_check")
+        .drop("raw_value", "type")
+    )
+    want = check_eligibility(requests, flights_df).drop("processed_at")
+    got = spark.read.parquet(results).select(*want.columns)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert {r.passenger_id: r.delay_minutes for r in got.collect()}["P1"] == 180
+
+
+def _kafka_log_eligibility_query(spark, tmp_path, flights_df, root):
+    """A continuously triggered eligibility stream over the kafkalog topic
+    ``requests`` under ``root``, with its outputs under ``tmp_path``."""
+    from date_warehouse___airline_project_spark.streaming.eligibility_stream import (
+        kafka_log_messages_source,
+    )
+
+    return run_eligibility_stream(
+        spark, "unused", flights_df,
+        *(str(tmp_path / d) for d in ("audit", "results", "ckpt")),
+        available_now=False, source=kafka_log_messages_source(spark, root, "requests"),
+    )
+
+
+def _drain_listener_bus(spark) -> None:
+    """Wait until every posted Spark event has reached its listeners: job
+    counts and query-termination callbacks are delivered asynchronously."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+
+
+def test_eligibility_stream_batch_runs_two_jobs(spark, tmp_path, flights_df):
+    """The latest-flight side is reduced once, when the query starts: after
+    the first micro-batch, no batch launches more than two Spark jobs under
+    the stream's job group (the broadcast of the flight snapshot and the
+    batch's one action). The flights are read from parquet, as deployed:
+    its size statistics let the planner broadcast the snapshot."""
+    from date_warehouse___airline_project_spark.sources.kafka_log import KafkaLogProducer
+
+    flights_df.write.parquet(str(tmp_path / "flights"))
+    root = str(tmp_path / "log")
+    prod = KafkaLogProducer(root, n_partitions=2)
+    prod.send("requests", _msg("eligibility_check", "P0", "AA100"), key="P0")
+    q = _kafka_log_eligibility_query(
+        spark, tmp_path, spark.read.parquet(str(tmp_path / "flights")), root)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs() -> int:
+        _drain_listener_bus(spark)
+        return len(tracker.getJobIdsForGroup(str(q.runId)))
+
+    per_batch = []
+    try:
+        q.processAllAvailable()
+        for i, flight in enumerate(("BB200", "ZZ999", "AA100"), start=1):
+            before = jobs()
+            prod.send("requests", _msg("eligibility_check", f"P{i}", flight), key=f"P{i}")
+            q.processAllAvailable()
+            per_batch.append(jobs() - before)
+        batch_ids = [p.batchId for p in q.recentProgress if p.numInputRows > 0]
+    finally:
+        q.stop()
+        prod.close()
+    assert batch_ids == [0, 1, 2, 3]
+    assert max(per_batch) <= 2, per_batch
+
+
+def test_eligibility_stream_releases_its_flight_snapshot(spark, tmp_path, flights_df):
+    """The flight snapshot holds blocks while the query runs and none once
+    it is stopped, and its listener unregisters; a restart on the same
+    checkpoint materializes the snapshot again, keeps the earlier verdicts
+    and answers only the new message."""
+    from date_warehouse___airline_project_spark.sources.kafka_log import KafkaLogProducer
+
+    jsc = spark.sparkContext._jsc.sc()
+    stored_before = {i.id() for i in jsc.getRDDStorageInfo()}
+    listeners_before = len(spark._jsparkSession.streams().listListeners())
+    root = str(tmp_path / "log")
+    prod = KafkaLogProducer(root, n_partitions=2)
+
+    def serve(pid: str, flight: str) -> list:
+        prod.send("requests", _msg("eligibility_check", pid, flight), key=pid)
+        q = _kafka_log_eligibility_query(spark, tmp_path, flights_df, root)
+        try:
+            q.processAllAvailable()
+            held = {i.id() for i in jsc.getRDDStorageInfo()} - stored_before
+        finally:
+            q.stop()
+        _drain_listener_bus(spark)
+        assert held, "the snapshot was not stored while the query ran"
+        assert not {i.id() for i in jsc.getRDDStorageInfo()} & held
+        assert len(spark._jsparkSession.streams().listListeners()) == listeners_before
+        rows = spark.read.parquet(str(tmp_path / "results")).drop("processed_at")
+        return sorted(map(tuple, rows.collect()))
+
+    try:
+        first = serve("P1", "AA100")
+        second = serve("P2", "BB200")
+    finally:
+        prod.close()
+    assert len(first) == 1 and first[0][0] == "P1"
+    assert [r for r in second if r[0] == "P1"] == first
+    assert [(r[0], r[-1]) for r in second] == [
+        ("P1", "delay_threshold_met"), ("P2", "delay_below_threshold")]
+
+
 def test_kafka_log_stream_starting_offsets_latest(spark, tmp_path):
     """``startingOffsets=latest`` skips what the topic held at the start;
     each message sent after it is read once, with its partition offset."""

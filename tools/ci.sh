@@ -3,7 +3,10 @@
 # plan-shape audit. Mirrors what the external driver and judge check.
 set -e
 cd "$(dirname "$0")/.."
-python -m pytest tests/ -q --durations=25
+# tier-1 under the same time bound and environment as the ROADMAP
+# tier-1 command, so a run that would be killed there fails here too
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+    timeout -k 10 2670 python -m pytest tests/ -q -p no:cacheprovider --durations=25
 # The benchmark reads package internals (similarity._KMEANS_MEMO,
 # text_dedup._DERIVED_CACHE, set_memo_instrumentation,
 # drain_memo_timings) and wraps four names on the clean_file module
