@@ -1,39 +1,39 @@
-"""validity_split — the core cleaner shape (SURVEY §2.2 P1).
+"""with_quarantine_reason — the core cleaner shape (SURVEY §2.2 P1).
 
 The reference builds a boolean mask and materializes df[mask] / df[~mask]
-(cleaning.py:386-388 et al.). Spark-first: ONE validity expression, two
-lazy filters off the same plan. Lazy means nothing is shared between
-ACTIONS: a count or write of each branch re-runs the whole upstream plan
-(for the transactions cleaner: 2 CSV scans and 4 exchanges over the two
-branches, none reused, in the pre-AQE plans). Only inside one plan — the
-branches unioned back together — does Spark reuse the shared exchange
-(1 scan, 1 ``ReusedExchange``). A caller that runs several actions over
-both branches should materialize them once, as ``pipelines/clean_file.py``
-does with one tagged, checkpointed union.
+(cleaning.py:386-388 et al.). Here a cleaner states each check ONCE, as an
+ordered list of ``(reason, predicate)`` rules, and gets back one relation
+tagged with ``quarantine_reason``: the name of the first rule whose
+predicate is not true, null when every rule holds. Clean rows are the ones
+with a null reason, so clean ∪ quarantine == input, disjoint, always.
+
+One relation, not two lazy filters: every action over a lazy branch
+re-runs the whole upstream plan, so a caller that runs several actions
+(counts, the staging write, the quarantine export) materializes the tagged
+relation once and filters it, as ``pipelines/clean_file.py`` does.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+REASON_COL = "quarantine_reason"
 
-def validity_split(
-    df: DataFrame, valid: Column, reason: Column | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Return (clean, quarantine).
 
-    ``reason`` optionally annotates quarantine rows with why they failed
-    (the reference loses this; we keep it — it is free).
+def with_quarantine_reason(
+    df: DataFrame, rules: Sequence[tuple[str, Column]]
+) -> DataFrame:
+    """Append ``quarantine_reason``: the first failing rule's name, or null.
 
-    Null semantics: a null predicate means *invalid* (pandas boolean masks
-    treat NaN comparisons as False), so quarantine is ``NOT coalesce(valid,
-    false)`` — clean ∪ quarantine == input, disjoint, always.
+    Null semantics: a null predicate is a failure (pandas boolean masks
+    treat NaN comparisons as False), so a row whose check cannot be
+    evaluated is quarantined under that check's name, never with an empty
+    reason.
     """
-    v = F.coalesce(valid, F.lit(False))
-    tagged = df.withColumn("_valid", v)
-    clean = tagged.filter(F.col("_valid")).drop("_valid")
-    quarantine = tagged.filter(~F.col("_valid")).drop("_valid")
-    if reason is not None:
-        quarantine = quarantine.withColumn("quarantine_reason", reason)
-    return clean, quarantine
+    reason = F.lit(None).cast("string")
+    for name, ok in reversed(rules):
+        reason = F.when(F.coalesce(ok, F.lit(False)), reason).otherwise(F.lit(name))
+    return df.withColumn(REASON_COL, reason)

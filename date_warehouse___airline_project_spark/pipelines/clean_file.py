@@ -6,10 +6,11 @@ What disappears vs the reference: the Node→Python child process, the 2 s
 PostgREST schema-cache sleep, and the per-call REST round-trips.
 
 The cleaning plan (CSV scan, ffill repair, dedup windows) runs ONCE per
-call: the cleaner's two branches are unioned into one relation tagged
-``_q`` and materialized by an eager ``localCheckpoint``; the row counts
-(one ``groupBy("_q")``), the staging upsert and the quarantine export all
-read that checkpoint. Left lazy, every one of those actions re-ran the
+call: the cleaner's one relation, tagged with ``quarantine_reason``, is
+materialized by an eager ``localCheckpoint``; the row counts (one
+``groupBy`` on whether the reason is null), the staging upsert (the rows
+with no reason) and the quarantine export (the others) all read that
+checkpoint. Left lazy, every one of those actions re-ran the
 whole cleaning plan. ``rows_in`` stays a separate count of the CSV, so
 ``rows_in == rows_clean + rows_quarantined`` is a real check. The run logs
 are written without Spark (``sinks.append_log``).
@@ -27,6 +28,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.split import REASON_COL
 from ..operators.text_dedup import _release_blocks
 from ..sources.csv import read_csv_all_string
 from ..sources.merge_target import ParquetMergeTarget
@@ -102,45 +104,43 @@ def clean_file(
     log_step("EXTRACT", "SUCCESS", rows=rows_in)
 
     if file_type == "airlines":
-        clean, quar = clean_airlines(df)
+        cleaned = clean_airlines(df)
     elif file_type == "airports":
-        clean, quar = clean_airports(df)
+        cleaned = clean_airports(df)
     elif file_type == "flights":
         airlines = _staging(spark, staging_root, STAGING_TABLES["airlines"], ["airlinekey"])
         airports = _staging(spark, staging_root, STAGING_TABLES["airports"], ["airportkey"])
-        clean, quar = clean_flights(df, airlines, airports)
+        cleaned = clean_flights(df, airlines, airports)
     elif file_type == "passengers":
-        clean, quar = clean_passengers(df)
+        cleaned = clean_passengers(df)
     elif file_type == "transactions":
-        clean, quar = clean_transactions(df)
+        cleaned = clean_transactions(df)
     else:
-        clean, quar = clean_airlinesales(df)
+        cleaned = clean_airlinesales(df)
 
     # One materialized relation feeds every consumer below. Not persist():
     # AQE does not coalesce a cached plan's partitions in this session
     # (canChangeCachedPlanOutputPartitioning is off), so a 300-row upload
     # would be cached as 32 partitions (one task each per read) where the
     # checkpoint holds one.
-    tagged = (
-        clean.withColumn("_q", F.lit(False))
-        .unionByName(quar.withColumn("_q", F.lit(True)), allowMissingColumns=True)
-        .localCheckpoint(eager=True)
-    )
+    tagged = cleaned.localCheckpoint(eager=True)
+    is_clean = F.col(REASON_COL).isNull()
     try:
-        counts = dict(tagged.groupBy("_q").count().collect())
-        rows_clean, rows_quar = counts.get(False, 0), counts.get(True, 0)
+        counts = dict(tagged.groupBy(is_clean).count().collect())
+        rows_clean, rows_quar = counts.get(True, 0), counts.get(False, 0)
 
         staging_table = STAGING_TABLES[file_type]
         outcome = safe_upsert(
-            tagged.filter(~F.col("_q")).select(*clean.columns),
+            tagged.filter(is_clean).drop(REASON_COL),
             os.path.join(staging_root, staging_table),
             UPSERT_KEYS[file_type],
         )
         log_step("LOAD_STAGING", "SUCCESS", outcome=outcome, rows=rows_clean)
 
         quar_path = os.path.join(quarantine_dir, f"quarantined_{file_type}.csv")
-        # quar.columns: the column order is part of the CSV's bytes
-        write_quarantine_csv(tagged.filter(F.col("_q")).select(*quar.columns), quar_path)
+        # the cleaned columns, then the reason: the order is part of the
+        # CSV's bytes
+        write_quarantine_csv(tagged.filter(~is_clean), quar_path)
         log_step("QUARANTINE_EXPORT", "SUCCESS", rows=rows_quar)
     finally:
         _release_blocks(tagged)

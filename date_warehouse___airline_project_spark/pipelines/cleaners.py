@@ -1,8 +1,11 @@
 """The six cleaning pipelines (SURVEY §3.1; reference cleaning.py:314-764).
 
-Each takes an all-string DataFrame (see sources/csv.py) and returns
-``(clean, quarantine)`` — two lazy plans off one scan. Column names are
-the lower-cased forms the reference produces. No collects, no Python UDFs:
+Each takes an all-string DataFrame (see sources/csv.py) and returns one
+relation: the cleaned columns plus ``quarantine_reason``, null on clean
+rows. Every check, the keep-first duplicate checks included, is stated
+once, in the cleaner's ordered ``(reason, predicate)`` rule list
+(operators/split.py). Column names are the lower-cased forms the
+reference produces. No collects, no Python UDFs:
 every rule is a Column expression; the only driver-side data is the
 bounded per-partition boundary fold inside ffill_repair_ids.
 
@@ -25,10 +28,10 @@ from ..functions.strings import (
     strip_non_alpha,
     title_case,
 )
-from ..operators.dedup import DUPE_COL, mark_keyed_dupes
+from ..operators.dedup import first_per_key
 from ..operators.fuzzy import fuzzy_correct
 from ..operators.order import INGEST_COL, ffill_repair_ids, with_ingest_order
-from ..operators.split import validity_split
+from ..operators.split import with_quarantine_reason
 
 ALLIANCES = ("Oneworld", "SkyTeam", "Star Alliance", "None")
 LOYALTY = ("Bronze", "Silver", "Gold", "Platinum")
@@ -59,7 +62,7 @@ def _map_lookup(col, mapping: dict[str, str], default):
     return expr
 
 
-def clean_airlines(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+def clean_airlines(df: DataFrame) -> DataFrame:
     """Airlines dim cleaner (cleaning.py:314-393).
 
     normalize key (trim+upper) and name (title, collapse); default name to
@@ -101,31 +104,22 @@ def clean_airlines(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
     )
 
-    df = mark_keyed_dupes(df, ["airlinekey"])
-    valid = (
-        F.col("airlinekey").rlike("^[A-Z0-9]{2,3}$")
-        & F.col("airlinename").rlike(r"^[A-Za-z0-9\s\.\-\&]+$")
-        & ~F.col(DUPE_COL)
-    )
-    reason = (
-        F.when(~F.col("airlinekey").rlike("^[A-Z0-9]{2,3}$"), "invalid_airlinekey")
-        .when(~F.col("airlinename").rlike(r"^[A-Za-z0-9\s\.\-\&]+$"), "invalid_airlinename")
-        .when(F.col(DUPE_COL), "duplicate_airlinekey")
-    )
-    clean, quar = validity_split(df, valid, reason)
-    return clean.drop(DUPE_COL, INGEST_COL), quar.drop(DUPE_COL, INGEST_COL)
+    return with_quarantine_reason(df, [
+        ("invalid_airlinekey", F.col("airlinekey").rlike("^[A-Z0-9]{2,3}$")),
+        ("invalid_airlinename", F.col("airlinename").rlike(r"^[A-Za-z0-9\s\.\-\&]+$")),
+        ("duplicate_airlinekey", first_per_key(["airlinekey"])),
+    ]).drop(INGEST_COL)
 
 
-def clean_airports(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Airports cleaner — pass-through per the reference (cleaning.py:514-518);
-    empty quarantine with matching schema."""
-    df = _lower_cols(df)
-    return df, df.limit(0)
+def clean_airports(df: DataFrame) -> DataFrame:
+    """Airports cleaner — pass-through per the reference (cleaning.py:514-518):
+    no rules, so every row's reason is null."""
+    return with_quarantine_reason(_lower_cols(df), [])
 
 
 def clean_flights(
     df: DataFrame, airlines_dim: DataFrame, airports_dim: DataFrame
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Flights cleaner (cleaning.py:399-452).
 
     upper keys; hard fix JK→JFK (cleaning.py:404); fuzzy-correct origin/
@@ -169,33 +163,20 @@ def clean_flights(
         F.broadcast(prefix_ok), F.col("_prefix2") == F.col("_ok_prefix"), "left"
     ).drop("_ok_prefix")
 
-    df = mark_keyed_dupes(df, ["flightkey"])
-    valid = (
-        F.col("flightkey").rlike(r"^[A-Za-z0-9]{2}\d+$")
-        & F.coalesce(F.col("_prefix_ok"), F.lit(False))
-        & F.col("originairportkey").rlike("^[A-Za-z]{3}$")
-        & F.col("destinationairportkey").rlike("^[A-Za-z]{3}$")
-        & (F.col("originairportkey") != F.col("destinationairportkey"))
-        & ~F.col(DUPE_COL)
-    )
-    reason = (
-        F.when(~F.col("flightkey").rlike(r"^[A-Za-z0-9]{2}\d+$"), "invalid_flightkey")
-        .when(F.col("_prefix_ok").isNull(), "invalid_airline_prefix")
-        .when(~F.col("originairportkey").rlike("^[A-Za-z]{3}$"), "invalid_origin")
-        .when(~F.col("destinationairportkey").rlike("^[A-Za-z]{3}$"), "invalid_destination")
-        .when(
-            F.col("originairportkey") == F.col("destinationairportkey"),
-            "origin_equals_destination",
-        )
-        .when(F.col(DUPE_COL), "duplicate_flightkey")
-    )
-    drop = [DUPE_COL, INGEST_COL, "_prefix2", "_prefix_ok",
-            "originairportkey_fuzzy_score", "destinationairportkey_fuzzy_score"]
-    clean, quar = validity_split(df, valid, reason)
-    return clean.drop(*drop), quar.drop(*drop)
+    return with_quarantine_reason(df, [
+        ("invalid_flightkey", F.col("flightkey").rlike(r"^[A-Za-z0-9]{2}\d+$")),
+        # true, or null where the left join found no airline
+        ("invalid_airline_prefix", F.col("_prefix_ok")),
+        ("invalid_origin", F.col("originairportkey").rlike("^[A-Za-z]{3}$")),
+        ("invalid_destination", F.col("destinationairportkey").rlike("^[A-Za-z]{3}$")),
+        ("origin_equals_destination",
+         F.col("originairportkey") != F.col("destinationairportkey")),
+        ("duplicate_flightkey", first_per_key(["flightkey"])),
+    ]).drop(INGEST_COL, "_prefix2", "_prefix_ok",
+            "originairportkey_fuzzy_score", "destinationairportkey_fuzzy_score")
 
 
-def clean_passengers(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+def clean_passengers(df: DataFrame) -> DataFrame:
     """Passengers cleaner (cleaning.py:458-508).
 
     title fullname; lower email and strip the passenger key's digits (with
@@ -218,31 +199,20 @@ def clean_passengers(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         .withColumn("loyaltystatus", capitalize_first(strip_non_alpha(F.col("loyaltystatus"))))
     )
 
-    df = mark_keyed_dupes(df, ["fullname", "email", "loyaltystatus"])
-    valid = (
-        F.col("passengerkey").isNotNull()
-        & F.col("fullname").rlike(r"^[A-Za-z]+(\s+[A-Za-z]+)+$")
-        & F.col("email").rlike(r"^[a-z0-9]+([._][a-z0-9]+)*@example\.com$")
-        & F.col("loyaltystatus").isin(*LOYALTY)
-        & ~F.col(DUPE_COL)
-    )
-    reason = (
-        F.when(F.col("passengerkey").isNull(), "missing_passengerkey")
-        .when(~F.col("fullname").rlike(r"^[A-Za-z]+(\s+[A-Za-z]+)+$"), "invalid_fullname")
-        .when(
-            ~F.col("email").rlike(r"^[a-z0-9]+([._][a-z0-9]+)*@example\.com$"), "invalid_email"
-        )
-        .when(~F.col("loyaltystatus").isin(*LOYALTY), "invalid_loyaltystatus")
-        .when(F.col(DUPE_COL), "duplicate_passenger")
-    )
-    clean, quar = validity_split(df, valid, reason)
-    return clean.drop(DUPE_COL, INGEST_COL), quar.drop(DUPE_COL, INGEST_COL)
+    return with_quarantine_reason(df, [
+        ("missing_passengerkey", F.col("passengerkey").isNotNull()),
+        ("invalid_fullname", F.col("fullname").rlike(r"^[A-Za-z]+(\s+[A-Za-z]+)+$")),
+        ("invalid_email",
+         F.col("email").rlike(r"^[a-z0-9]+([._][a-z0-9]+)*@example\.com$")),
+        ("invalid_loyaltystatus", F.col("loyaltystatus").isin(*LOYALTY)),
+        ("duplicate_passenger", first_per_key(["fullname", "email", "loyaltystatus"])),
+    ]).drop(INGEST_COL)
 
 
 MONEY_COLS = ("ticketprice", "taxes", "baggagefees", "totalamount")
 
 
-def clean_transactions(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+def clean_transactions(df: DataFrame) -> DataFrame:
     """Travel-agency sales cleaner (cleaning.py:538-614) — the main slice.
 
     ffill+1 repair of non-numeric transaction ids (order-dependent, done
@@ -259,48 +229,24 @@ def clean_transactions(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     df = df.withColumn("transactiondate", F.date_format(
         to_standard_date("transactiondate"), "yyyy-MM-dd"))
 
-    df = mark_keyed_dupes(df, ["transactionid"])
-    exact_keys = [c for c in df.columns if c not in (INGEST_COL, DUPE_COL)]
-    df = df.withColumnRenamed(DUPE_COL, "_dupe_id")
-    df = mark_keyed_dupes(df, exact_keys).withColumnRenamed(DUPE_COL, "_dupe_row")
-
-    valid = (
-        F.col("transactionid").rlike(r"^4\d{4}$")
-        & F.col("transactiondate").isNotNull()
-        & F.col("passengerid").rlike(r"^P[0-8]\d{4}$")
-        & F.col("flightid").rlike(r"^[A-Z]{1,2}\d{1,5}$")
-        & ~F.col("_dupe_id")
-        & ~F.col("_dupe_row")
-    )
-    reason = (
-        F.when(~F.col("transactionid").rlike(r"^4\d{4}$"), "invalid_transactionid")
-        .when(F.col("transactiondate").isNull(), "unparseable_date")
-        .when(
-            ~F.coalesce(F.col("passengerid").rlike(r"^P[0-8]\d{4}$"), F.lit(False)),
-            "invalid_passengerid",
-        )
-        .when(
-            ~F.coalesce(F.col("flightid").rlike(r"^[A-Z]{1,2}\d{1,5}$"), F.lit(False)),
-            "invalid_flightid",
-        )
-        .when(F.col("_dupe_row"), "duplicate_row")
-        .when(F.col("_dupe_id"), "duplicate_transactionid")
-    )
-    clean, quar = validity_split(df, valid, reason)
-    drop = ["_dupe_id", "_dupe_row", INGEST_COL]
-    return clean.drop(*drop), quar.drop(*drop)
+    exact_keys = [c for c in df.columns if c != INGEST_COL]
+    return with_quarantine_reason(df, [
+        ("invalid_transactionid", F.col("transactionid").rlike(r"^4\d{4}$")),
+        ("unparseable_date", F.col("transactiondate").isNotNull()),
+        ("invalid_passengerid", F.col("passengerid").rlike(r"^P[0-8]\d{4}$")),
+        ("invalid_flightid", F.col("flightid").rlike(r"^[A-Z]{1,2}\d{1,5}$")),
+        ("duplicate_row", first_per_key(exact_keys)),
+        ("duplicate_transactionid", first_per_key(["transactionid"])),
+    ]).drop(INGEST_COL)
 
 
-def clean_airlinesales(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+def clean_airlinesales(df: DataFrame) -> DataFrame:
     """Airline-direct sales cleaner (cleaning.py:737-764): money parse on
     ticketprice, non-null unique transactionid keep-first."""
     df = with_ingest_order(_lower_cols(df))
     if "ticketprice" in df.columns:
         df = df.withColumn("ticketprice", parse_money(F.col("ticketprice")))
-    df = mark_keyed_dupes(df, ["transactionid"])
-    valid = F.col("transactionid").isNotNull() & ~F.col(DUPE_COL)
-    reason = F.when(F.col("transactionid").isNull(), "missing_transactionid").when(
-        F.col(DUPE_COL), "duplicate_transactionid"
-    )
-    clean, quar = validity_split(df, valid, reason)
-    return clean.drop(DUPE_COL, INGEST_COL), quar.drop(DUPE_COL, INGEST_COL)
+    return with_quarantine_reason(df, [
+        ("missing_transactionid", F.col("transactionid").isNotNull()),
+        ("duplicate_transactionid", first_per_key(["transactionid"])),
+    ]).drop(INGEST_COL)

@@ -1,6 +1,2 @@
 from .catalog import TABLES, load_table, load_tables  # noqa: F401
-from .merge_target import (  # noqa: F401
-    DeltaMergeTarget,
-    ParquetMergeTarget,
-    make_merge_target,
-)
+from .merge_target import ParquetMergeTarget  # noqa: F401

@@ -35,10 +35,16 @@ Because the log is driver-local, the streaming reader is a
 ``SimpleDataSourceStreamReader``: the driver-side source process reads a
 micro-batch's new lines while it plans the batch's end offset and hands
 them to the engine with the plan, so a batch runs no executor Python task
-for its source. A read stops before a line not yet terminated by its
-newline. Only recovery, replaying a batch from the checkpoint's offset
-log, reads through ``readBetweenOffsets`` in an executor task. The batch
-reader keeps one input partition per topic partition.
+for its source. Only recovery, replaying a batch from the checkpoint's
+offset log, reads through ``readBetweenOffsets`` in an executor task. The
+batch reader keeps one input partition per topic partition.
+
+Every read of a partition file, the producer's offset count included, goes
+through one line scanner (``_complete_lines``), which stops before a line
+not yet terminated by its newline: a torn tail (a line being written, or
+one a crashed writer left) is not part of the log. A fresh producer cuts such a
+tail off before its first append, so its next line starts on a line
+boundary.
 """
 
 from __future__ import annotations
@@ -75,11 +81,44 @@ def _partition_files(root: str, topic: str) -> list[str]:
     return [os.path.join(tdir, parts[p]) for p in sorted(parts)]
 
 
-def _line_count(path: str) -> int:
-    if not os.path.exists(path):
-        return 0
+def _complete_lines(f) -> Iterator[bytes]:
+    """The lines of an open partition file up to the last complete one."""
+    for line in iter(f.readline, b""):
+        if not line.endswith(b"\n"):
+            return  # a line still being written, or left torn by a crash
+        yield line
+
+
+def _scan(
+    path: str,
+    topic: str,
+    p: int,
+    start: int | None = None,
+    end: int | None = None,
+) -> tuple[list[tuple], int]:
+    """Rows of partition ``p`` at offsets [start, end) and the offset
+    after the last complete line scanned. ``end=None`` scans to the last
+    complete line; ``start=None`` only counts."""
+    rows, offset = [], 0
     with open(path, "rb") as f:
-        return sum(1 for _ in f)
+        for line in _complete_lines(f):
+            if end is not None and offset >= end:
+                break
+            if start is not None and offset >= start:
+                rows.append(_record(line, topic, p, offset))
+            offset += 1
+    return rows, offset
+
+
+def _cut_torn_tail(path: str) -> int:
+    """Truncate ``path`` after its last complete line; return the number
+    of complete lines, the partition's next offset."""
+    n = size = 0
+    with open(path, "rb+") as f:
+        for line in _complete_lines(f):
+            n, size = n + 1, size + len(line)
+        f.truncate(size)
+    return n
 
 
 class KafkaLogProducer:
@@ -137,10 +176,12 @@ class KafkaLogProducer:
     def _next_offset(self, topic: str, p: int, path: str) -> int:
         # cached per producer instance (a second producer would re-count
         # from the file — single-writer per topic, the Kafka-partition
-        # leader discipline); counting per send would be O(n^2)
+        # leader discipline); counting per send would be O(n^2). The
+        # first count also cuts off a torn tail a crashed writer left,
+        # which the next append would otherwise extend into a bad line.
         key = (topic, p)
         if key not in self._offsets:
-            self._offsets[key] = _line_count(path)
+            self._offsets[key] = _cut_torn_tail(path)
         return self._offsets[key]
 
     def send(
@@ -184,16 +225,6 @@ def _record(line: str | bytes, topic: str, partition: int, offset: int) -> tuple
     )
 
 
-def _read_range(part: _OffsetRange) -> Iterator[tuple]:
-    with open(part.path, encoding="utf-8") as f:
-        for offset, line in enumerate(f):
-            if offset < part.start:
-                continue
-            if offset >= part.end:
-                break
-            yield _record(line, part.topic, part.partition, offset)
-
-
 class KafkaLogBatchReader(DataSourceReader):
     """Batch form: the whole retained topic (Kafka's batch source with
     default earliest→latest range) — one input partition per topic
@@ -204,12 +235,13 @@ class KafkaLogBatchReader(DataSourceReader):
 
     def partitions(self) -> Sequence[InputPartition]:
         return [
-            _OffsetRange(f, self.topic, p, 0, _line_count(f))
+            _OffsetRange(f, self.topic, p, 0, _scan(f, self.topic, p)[1])
             for p, f in enumerate(_partition_files(self.root, self.topic))
         ]
 
     def read(self, partition: _OffsetRange) -> Iterator[tuple]:
-        return _read_range(partition)
+        p = partition
+        return iter(_scan(p.path, p.topic, p.partition, p.start, p.end)[0])
 
 
 class KafkaLogSimpleStreamReader(SimpleDataSourceStreamReader):
@@ -224,33 +256,16 @@ class KafkaLogSimpleStreamReader(SimpleDataSourceStreamReader):
         self.root, self.topic = root, topic
         self.starting = starting_offsets
 
-    def _scan(
-        self, p: int, path: str, start: int | None, end: int | None = None
-    ) -> tuple[list[tuple], int]:
-        """Rows of partition ``p`` at offsets [start, end) and the offset
-        after the last complete line scanned. ``end=None`` scans to the
-        last complete line; ``start=None`` only counts."""
-        rows, offset = [], 0
-        with open(path, "rb") as f:
-            while end is None or offset < end:
-                line = f.readline()
-                if not line.endswith(b"\n"):
-                    break  # end of file, or a line still being written
-                if start is not None and offset >= start:
-                    rows.append(_record(line, self.topic, p, offset))
-                offset += 1
-        return rows, offset
-
     def initialOffset(self) -> dict:
         files = _partition_files(self.root, self.topic)
         if self.starting == "latest":
-            return {str(p): self._scan(p, f, None)[1] for p, f in enumerate(files)}
+            return {str(p): _scan(f, self.topic, p)[1] for p, f in enumerate(files)}
         return {str(p): 0 for p in range(len(files))}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         rows, end = [], {}
         for p, f in enumerate(_partition_files(self.root, self.topic)):
-            got, end[str(p)] = self._scan(p, f, int(start.get(str(p), 0)))
+            got, end[str(p)] = _scan(f, self.topic, p, int(start.get(str(p), 0)))
             rows += got
         return iter(rows), end
 
@@ -258,7 +273,7 @@ class KafkaLogSimpleStreamReader(SimpleDataSourceStreamReader):
         rows = []
         for p, f in enumerate(_partition_files(self.root, self.topic)):
             s = int(start.get(str(p), 0))
-            rows += self._scan(p, f, s, int(end.get(str(p), s)))[0]
+            rows += _scan(f, self.topic, p, s, int(end.get(str(p), s)))[0]
         return iter(rows)
 
     def commit(self, end: dict) -> None:

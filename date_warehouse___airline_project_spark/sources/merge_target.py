@@ -2,33 +2,21 @@
 
 The reference's SCD2/upsert contract (table_configs.json:2-12 declares
 scdType 2 with per-layer on_conflict keys; the merge itself ran in an
-out-of-repo stored procedure) needs a transactional MERGE target. This
-module is the seam between that contract and whatever table format the
-deployment has:
+out-of-repo stored procedure) needs a transactional MERGE target. The
+contract callers depend on:
 
-  ``MergeTarget`` — the contract:
-    * ``upsert(df, key)``: last-write-wins per key, atomic for readers.
-    * ``apply_scd2(updates, natural_key, tracked, batch_ts)``: apply one
-      SCD2 batch (operators/scd2.py semantics) atomically.
-    * ``read()`` / ``exists()``: current table state.
+  * ``upsert(df, key)``: last-write-wins per key, atomic for readers.
+  * ``apply_scd2(updates, natural_key, tracked, batch_ts)``: apply one
+    SCD2 batch (operators/scd2.py semantics) atomically.
+  * ``read()`` / ``exists()``: current table state.
 
-  ``DeltaMergeTarget`` — the production implementation: a single
-    ``MERGE INTO`` / transactional overwrite on a Delta table. Incremental
-    (touches only changed files), concurrent-writer-safe, time-travelable.
-    Requires the ``delta-spark`` package + jars, which this container does
-    NOT have — constructing it without them raises ImportError with the
-    dependency named.
-
-  ``ParquetMergeTarget`` — the dependency-free FALLBACK this repo runs on:
-    MERGE emulated with joins + union (the same logical plan MERGE INTO
-    produces — one keyed shuffle per side), then a rewrite-the-world
-    atomic directory swap. Correct and idempotent, but O(table) I/O per
-    batch and single-writer only. At 100 TB you want the Delta target for
-    dims that churn; the parquet fallback remains fine for small dims and
-    for test environments.
-
-``make_merge_target`` picks Delta when importable, else parquet — callers
-depend only on the contract.
+``ParquetMergeTarget`` is the one implementation, dependency-free: MERGE
+emulated with joins + union (the same logical plan MERGE INTO produces —
+one keyed shuffle per side), then a rewrite-the-world atomic directory
+swap. Correct and idempotent, but O(table) I/O per batch and single-writer
+only. A table format with a transaction log (Delta, Iceberg) would turn
+``upsert`` into one incremental ``MERGE INTO``; this image has none, so no
+such target is kept here.
 """
 
 from __future__ import annotations
@@ -57,8 +45,8 @@ class ParquetMergeTarget:
     ``recover_rename_swap`` (restoring the newest backup and sweeping
     stale siblings), and ``exists``/``read`` run its reader form, which
     restores but never sweeps. TRUE reader-atomicity needs a transaction
-    log — that is exactly what the Delta target provides. Single-writer
-    by contract.
+    log, which a parquet directory does not have. Single-writer by
+    contract.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -121,76 +109,3 @@ class ParquetMergeTarget:
             new_dim = scd2_merge(current, updates, natural_key, tracked, batch_ts)
         self._swap_in(new_dim)
         return self.spark.read.parquet(self.path)
-
-
-class DeltaMergeTarget:
-    """Transactional Delta implementation of the MergeTarget contract.
-
-    upsert → one ``MERGE INTO`` (whenMatchedUpdateAll /
-    whenNotMatchedInsertAll); apply_scd2 → scd2_merge plan written as a
-    transactional overwrite (or, incrementally, a MERGE closing changed
-    versions + appending new ones). Needs delta-spark; import is deferred
-    so environments without it can still import this module.
-    """
-
-    def __init__(self, spark: SparkSession, path: str):
-        try:
-            from delta.tables import DeltaTable  # noqa: F401
-        except ImportError as e:  # pragma: no cover - container has no delta
-            raise ImportError(
-                "DeltaMergeTarget requires the delta-spark package and "
-                "io.delta jars on the Spark classpath; use "
-                "ParquetMergeTarget (make_merge_target falls back to it)"
-            ) from e
-        self.spark = spark
-        self.path = path
-
-    def exists(self) -> bool:  # pragma: no cover - needs delta
-        from delta.tables import DeltaTable
-
-        return DeltaTable.isDeltaTable(self.spark, self.path)
-
-    def read(self) -> DataFrame:  # pragma: no cover - needs delta
-        return self.spark.read.format("delta").load(self.path)
-
-    def upsert(self, df: DataFrame, key: Sequence[str]) -> str:  # pragma: no cover
-        from delta.tables import DeltaTable
-
-        # same in-batch per-key-uniqueness contract as ParquetMergeTarget
-        # (Delta MERGE errors when one target row matches multiple sources)
-        df = df.dropDuplicates(list(key))
-        if not self.exists():
-            df.write.format("delta").mode("overwrite").save(self.path)
-            return "inserted"
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in key)
-        (
-            DeltaTable.forPath(self.spark, self.path)
-            .alias("t")
-            .merge(df.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return "upserted"
-
-    def apply_scd2(
-        self,
-        updates: DataFrame,
-        natural_key: Sequence[str],
-        tracked: Sequence[str],
-        batch_ts: str,
-    ) -> DataFrame:  # pragma: no cover - needs delta
-        if not self.exists():
-            new_dim = scd2_init(updates, batch_ts)
-        else:
-            new_dim = scd2_merge(self.read(), updates, natural_key, tracked, batch_ts)
-        new_dim.write.format("delta").mode("overwrite").save(self.path)
-        return self.read()
-
-
-def make_merge_target(spark: SparkSession, path: str):
-    """Delta when available, parquet emulation otherwise."""
-    try:
-        return DeltaMergeTarget(spark, path)
-    except ImportError:
-        return ParquetMergeTarget(spark, path)

@@ -11,9 +11,8 @@ with Delta this is a single ``MERGE INTO``). The upsert itself is
 merge, last write wins per key, swapped in by
 ``sources/swap.py::rename_swap`` — so there is one merge
 implementation; this module adds only the reference's insert fallback.
-New code that does not need the fallback should take the
-format-agnostic seam (``make_merge_target`` → Delta when available,
-the parquet emulation otherwise).
+New code that does not need the fallback calls ``ParquetMergeTarget``
+directly.
 
 ``append_log`` writes its few rows with pyarrow on the driver: a log
 append is not worth a Spark job. ``write_parquet_file`` is its one

@@ -37,9 +37,12 @@ function the batch ``check_eligibility`` runs, so correctness tests on
 the batch form certify the streaming form. The flights side is reduced
 by ``latest_flights`` and materialized (an eager ``localCheckpoint``)
 once, when the query starts, so a micro-batch runs only its message side
-plus the broadcast of the snapshot. The snapshot's blocks are released
-when the query terminates (stopped, failed, or done with its
-``availableNow`` backlog).
+plus the broadcast of the snapshot. The stream's join carries a broadcast
+hint: without it, a flights input that has no size statistics (one built
+by ``spark.createDataFrame``) is planned as a sort-merge join, four jobs
+per batch instead of two. The batch ``check_eligibility`` keeps the
+planner's choice. The snapshot's blocks are released when the query
+terminates (stopped, failed, or done with its ``availableNow`` backlog).
 
 Snapshot semantics: ``spark.read.parquet`` fixes its file listing when
 the DataFrame is created, so the stream never saw files added to the
@@ -251,7 +254,7 @@ def run_eligibility_stream(
     # task of every batch's broadcast job; the checkpoint keeps the
     # partitions AQE coalesced.
     latest = latest_flights(flights).localCheckpoint(eager=True)
-    rows = join_verdicts(parse_messages(raw, "value"), latest)
+    rows = join_verdicts(parse_messages(raw, "value"), F.broadcast(latest))
     result_columns = [c for c in rows.columns if c not in ("raw_value", "type")]
     # parts are named per checkpoint, so two queries sharing an output
     # directory never replace each other's batches

@@ -178,6 +178,26 @@ def test_header_only_upload(spark, dirs):
     assert (dirs / "quarantine" / "quarantined_airlines.csv").read_bytes() == b"\n"
 
 
+def test_null_checks_export_their_reason(spark, dirs):
+    # empty CSV fields read as null: each quarantined row's reason is the
+    # check its null failed, never an empty field
+    import pandas as pd
+
+    csv = ("PassengerKey,FullName,Email,LoyaltyStatus\n"
+           "P00101,Ada Lovelace,ada.lovelace@example.com,Gold\n"
+           "P00102,,grace@example.com,Gold\n"
+           "P00103,Alan Turing,,Gold\n")
+    s = clean_file(spark, _write(dirs, "pax.csv", csv), "passengers",
+                   str(dirs / "staging"), str(dirs / "quarantine"))
+    assert (s["rows_in"], s["rows_clean"], s["rows_quarantined"]) == (3, 1, 2)
+    q = pd.read_csv(s["quarantine_csv"], encoding="utf-8-sig", dtype=str,
+                    keep_default_na=False)
+    assert list(q.columns) == ["passengerkey", "fullname", "email", "loyaltystatus",
+                               "quarantine_reason"]
+    assert dict(zip(q["passengerkey"], q["quarantine_reason"])) == {
+        "P00102": "invalid_fullname", "P00103": "invalid_email"}
+
+
 # --- storage released ---------------------------------------------------------
 
 

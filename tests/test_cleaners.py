@@ -17,8 +17,20 @@ from date_warehouse___airline_project_spark.pipelines import (
 )
 
 
+TXN_COLS = ["TransactionID", "TransactionDate", "PassengerID", "FlightID",
+            "TicketPrice", "Taxes", "BaggageFees", "TotalAmount"]
+PAX_COLS = ["PassengerKey", "FullName", "Email", "LoyaltyStatus"]
+
+
 def df_of(spark, cols, rows):
     return spark.createDataFrame(rows, cols).coalesce(1)
+
+
+def split(tagged):
+    """(clean, quarantine) of a cleaner's relation: the rows with no
+    reason, without the reason column, and the rest."""
+    reason = F.col("quarantine_reason")
+    return tagged.filter(reason.isNull()).drop(reason), tagged.filter(reason.isNotNull())
 
 
 def test_clean_airlines(spark):
@@ -32,7 +44,7 @@ def test_clean_airlines(spark):
         ("TOOLONG", "X Air", ""),                       # bad key
         ("B6", None, None),                             # name defaults to key
     ]
-    clean, quar = clean_airlines(df_of(spark, cols, rows))
+    clean, quar = split(clean_airlines(df_of(spark, cols, rows)))
     c = {r["airlinekey"]: r for r in clean.collect()}
     assert set(c) == {"AA", "DL", "VS", "AZ", "B6"}
     assert c["AA"]["airlinename"] == "American Airlines"
@@ -48,7 +60,7 @@ def test_clean_airlines(spark):
 def test_clean_airports_passthrough(spark):
     cols = ["AirportKey", "AirportName"]
     rows = [("JFK", "Kennedy"), ("JK", "Typo")]
-    clean, quar = clean_airports(df_of(spark, cols, rows))
+    clean, quar = split(clean_airports(df_of(spark, cols, rows)))
     assert clean.count() == 2 and quar.count() == 0
     assert clean.columns == ["airportkey", "airportname"]
 
@@ -69,7 +81,7 @@ def test_clean_flights(spark):
         ("AA103", "LAX", "LAX", "A320"),          # origin == dest → quarantine
         ("AA100", "SFO", "ORD", "B757"),          # dup flightkey → quarantine
     ]
-    clean, quar = clean_flights(df_of(spark, cols, rows), airlines, airports)
+    clean, quar = split(clean_flights(df_of(spark, cols, rows), airlines, airports))
     c = {r["flightkey"]: r for r in clean.collect()}
     assert set(c) == {"AA100", "AA101", "AA102"}
     assert c["AA101"]["originairportkey"] == "JFK"
@@ -81,7 +93,7 @@ def test_clean_flights(spark):
 
 
 def test_clean_passengers(spark):
-    cols = ["PassengerKey", "FullName", "Email", "LoyaltyStatus"]
+    cols = PAX_COLS
     rows = [
         ("P00101", "ada  lovelace", "ada.lovelace00101@example.com", "gold!"),
         ("P00102", "Grace Hopper", "GRACE.HOPPER@EXAMPLE.COM", "SILVER"),
@@ -89,7 +101,7 @@ def test_clean_passengers(spark):
         ("P00104", "Alan Turing", "alan@gmail.com", "Platinum"),      # domain → quarantine
         ("P00105", "Ada Lovelace", "ada.lovelace@example.com", "gold"),  # dup subset → quarantine
     ]
-    clean, quar = clean_passengers(df_of(spark, cols, rows))
+    clean, quar = split(clean_passengers(df_of(spark, cols, rows)))
     c = {r["passengerkey"]: r for r in clean.collect()}
     assert set(c) == {"P00101", "P00102"}
     # key digits (00101 and 101) removed from email, title-cased name, enum fixed
@@ -101,8 +113,7 @@ def test_clean_passengers(spark):
 
 
 def test_clean_transactions(spark):
-    cols = ["TransactionID", "TransactionDate", "PassengerID", "FlightID",
-            "TicketPrice", "Taxes", "BaggageFees", "TotalAmount"]
+    cols = TXN_COLS
     rows = [
         ("40001", "2023-01-10", "P00101", "AA100", "$1,540.00", "$154.00", "$40.00", "$1,734.00"),
         ("4AN",   "01/18/2023", "P00102", "DL200", "500.00", "50.00", "0.00", "550.00"),   # id repaired → 40002
@@ -112,7 +123,7 @@ def test_clean_transactions(spark):
         ("40021", "2023-03-01", "P90001", "AA103", "100", "10", "0", "110"),               # out-of-range pax → quarantine
         ("40022", "2023-03-02", "P00106", "",      "100", "10", "0", "110"),               # empty flight → quarantine
     ]
-    clean, quar = clean_transactions(df_of(spark, cols, rows))
+    clean, quar = split(clean_transactions(df_of(spark, cols, rows)))
     c = {r["transactionid"]: r for r in clean.collect()}
     assert set(c) == {"40001", "40002", "40010"}
     assert c["40001"]["ticketprice"] == 1540.00
@@ -127,7 +138,7 @@ def test_clean_transactions(spark):
 def test_clean_airlinesales(spark):
     cols = ["TransactionID", "TicketPrice"]
     rows = [("T1", "$99.50"), ("T1", "100"), (None, "50")]
-    clean, quar = clean_airlinesales(df_of(spark, cols, rows))
+    clean, quar = split(clean_airlinesales(df_of(spark, cols, rows)))
     c = clean.collect()
     assert len(c) == 1 and c[0]["ticketprice"] == 99.50
     assert quar.count() == 2
@@ -168,12 +179,37 @@ def test_eligibility_reasons_enum(spark):
 @pytest.mark.parametrize("n_parts", [1, 4])
 def test_transactions_partition_invariance(spark, n_parts):
     """clean ∪ quarantine == input regardless of partitioning."""
-    cols = ["TransactionID", "TransactionDate", "PassengerID", "FlightID",
-            "TicketPrice", "Taxes", "BaggageFees", "TotalAmount"]
+    cols = TXN_COLS
     rows = [
         (str(40000 + i), "2023-01-10", f"P0{i:04d}", "AA100", "10", "1", "0", "11")
         for i in range(1, 30)
     ]
     df = spark.createDataFrame(rows, cols).repartition(n_parts)
-    clean, quar = clean_transactions(df)
+    clean, quar = split(clean_transactions(df))
     assert clean.count() + quar.count() == len(rows)
+
+
+@pytest.mark.parametrize(
+    "cleaner, cols, row, reason",
+    [
+        # a null key fails the key's regex; the name defaults to the key
+        (clean_airlines, ["AirlineKey", "AirlineName", "Alliance"],
+         (None, "Some Air", "oneworld"), "invalid_airlinekey"),
+        # no numeric id before the first row: ffill leaves its id null
+        (clean_transactions, TXN_COLS,
+         ("4AN", "2023-01-10", "P00101", "AA100", "10", "1", "0", "11"),
+         "invalid_transactionid"),
+        (clean_passengers, PAX_COLS,
+         ("P00101", None, "ada@example.com", "Gold"), "invalid_fullname"),
+        (clean_passengers, PAX_COLS,
+         ("P00102", "Grace Hopper", None, "Gold"), "invalid_email"),
+    ],
+    ids=["airline_null_key", "transaction_unfilled_id", "passenger_null_name",
+         "passenger_null_email"],
+)
+def test_null_check_quarantines_under_its_rule(spark, cleaner, cols, row, reason):
+    """A check that evaluates to null fails, and names the row's reason:
+    no row is quarantined with an empty reason."""
+    schema = ", ".join(f"{c} string" for c in cols)
+    [got] = cleaner(spark.createDataFrame([row], schema)).collect()
+    assert got["quarantine_reason"] == reason

@@ -11,21 +11,30 @@ from date_warehouse___airline_project_spark.operators import (
     fuzzy_correct,
     latest_per_key,
     scd2_merge,
-    validity_split,
     with_ingest_order,
+    with_quarantine_reason,
 )
 from date_warehouse___airline_project_spark.operators.scd2 import scd2_init
 
 
 def test_validity_split_partitions_input(spark):
+    # the reason is the FIRST rule whose predicate is not true — a null
+    # predicate counts as a failure — and null when every rule holds
     df = spark.createDataFrame(
-        [("a", 1), ("b", None), ("c", 3)], ["k", "v"]
+        [("a", 1), ("b", None), ("c", 3), ("d", -4)], ["k", "v"]
     )
-    clean, quar = validity_split(df, F.col("v").isNotNull(), F.lit("null_v"))
-    assert {r["k"] for r in clean.collect()} == {"a", "c"}
-    q = quar.collect()
-    assert [r["k"] for r in q] == ["b"]
-    assert q[0]["quarantine_reason"] == "null_v"
+    tagged = with_quarantine_reason(df, [
+        ("null_v", F.col("v").isNotNull()),
+        ("negative_v", F.col("v") >= 0),
+    ])
+    assert tagged.columns == ["k", "v", "quarantine_reason"]
+    got = {r["k"]: r["quarantine_reason"] for r in tagged.collect()}
+    assert got == {"a": None, "b": "null_v", "c": None, "d": "negative_v"}
+    # a null predicate fails its own rule
+    only = with_quarantine_reason(df, [("negative_v", F.col("v") >= 0)])
+    assert only.filter("k = 'b'").first()["quarantine_reason"] == "negative_v"
+    # no rules: every row is clean
+    assert with_quarantine_reason(df, []).filter("quarantine_reason IS NULL").count() == 4
 
 
 def test_dedup_keep_first_in_ingest_order(spark):

@@ -1,7 +1,8 @@
 """Property-based tests (Hypothesis) for the cleaning layer — SURVEY §5.4:
 
   * partition property: clean ∪ quarantine == input, disjoint, for every
-    cleaner on arbitrary dirty input
+    cleaner on arbitrary dirty input; no clean row fails a check (a null
+    check included) and every quarantined row names the rule it failed
   * idempotence: re-cleaning already-clean rows quarantines nothing and
     changes nothing
   * money parsing: round-trips well-formed currency strings, nulls garbage
@@ -15,7 +16,7 @@ property runs a handful of jobs, not hundreds).
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -32,6 +33,18 @@ SETTINGS = dict(
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 
+
+def split(tagged):
+    """(clean, quarantine) of a cleaner's relation: the rows with no
+    reason, without the reason column, and the rest."""
+    reason = F.col("quarantine_reason")
+    return tagged.filter(reason.isNull()).drop(reason), tagged.filter(reason.isNotNull())
+
+
+def reasons(quar) -> set:
+    return {r[0] for r in quar.select("quarantine_reason").distinct().collect()}
+
+
 dirty_text = st.one_of(
     st.text(
         alphabet=st.characters(whitelist_categories=("Lu", "Ll", "Nd", "Zs"), max_codepoint=127),
@@ -46,47 +59,78 @@ dirty_text = st.one_of(
 @given(
     rows=st.lists(st.tuples(dirty_text, dirty_text, dirty_text), min_size=1, max_size=25)
 )
+@example(rows=[(None, "Some Air", "oneworld")])  # a null key, nothing else wrong
 @settings(**SETTINGS)
 def test_airlines_cleaner_partitions_input(spark, rows):
     df = spark.createDataFrame(
         rows, "airlinekey string, airlinename string, alliance string"
     )
     n = df.count()
-    clean, quar = clean_airlines(df)
+    clean, quar = split(clean_airlines(df))
     nc, nq = clean.count(), quar.count()
     assert nc + nq == n  # partition: nothing lost, nothing duplicated
-    # every clean row satisfies the declared invariants
-    bad = clean.filter(
-        ~F.col("airlinekey").rlike("^[A-Z0-9]{2,3}$")
-        | ~F.col("alliance").isin("Oneworld", "SkyTeam", "Star Alliance", "None")
-    ).count()
-    assert bad == 0
+    # every clean row satisfies the declared invariants; a null is a violation
+    ok = F.col("airlinekey").rlike("^[A-Z0-9]{2,3}$") & F.col("alliance").isin(
+        "Oneworld", "SkyTeam", "Star Alliance", "None"
+    )
+    assert clean.filter(~F.coalesce(ok, F.lit(False))).count() == 0
+    # every quarantined row names the rule it failed
+    assert reasons(quar) <= {
+        "invalid_airlinekey", "invalid_airlinename", "duplicate_airlinekey"
+    }
+
+
+def valid_or_dirty(*valid: str):
+    """Values that pass the column's check mixed with dirty ones, so a row
+    can fail on one null field alone."""
+    return st.one_of(st.sampled_from(valid), dirty_text)
 
 
 @given(
     rows=st.lists(
-        st.tuples(dirty_text, dirty_text, dirty_text, dirty_text, dirty_text),
+        st.tuples(
+            valid_or_dirty("40001", "40002", "4AN"),
+            valid_or_dirty("2023-01-10", "01/18/2023"),
+            valid_or_dirty("P00101", "P00102"),
+            valid_or_dirty("AA100", "DL200"),
+            valid_or_dirty("$1,540.00", "10"),
+        ),
         min_size=1,
         max_size=25,
     )
 )
+# no numeric id before the first row, so ffill leaves its id null
+@example(rows=[("4AN", "2023-01-10", "P00101", "AA100", "10")])
 @settings(**SETTINGS)
 def test_transactions_cleaner_partitions_input(spark, rows):
     cols = ["transactionid", "transactiondate", "passengerid", "flightid", "ticketprice"]
     df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
     n = df.count()
-    clean, quar = clean_transactions(df)
+    clean, quar = split(clean_transactions(df))
     assert clean.count() + quar.count() == n
     assert set(clean.columns) == set(cols)
     assert set(quar.columns) == set(cols) | {"quarantine_reason"}
+    # every clean row passes every check; a null is a failure
+    ok = (
+        F.col("transactionid").rlike(r"^4\d{4}$")
+        & F.col("transactiondate").isNotNull()
+        & F.col("passengerid").rlike(r"^P[0-8]\d{4}$")
+        & F.col("flightid").rlike(r"^[A-Z]{1,2}\d{1,5}$")
+    )
+    assert clean.filter(~F.coalesce(ok, F.lit(False))).count() == 0
+    # every quarantined row names the rule it failed
+    assert reasons(quar) <= {
+        "invalid_transactionid", "unparseable_date", "invalid_passengerid",
+        "invalid_flightid", "duplicate_row", "duplicate_transactionid",
+    }
 
 
 def test_airlines_cleaner_idempotent_on_clean_rows(spark):
     rows = [("AA", "American Airlines", "Oneworld"), ("LH", "Lufthansa", "Star Alliance")]
     df = spark.createDataFrame(rows, ["airlinekey", "airlinename", "alliance"])
-    clean1, quar1 = clean_airlines(df)
+    clean1, quar1 = split(clean_airlines(df))
     assert quar1.count() == 0
-    clean2, quar2 = clean_airlines(clean1)
+    clean2, quar2 = split(clean_airlines(clean1))
     assert quar2.count() == 0
     assert sorted(map(tuple, clean1.collect())) == sorted(map(tuple, clean2.collect()))
 

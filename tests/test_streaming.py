@@ -390,9 +390,9 @@ def test_csv_drop_dir_ingest_cleans_per_batch(spark, tmp_path):
     out: dict[str, int] = {}
 
     def process(batch_df, batch_id):
-        clean, quar = clean_airlinesales(batch_df)
-        out["clean"] = clean.count()
-        out["quar"] = quar.count()
+        tagged = clean_airlinesales(batch_df)
+        out["clean"] = tagged.filter("quarantine_reason IS NULL").count()
+        out["quar"] = tagged.filter("quarantine_reason IS NOT NULL").count()
 
     q = stream_csv_dir(
         spark,
@@ -4571,6 +4571,42 @@ def test_kafka_log_partition_number_names_its_file(spark, tmp_path):
     assert [(r["partition"], r["offset"]) for r in rows] == [(p, offset)]
 
 
+def test_kafka_log_torn_tail_is_not_part_of_the_log(spark, tmp_path):
+    """A line left unterminated by a crashed writer is outside the log:
+    the batch reader and the stream's ``latest`` offset both stop before
+    it, and a fresh producer cuts it off before appending, so its message
+    takes the torn line's offset and parses."""
+    from date_warehouse___airline_project_spark.sources.kafka_log import (
+        KafkaLogProducer,
+        KafkaLogSimpleStreamReader,
+        register_kafka_log_source,
+    )
+
+    root = str(tmp_path / "log")
+    prod = KafkaLogProducer(root, n_partitions=1)
+    prod.send("t", "first")
+    prod.close()
+    path = os.path.join(root, "t", "p0.jsonl")
+    with open(path, "a", encoding="utf-8") as f:
+        f.write('{"key": null, "value": "tor')
+    register_kafka_log_source(spark)
+
+    def values() -> list:
+        df = spark.read.format("kafkalog").option("path", root).option("subscribe", "t").load()
+        return [(r["offset"], bytes(r["value"]).decode()) for r in df.collect()]
+
+    assert values() == [(0, "first")]
+    latest = KafkaLogSimpleStreamReader(root, "t", "latest").initialOffset()
+    assert latest == {"0": 1}
+
+    prod = KafkaLogProducer(root, n_partitions=1)
+    assert prod.send("t", "second") == (0, 1)
+    prod.close()
+    assert values() == [(0, "first"), (1, "second")]
+    with open(path, encoding="utf-8") as f:
+        assert [json.loads(line)["value"] for line in f] == ["first", "second"]
+
+
 def test_eligibility_stream_over_kafka_log_source(spark, tmp_path, flights_df):
     """r11: S10 EXECUTED — the eligibility worker pipeline consumes a
     Kafka-shaped topic end-to-end (subscribe/startingOffsets options,
@@ -4854,36 +4890,39 @@ def test_eligibility_stream_batch_runs_two_jobs(spark, tmp_path, flights_df):
     """The latest-flight side is reduced once, when the query starts: after
     the first micro-batch, no batch launches more than two Spark jobs under
     the stream's job group (the broadcast of the flight snapshot and the
-    batch's one action). The flights are read from parquet, as deployed:
-    its size statistics let the planner broadcast the snapshot."""
+    batch's one action). That holds for flights read from parquet, as
+    deployed, and for an input without size statistics
+    (``createDataFrame``), which the planner alone would sort-merge join."""
     from date_warehouse___airline_project_spark.sources.kafka_log import KafkaLogProducer
 
     flights_df.write.parquet(str(tmp_path / "flights"))
-    root = str(tmp_path / "log")
-    prod = KafkaLogProducer(root, n_partitions=2)
-    prod.send("requests", _msg("eligibility_check", "P0", "AA100"), key="P0")
-    q = _kafka_log_eligibility_query(
-        spark, tmp_path, spark.read.parquet(str(tmp_path / "flights")), root)
-    tracker = spark.sparkContext.statusTracker()
+    inputs = {"parquet": spark.read.parquet(str(tmp_path / "flights")), "memory": flights_df}
+    for name, flights in inputs.items():
+        run_dir = tmp_path / name
+        root = str(run_dir / "log")
+        prod = KafkaLogProducer(root, n_partitions=2)
+        prod.send("requests", _msg("eligibility_check", "P0", "AA100"), key="P0")
+        q = _kafka_log_eligibility_query(spark, run_dir, flights, root)
+        tracker = spark.sparkContext.statusTracker()
 
-    def jobs() -> int:
-        _drain_listener_bus(spark)
-        return len(tracker.getJobIdsForGroup(str(q.runId)))
+        def jobs() -> int:
+            _drain_listener_bus(spark)
+            return len(tracker.getJobIdsForGroup(str(q.runId)))
 
-    per_batch = []
-    try:
-        q.processAllAvailable()
-        for i, flight in enumerate(("BB200", "ZZ999", "AA100"), start=1):
-            before = jobs()
-            prod.send("requests", _msg("eligibility_check", f"P{i}", flight), key=f"P{i}")
+        per_batch = []
+        try:
             q.processAllAvailable()
-            per_batch.append(jobs() - before)
-        batch_ids = [p.batchId for p in q.recentProgress if p.numInputRows > 0]
-    finally:
-        q.stop()
-        prod.close()
-    assert batch_ids == [0, 1, 2, 3]
-    assert max(per_batch) <= 2, per_batch
+            for i, flight in enumerate(("BB200", "ZZ999", "AA100"), start=1):
+                before = jobs()
+                prod.send("requests", _msg("eligibility_check", f"P{i}", flight), key=f"P{i}")
+                q.processAllAvailable()
+                per_batch.append(jobs() - before)
+            batch_ids = [p.batchId for p in q.recentProgress if p.numInputRows > 0]
+        finally:
+            q.stop()
+            prod.close()
+        assert batch_ids == [0, 1, 2, 3], name
+        assert max(per_batch) <= 2, (name, per_batch)
 
 
 def test_eligibility_stream_releases_its_flight_snapshot(spark, tmp_path, flights_df):

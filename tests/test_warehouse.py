@@ -113,33 +113,16 @@ def test_surrogate_keys_stable_and_fact_resolution(dims):
     assert all(r.booking_sk is not None for r in f2.values())
 
 
-def test_merge_target_seam_falls_back_to_parquet(spark, tmp_path):
-    # Container has no delta-spark: the factory must select the parquet
-    # emulation, and DeltaMergeTarget must fail loudly naming the dependency.
-    import pytest as _pytest
-
-    from date_warehouse___airline_project_spark.sources import (
-        DeltaMergeTarget,
-        ParquetMergeTarget,
-        make_merge_target,
-    )
-
-    t = make_merge_target(spark, str(tmp_path / "dim"))
-    assert isinstance(t, ParquetMergeTarget)
-    with _pytest.raises(ImportError, match="delta-spark"):
-        DeltaMergeTarget(spark, str(tmp_path / "d2"))
-
-
 def test_parquet_merge_target_upsert_and_scd2_contract(spark, tmp_path):
-    from date_warehouse___airline_project_spark.sources import make_merge_target
+    from date_warehouse___airline_project_spark.sources import ParquetMergeTarget
 
-    t = make_merge_target(spark, str(tmp_path / "tbl"))
+    t = ParquetMergeTarget(spark, str(tmp_path / "tbl"))
     assert not t.exists()
     assert t.upsert(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), ["k"]) == "inserted"
     assert t.upsert(spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"]), ["k"]) == "upserted"
     assert {(r.k, r.v) for r in t.read().collect()} == {(1, "a"), (2, "B"), (3, "c")}
 
-    d = make_merge_target(spark, str(tmp_path / "dim"))
+    d = ParquetMergeTarget(spark, str(tmp_path / "dim"))
     u1 = spark.createDataFrame([("bk1", "econ"), ("bk2", "biz")], ["booking_reference", "cls"])
     d.apply_scd2(u1, ["booking_reference"], ["cls"], "2026-01-01 00:00:00")
     u2 = spark.createDataFrame([("bk1", "first")], ["booking_reference", "cls"])
@@ -155,34 +138,12 @@ def test_parquet_merge_target_upsert_and_scd2_contract(spark, tmp_path):
     assert again.count() == 3
 
 
-@pytest.fixture(params=["parquet", "delta"])
-def merge_target_factory(request, spark, tmp_path):
-    """Build MergeTargets for each backend; the delta param skips where
-    delta-spark isn't importable (this container) so the lane has an
-    EXECUTABLE test wherever Delta exists and the seam can't rot."""
-    from date_warehouse___airline_project_spark.sources import (
-        DeltaMergeTarget,
-        ParquetMergeTarget,
-    )
+def test_parquet_merge_target_contract_with_in_batch_duplicates(spark, tmp_path):
+    # The upsert + SCD2 contract with an in-batch duplicate key in the
+    # upsert batch.
+    from date_warehouse___airline_project_spark.sources import ParquetMergeTarget
 
-    if request.param == "delta":
-        pytest.importorskip(
-            "delta.tables", reason="delta-spark not installed in this container"
-        )
-        ext = spark.conf.get("spark.sql.extensions", "")
-        if "DeltaSparkSessionExtension" not in (ext or ""):
-            pytest.skip(
-                "delta-spark importable but the session lacks the Delta "
-                "extension/jars (configure spark.sql.extensions to run)"
-            )
-        return lambda name: DeltaMergeTarget(spark, str(tmp_path / name))
-    return lambda name: ParquetMergeTarget(spark, str(tmp_path / name))
-
-
-def test_merge_target_contract_all_backends(spark, merge_target_factory):
-    # The IDENTICAL upsert + SCD2 scenario must hold on every backend —
-    # callers depend only on the MergeTarget contract, never the format.
-    t = merge_target_factory("tbl")
+    t = ParquetMergeTarget(spark, str(tmp_path / "tbl"))
     assert not t.exists()
     assert t.upsert(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), ["k"]) == "inserted"
     # update + insert + an in-batch duplicate key in one batch
@@ -192,7 +153,7 @@ def test_merge_target_contract_all_backends(spark, merge_target_factory):
     assert state[1] == "a" and state[2] == "B" and state[3] in ("c", "c2")
     assert t.read().groupBy("k").count().filter("count > 1").count() == 0
 
-    d = merge_target_factory("dim")
+    d = ParquetMergeTarget(spark, str(tmp_path / "dim"))
     u1 = spark.createDataFrame([("bk1", "econ"), ("bk2", "biz")], ["booking_reference", "cls"])
     d.apply_scd2(u1, ["booking_reference"], ["cls"], "2026-01-01 00:00:00")
     u2 = spark.createDataFrame([("bk1", "first")], ["booking_reference", "cls"])
@@ -211,9 +172,9 @@ def test_merge_target_contract_all_backends(spark, merge_target_factory):
 def test_parquet_merge_target_dedups_within_batch(spark, tmp_path):
     # the per-key-uniqueness contract must hold even when one batch
     # carries duplicate keys (Delta MERGE would reject such a batch)
-    from date_warehouse___airline_project_spark.sources import make_merge_target
+    from date_warehouse___airline_project_spark.sources import ParquetMergeTarget
 
-    t = make_merge_target(spark, str(tmp_path / "tbl"))
+    t = ParquetMergeTarget(spark, str(tmp_path / "tbl"))
     t.upsert(spark.createDataFrame([(1, "a"), (1, "b")], ["k", "v"]), ["k"])
     assert t.read().count() == 1
     t.upsert(spark.createDataFrame([(1, "c"), (1, "d"), (2, "e")], ["k", "v"]), ["k"])
