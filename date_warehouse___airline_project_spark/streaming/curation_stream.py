@@ -55,9 +55,17 @@ from pyspark.sql import functions as F
 
 from ..operators.quality import gopher_gate
 from .dedup_stream import content_fingerprint, merge_fingerprints
-from .state_table import fold_into_state, last_applied_batch_id, recover_state
+from .state_table import (
+    fold_into_state,
+    last_applied_batch_id,
+    read_json_lines,
+    read_state,
+    recover_state,
+    start_foreach_batch,
+)
 
 ACCT_SCHEMA = "source STRING, n_docs BIGINT, n_tokens BIGINT"
+_DOC_SCHEMA = "doc_id LONG, source STRING, text STRING"
 
 
 def batch_curate(
@@ -125,7 +133,6 @@ def run_curation_stream(
     acct_state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Continuously curate a JSON-lines drop dir
     (``{"doc_id": ..., "source": ..., "text": ...}`` per line).
@@ -135,14 +142,7 @@ def run_curation_stream(
     """
     recover_state(fp_state_dir)
     recover_state(acct_state_dir)
-    schema = "doc_id LONG, source STRING, text STRING"
-    raw = (
-        spark.readStream.format("text")
-        .load(input_dir)
-        .select(F.from_json("value", schema).alias("_r"))
-        .select("_r.doc_id", "_r.source", "_r.text")
-        .where(F.col("doc_id").isNotNull())
-    )
+    raw = read_json_lines(spark, input_dir, _DOC_SCHEMA)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         recover_state(fp_state_dir)
@@ -152,12 +152,7 @@ def run_curation_stream(
         # on the fingerprint state's batch id (recomputing the anti-join
         # after its own fingerprints folded would wrongly yield empty).
         if batch_id > last_applied_batch_id(fp_state_dir):
-            fp_state = (
-                spark.read.parquet(fp_state_dir)
-                if os.path.exists(fp_state_dir)
-                else None
-            )
-            accepted = batch_curate(batch_df, fp_state)
+            accepted = batch_curate(batch_df, read_state(spark, fp_state_dir))
             # idempotent output: a redelivered batch overwrites its own dir
             accepted.write.mode("overwrite").parquet(batch_out)
             fold_into_state(
@@ -178,14 +173,7 @@ def run_curation_stream(
                 spark, acct_state_dir, batch_id, acct, merge_accounting
             )
 
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("curation_stream")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(raw, process_batch, checkpoint_dir, "curation_stream")
 
 
 # ---------------------------------------------------------------------------
@@ -237,7 +225,6 @@ def run_curation_v2_stream(
     acct_state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Continuous v2 curation over a JSON-lines drop dir
     (``{"doc_id": ..., "source": ..., "text": ...}`` per line).
@@ -261,14 +248,7 @@ def run_curation_v2_stream(
 
     for s in (fp_state_dir, lsh_state_dir, acct_state_dir):
         recover_state(s)
-    schema = "doc_id LONG, source STRING, text STRING"
-    raw = (
-        spark.readStream.format("text")
-        .load(input_dir)
-        .select(F.from_json("value", schema).alias("_r"))
-        .select("_r.doc_id", "_r.source", "_r.text")
-        .where(F.col("doc_id").isNotNull())
-    )
+    raw = read_json_lines(spark, input_dir, _DOC_SCHEMA)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from .neardup_stream import neardup_filter
@@ -278,19 +258,11 @@ def run_curation_v2_stream(
         accepted_out = os.path.join(out_dir, "accepted", f"batch={batch_id}")
         fps_out = os.path.join(out_dir, "fps", f"batch={batch_id}")
         if batch_id > last_applied_batch_id(fp_state_dir):
-            fp_state = (
-                spark.read.parquet(fp_state_dir)
-                if os.path.exists(fp_state_dir)
-                else None
-            )
-            lsh_state = (
-                spark.read.parquet(lsh_state_dir)
-                if os.path.exists(lsh_state_dir)
-                else None
-            )
-            winners = batch_curate(batch_df, fp_state)
+            winners = batch_curate(batch_df, read_state(spark, fp_state_dir))
             winners.write.mode("overwrite").parquet(fps_out)
-            accepted = neardup_filter(spark.read.parquet(fps_out), lsh_state)
+            accepted = neardup_filter(
+                spark.read.parquet(fps_out), read_state(spark, lsh_state_dir)
+            )
             accepted.write.mode("overwrite").parquet(accepted_out)
             fold_into_state(
                 spark,
@@ -313,11 +285,4 @@ def run_curation_v2_stream(
                 spark, acct_state_dir, batch_id, acct, merge_accounting
             )
 
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("curation_v2_stream")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(raw, process_batch, checkpoint_dir, "curation_v2_stream")

@@ -30,6 +30,8 @@ against it keyed on fingerprint — never a scan of accepted documents.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,8 +39,11 @@ from .state_table import (
     fold_into_state,
     guard_append_only,
     last_applied_batch_id,
+    read_json_lines,
+    read_state,
     read_watermark,
     recover_state,
+    start_foreach_batch,
     write_watermark,
 )
 
@@ -169,36 +174,29 @@ def dedup_batch(docs: DataFrame, state: DataFrame | None) -> DataFrame:
     return first_wins.join(state, "fp", "left_anti")
 
 
-def run_incremental_dedup_stream(
+def _run_dedup_stream(
     spark: SparkSession,
     input_dir: str,
     state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
+    max_files_per_trigger: int | None,
+    dedup: Callable[[DataFrame, DataFrame | None], DataFrame],
+    processed_docs: Callable[[SparkSession, str, str, DataFrame], DataFrame],
+    fp_col: str,
+    query_name: str,
 ):
-    """Continuously accept only never-seen documents from a JSON-lines
-    drop dir (``{"doc_id": ..., "text": ...}`` per line).
-
-    Returns the StreamingQuery. The file source swaps for the Kafka
-    consumer unchanged — the batch plan needs only doc_id/text columns.
-    ``max_files_per_trigger`` caps files per micro-batch (ingestion
-    pacing; also how the replay-tolerance tests force a checkpoint reset
-    to RE-SPLIT old files into more batches than the original run).
-    """
+    """The incremental dedup runner both granularities share: each
+    micro-batch's accepted rows ``dedup(batch_df, state)`` are written to
+    ``out_dir/batch=<id>`` and their distinct ``fp_col`` values folded
+    into the seen-fingerprint state. ``processed_docs(spark, state_dir,
+    out_dir, batch_df)`` is the witness of the batch docs (a ``doc_id``
+    column) whose content the state has already processed."""
     import os
 
     recover_state(state_dir)
-    schema = "doc_id LONG, text STRING"
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = (
-        reader.load(input_dir)
-        .select(F.from_json("value", schema).alias("_r"))
-        .select("_r.doc_id", "_r.text")
-        .where(F.col("doc_id").isNotNull())
+    raw = read_json_lines(
+        spark, input_dir, "doc_id LONG, text STRING", max_files_per_trigger
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -214,14 +212,14 @@ def run_incremental_dedup_stream(
             # (permanent schema-inference wedge) nor a fileless output
             # dir; the checkpoint owns source progress
             return
+        wm_file = f"{state_dir}.max_doc_id"
         if batch_id <= last_applied_batch_id(state_dir):
             # already folded (possibly crashed before the watermark
             # write): catch the watermark up — over PROCESSED ids only —
             # so the append-only guard cannot later admit ids inside
             # this batch's folded range
             _catch_up_watermark(
-                _state_processed_docs(spark, state_dir, out_dir, batch_df),
-                f"{state_dir}.max_doc_id",
+                processed_docs(spark, state_dir, out_dir, batch_df), wm_file
             )
             return
         # enforce the append-only doc_id invariant: first-arrival-wins
@@ -233,24 +231,19 @@ def run_incremental_dedup_stream(
         # a batch id above last_applied may still be pure replay — if
         # every doc's content is already processed, skip cleanly instead
         # of wedging the stream forever; only novel content raises.
-        wm_file = f"{state_dir}.max_doc_id"
         try:
             batch_hi = guard_append_only(batch_df, read_watermark(wm_file))
         except ValueError:
-            processed = _state_processed_docs(
-                spark, state_dir, out_dir, batch_df
-            )
+            processed = processed_docs(spark, state_dir, out_dir, batch_df)
             if batch_df.join(
                 processed.select("doc_id"), "doc_id", "left_anti"
             ).isEmpty():
                 return  # pure replay under a re-split batch id
             raise
-        state = (
-            spark.read.parquet(state_dir) if os.path.exists(state_dir) else None
-        )
-        # persist: the accepted plan (state anti-join + window dedup) is
-        # executed twice — once for the output dir, once for the fold
-        accepted = dedup_batch(batch_df, state).persist()
+        # persist: the accepted plan (state anti-join + within-batch
+        # dedup) is executed twice — once for the output dir, once for
+        # the fold
+        accepted = dedup(batch_df, read_state(spark, state_dir)).persist()
         try:
             # idempotent output: a redelivered batch overwrites its own dir
             accepted.write.mode("overwrite").parquet(
@@ -260,7 +253,7 @@ def run_incremental_dedup_stream(
                 spark,
                 state_dir,
                 batch_id,
-                accepted.select("fp").distinct(),
+                accepted.select(fp_col).distinct(),
                 merge_fingerprints,
             )
         finally:
@@ -269,14 +262,31 @@ def run_incremental_dedup_stream(
         # guard skips it — the watermark then advances on the next batch
         write_watermark(wm_file, batch_hi)
 
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("incremental_dedup_stream")
+    return start_foreach_batch(raw, process_batch, checkpoint_dir, query_name)
+
+
+def run_incremental_dedup_stream(
+    spark: SparkSession,
+    input_dir: str,
+    state_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int | None = None,
+):
+    """Continuously accept only never-seen documents from a JSON-lines
+    drop dir (``{"doc_id": ..., "text": ...}`` per line).
+
+    Returns the StreamingQuery. The file source swaps for the Kafka
+    consumer unchanged — the batch plan needs only doc_id/text columns.
+    ``max_files_per_trigger`` caps files per micro-batch (ingestion
+    pacing; also how the replay-tolerance tests force a checkpoint reset
+    to RE-SPLIT old files into more batches than the original run).
+    """
+    return _run_dedup_stream(
+        spark, input_dir, state_dir, out_dir, checkpoint_dir,
+        max_files_per_trigger, dedup_batch, _state_processed_docs, "fp",
+        "incremental_dedup_stream",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -380,7 +390,6 @@ def run_incremental_paragraph_dedup_stream(
     state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Continuously accept only never-seen PARAGRAPHS from a JSON-lines
@@ -389,76 +398,9 @@ def run_incremental_paragraph_dedup_stream(
     table holds one row per seen paragraph fingerprint. Same idempotence
     discipline as run_incremental_dedup_stream: whole-batch redelivery
     guard + per-batch overwrite output."""
-    import os
-
-    recover_state(state_dir)
-    schema = "doc_id LONG, text STRING"
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = (
-        reader.load(input_dir)
-        .select(F.from_json("value", schema).alias("_r"))
-        .select("_r.doc_id", "_r.text")
-        .where(F.col("doc_id").isNotNull())
+    return _run_dedup_stream(
+        spark, input_dir, state_dir, out_dir, checkpoint_dir,
+        max_files_per_trigger, dedup_paragraph_batch,
+        _state_processed_paragraph_docs, "pfp",
+        "incremental_paragraph_dedup_stream",
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_state(state_dir)
-        if batch_df.isEmpty():
-            return  # see the whole-doc stream: no fileless dirs
-        if batch_id <= last_applied_batch_id(state_dir):
-            # same crash window as the whole-doc stream: fold committed,
-            # watermark write lost — catch it up before skipping, over
-            # processed docs only (every paragraph fp in state; a
-            # processed doc qualifies via its accepted paragraphs and
-            # its deduped-away paragraphs' keepers alike)
-            _catch_up_watermark(
-                _state_processed_paragraph_docs(
-                    spark, state_dir, out_dir, batch_df
-                ),
-                f"{state_dir}.max_doc_id",
-            )
-            return
-        wm_file = f"{state_dir}.max_doc_id"
-        try:
-            batch_hi = guard_append_only(batch_df, read_watermark(wm_file))
-        except ValueError:
-            # replay tolerance under a re-split batch id (see the
-            # whole-doc stream) — here the witness is per-doc: EVERY
-            # paragraph fingerprint already in state
-            processed = _state_processed_paragraph_docs(
-                spark, state_dir, out_dir, batch_df
-            )
-            if batch_df.join(processed, "doc_id", "left_anti").isEmpty():
-                return
-            raise
-        state = (
-            spark.read.parquet(state_dir) if os.path.exists(state_dir) else None
-        )
-        # persist: the paragraph segmentation + dedup plan would
-        # otherwise run twice (output write + state fold)
-        accepted = dedup_paragraph_batch(batch_df, state).persist()
-        try:
-            accepted.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch={batch_id}")
-            )
-            fold_into_state(
-                spark,
-                state_dir,
-                batch_id,
-                accepted.select("pfp").distinct(),
-                merge_fingerprints,
-            )
-        finally:
-            accepted.unpersist()
-        write_watermark(wm_file, batch_hi)
-
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("incremental_paragraph_dedup_stream")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

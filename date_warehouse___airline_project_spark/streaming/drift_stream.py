@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.profiling import _PSI_BINW, _PSI_NBINS, psi_report_from_counts
-from .state_table import fold_into_state, recover_state
+from .state_table import run_fold_stream
 
 
 def psi_bin_counts(
@@ -56,7 +56,6 @@ def run_drift_stream(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     binw: float = _PSI_BINW,
     nbins: int = _PSI_NBINS,
 ):
@@ -65,24 +64,16 @@ def run_drift_stream(
     feed). Returns the StreamingQuery; swap the file source for the
     Kafka consumer unchanged (the per-batch plan only needs a
     ``value`` column)."""
-    recover_state(state_dir)
-    raw = spark.readStream.format("text").load(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        vals = batch_df.select(F.col("value").cast("double").alias("v")).where(
-            F.col("v").isNotNull()
-        )
-        bins = psi_bin_counts(vals, "v", binw, nbins)
-        fold_into_state(spark, state_dir, batch_id, bins, merge_bins)
-
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("drift_stream")
+    return run_fold_stream(
+        spark, input_dir, state_dir, checkpoint_dir, "drift_stream",
+        lambda batch_df: psi_bin_counts(
+            batch_df.select(F.col("value").cast("double").alias("v")).where(
+                F.col("v").isNotNull()
+            ),
+            "v", binw, nbins,
+        ),
+        merge_bins,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def psi_report(

@@ -42,7 +42,8 @@ hint: without it, a flights input that has no size statistics (one built
 by ``spark.createDataFrame``) is planned as a sort-merge join, four jobs
 per batch instead of two. The batch ``check_eligibility`` keeps the
 planner's choice. The snapshot's blocks are released when the query
-terminates (stopped, failed, or done with its ``availableNow`` backlog).
+terminates (stopped, failed, or done with its ``availableNow`` backlog)
+by a daemon thread that waits on the query.
 
 Snapshot semantics: ``spark.read.parquet`` fixes its file listing when
 the DataFrame is created, so the stream never saw files added to the
@@ -56,17 +57,18 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
 
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQueryListener
 
 from ..operators.text_dedup import _release_blocks
 from ..pipelines.eligibility import join_verdicts, latest_flights
 from ..sources.sinks import write_parquet_file
+from .state_table import start_foreach_batch
 
 # kafkaworker.js:67-70 message envelope: {type, payload:{passengerId,
 # firstName, lastName, flightNumber}, requested_at}
@@ -275,48 +277,29 @@ def run_eligibility_stream(
         checks = tbl.filter(pc.equal(tbl["type"], "eligibility_check"))
         write_parquet_file(checks.select(result_columns), results_dir, name)
 
-    writer = (
-        rows.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(_QUERY_NAME)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    releaser = _ReleaseOnTermination(spark, latest)
-    spark.streams.addListener(releaser)
     try:
-        return writer.start()
+        query = start_foreach_batch(
+            rows, process_batch, checkpoint_dir, _QUERY_NAME, available_now
+        )
     except BaseException:
-        releaser.release()
+        _release_blocks(latest)
         raise
+    threading.Thread(
+        target=_release_on_termination,
+        args=(query, latest),
+        name=f"release-{_QUERY_NAME}",
+        daemon=True,
+    ).start()
+    return query
 
 
-class _ReleaseOnTermination(StreamingQueryListener):
-    """Releases the flight snapshot of one eligibility query when that
-    query terminates, then unregisters itself.
-
-    The query is recognised by its start event: Spark delivers
-    ``onQueryStarted`` synchronously, on the query's own thread, before
-    ``start()`` returns, and no two active queries of a session share a
-    name, so the first start named ``_QUERY_NAME`` after registration is
-    this listener's query. Termination events arrive later, from the
-    listener bus."""
-
-    def __init__(self, spark: SparkSession, snapshot: DataFrame) -> None:
-        self._spark, self._snapshot = spark, snapshot
-        self._run_id = None
-
-    def release(self) -> None:
-        self._spark.streams.removeListener(self)
-        _release_blocks(self._snapshot)
-
-    def onQueryStarted(self, event) -> None:
-        if self._run_id is None and event.name == _QUERY_NAME:
-            self._run_id = event.runId
-
-    def onQueryProgress(self, event) -> None:
+def _release_on_termination(query, snapshot: DataFrame) -> None:
+    """Wait for ``query`` to terminate (stopped, failed, or done with its
+    backlog) and release the flight snapshot's blocks. The query's
+    failure is not this thread's to report: its caller sees it through
+    the query handle."""
+    try:
+        query.awaitTermination()
+    except Exception:
         pass
-
-    def onQueryTerminated(self, event) -> None:
-        if event.runId == self._run_id:
-            self.release()
+    _release_blocks(snapshot)

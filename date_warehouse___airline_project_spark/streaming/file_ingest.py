@@ -14,6 +14,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .state_table import start_foreach_batch
+
 
 def csv_string_schema(columns: list[str]) -> T.StructType:
     """All-string schema from sanitized header names (S2 semantics)."""
@@ -28,7 +30,6 @@ def stream_csv_dir(
     columns: list[str],
     process: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Watch ``input_dir`` for CSVs and run ``process(batch_df, batch_id)``
@@ -41,13 +42,4 @@ def stream_csv_dir(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(input_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("csv_ingest")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(reader.load(input_dir), process, checkpoint_dir, "csv_ingest")

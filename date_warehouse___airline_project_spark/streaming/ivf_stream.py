@@ -46,6 +46,7 @@ from ..sources.swap import recover_rename_swap, rename_swap
 from .state_table import (
     maintainer_lease,
     recover_marker_commit,
+    start_foreach_batch,
     verify_maintainer_lease,
     write_commit_marker,
 )
@@ -862,9 +863,6 @@ def run_ivf_append_stream(
     new_vectors: DataFrame,
     path: str,
     checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    available_now: bool = True,
 ):
     """Maintain a persisted IVF index off a stream of new vectors.
     Returns the StreamingQuery. Start-time recovery is READER-form
@@ -879,18 +877,9 @@ def run_ivf_append_stream(
     recover_compaction(path, sweep_orphans=False)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_ivf_append_batch(
-            batch_df.sparkSession, path, batch_df, batch_id, id_col, vec_col
-        )
+        apply_ivf_append_batch(batch_df.sparkSession, path, batch_df, batch_id)
 
-    writer = (
-        new_vectors.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(new_vectors, process_batch, checkpoint_dir)
 
 
 def _tombstone_ids(

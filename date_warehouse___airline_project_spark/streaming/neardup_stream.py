@@ -51,7 +51,14 @@ from ..operators.text_dedup import (
     minhash_signatures,
     sig_verify_pairs,
 )
-from .state_table import fold_into_state, last_applied_batch_id, recover_state
+from .state_table import (
+    fold_into_state,
+    last_applied_batch_id,
+    read_json_lines,
+    read_state,
+    recover_state,
+    start_foreach_batch,
+)
 
 _N, _K, _BANDS, _MIN_AGREE = 3, 16, 4, 8
 
@@ -176,7 +183,6 @@ def run_neardup_stream(
     state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Continuously accept only docs that are not near-dups of any
     accepted doc, from a JSON-lines drop dir
@@ -184,14 +190,7 @@ def run_neardup_stream(
     StreamingQuery; the file source swaps for the Kafka consumer
     unchanged."""
     recover_state(state_dir)
-    schema = "doc_id LONG, text STRING"
-    raw = (
-        spark.readStream.format("text")
-        .load(input_dir)
-        .select(F.from_json("value", schema).alias("_r"))
-        .select("_r.doc_id", "_r.text")
-        .where(F.col("doc_id").isNotNull())
-    )
+    raw = read_json_lines(spark, input_dir, "doc_id LONG, text STRING")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         recover_state(state_dir)
@@ -199,28 +198,15 @@ def run_neardup_stream(
         # see the batch's own signatures in state and reject everything
         if batch_id <= last_applied_batch_id(state_dir):
             return
-        state = (
-            spark.read.parquet(state_dir) if os.path.exists(state_dir) else None
-        )
-        accepted = neardup_batch(batch_df, state)
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
+        batch_out = os.path.join(out_dir, f"batch={batch_id}")
+        accepted = neardup_batch(batch_df, read_state(spark, state_dir))
+        accepted.write.mode("overwrite").parquet(batch_out)
         fold_into_state(
             spark,
             state_dir,
             batch_id,
-            state_rows_of(
-                spark.read.parquet(os.path.join(out_dir, f"batch={batch_id}"))
-            ),
+            state_rows_of(spark.read.parquet(batch_out)),
             merge_lsh_state,
         )
 
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("neardup_stream")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(raw, process_batch, checkpoint_dir, "neardup_stream")

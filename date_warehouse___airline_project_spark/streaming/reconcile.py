@@ -42,7 +42,7 @@ from .ivf_stream import (
     read_applied_batches,
     record_applied_batches,
 )
-from .state_table import maintainer_lease
+from .state_table import maintainer_lease, start_foreach_batch
 
 _CHECKS = (
     "batches_index_only",
@@ -403,9 +403,6 @@ def run_dual_maintenance_stream(
     release_path: str,
     index_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    id_col: str = "doc_id",
-    vec_col: str = "embedding",
 ):
     """Maintain BOTH persisted artifacts off one stream of new documents
     carrying their vectors (``doc_id/source/text`` + an embedding
@@ -416,20 +413,7 @@ def run_dual_maintenance_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_dual_batch(
-            batch_df.sparkSession,
-            release_path,
-            index_path,
-            batch_df,
-            batch_id,
-            id_col,
-            vec_col,
+            batch_df.sparkSession, release_path, index_path, batch_df, batch_id
         )
 
-    writer = (
-        new_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(new_docs, process_batch, checkpoint_dir)

@@ -47,6 +47,7 @@ from .ivf_stream import (
 from .state_table import (
     maintainer_lease,
     recover_marker_commit,
+    start_foreach_batch,
     verify_maintainer_lease,
     write_commit_marker,
 )
@@ -462,7 +463,6 @@ def run_release_maintenance_stream(
     new_docs: DataFrame,
     path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain a persisted corpus release off a stream of new documents.
     Micro-batches must respect the append-only doc_id invariant (ingest
@@ -479,11 +479,4 @@ def run_release_maintenance_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_release_batch(batch_df.sparkSession, path, batch_df, batch_id)
 
-    writer = (
-        new_docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(new_docs, process_batch, checkpoint_dir)

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .state_table import fold_into_state, recover_state
+from .state_table import run_fold_stream
 
 EVENT_SCHEMA = "ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"
 
@@ -75,8 +75,6 @@ def run_rollup_stream(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    bucket: str = "hour",
-    available_now: bool = True,
 ):
     """Maintain the continuous aggregate over a JSON-lines event drop dir.
 
@@ -85,24 +83,10 @@ def run_rollup_stream(
     swap the file source for the Kafka consumer unchanged — the per-batch
     plan only needs the parsed event columns.
     """
-    recover_state(state_dir)
-    raw = spark.readStream.format("text").load(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        events = (
-            batch_df.select(
-                F.from_json(F.col("value"), EVENT_SCHEMA).alias("e")
-            )
-            .select("e.*")
-        )
-        cells = rollup_cells(events, bucket)
-        fold_into_state(spark, state_dir, batch_id, cells, combine_rollups)
-
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("rollup_stream")
+    return run_fold_stream(
+        spark, input_dir, state_dir, checkpoint_dir, "rollup_stream",
+        lambda batch_df: rollup_cells(
+            batch_df.select(F.from_json("value", EVENT_SCHEMA).alias("e")).select("e.*")
+        ),
+        combine_rollups,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

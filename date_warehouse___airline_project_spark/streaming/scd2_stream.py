@@ -34,7 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scd2 import scd2_init, scd2_merge
-from .state_table import last_applied_batch_id, recover_state, swap_in_state
+from .state_table import (
+    last_applied_batch_id,
+    recover_state,
+    start_foreach_batch,
+    swap_in_state,
+)
 
 
 def apply_scd2_batch(
@@ -95,7 +100,6 @@ def run_scd2_stream(
     natural_key: Sequence[str],
     tracked: Sequence[str],
     ts_col: str,
-    available_now: bool = True,
 ):
     """Maintain an SCD2 dim off a stream of update rows.
 
@@ -117,11 +121,4 @@ def run_scd2_stream(
             ts_col,
         )
 
-    writer = (
-        updates.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("scd2_stream")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(updates, process_batch, checkpoint_dir, "scd2_stream")

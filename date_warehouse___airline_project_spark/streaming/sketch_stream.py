@@ -29,6 +29,11 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import seeded_bucket
 
+# Swap/recovery/idempotence discipline shared with the continuous-
+# aggregate rollup — one definition in state_table.py; the batch-id
+# reader is re-exported here for existing callers and tests.
+from .state_table import last_applied_batch_id, run_fold_stream  # noqa: F401
+
 
 def cms_cells(rows: DataFrame, key_col: str, depth: int = 3, width: int = 256) -> DataFrame:
     """(d, cell, cnt) Count-Min cell counts for one relation — the same
@@ -50,15 +55,20 @@ def merge_cells(state: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
-# Swap/recovery/idempotence discipline shared with the continuous-
-# aggregate rollup — one definition in state_table.py; names re-exported
-# here for existing callers and tests.
-from .state_table import (  # noqa: E402,F401
-    _BATCH_ID_FILE,
-    fold_into_state,
-    last_applied_batch_id,
-    recover_state,
-)
+def _keys(batch_df: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """One long key per line; unparseable lines dropped."""
+    return batch_df.select(F.col("value").cast("long").alias(key_col)).where(
+        F.col(key_col).isNotNull()
+    )
+
+
+def _grouped_keys(batch_df: DataFrame) -> DataFrame:
+    """(grp, user_id) from ``group,key`` lines; incomplete lines dropped."""
+    parts = F.split(F.col("value"), ",")
+    return batch_df.select(
+        parts.getItem(0).alias("grp"),
+        parts.getItem(1).cast("long").alias("user_id"),
+    ).where(F.col("grp").isNotNull() & F.col("user_id").isNotNull())
 
 
 def run_cms_stream(
@@ -66,10 +76,6 @@ def run_cms_stream(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    key_col: str = "user_id",
-    depth: int = 3,
-    width: int = 256,
-    available_now: bool = True,
 ):
     """Maintain a persistent CMS over a line-delimited key drop dir.
 
@@ -77,24 +83,11 @@ def run_cms_stream(
     consumer (``eligibility_stream.kafka_messages_source``) unchanged —
     the per-batch plan only needs a ``value``-shaped column.
     """
-    recover_state(state_dir)
-    raw = spark.readStream.format("text").load(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        keys = batch_df.select(F.col("value").cast("long").alias(key_col)).where(
-            F.col(key_col).isNotNull()
-        )
-        cells = cms_cells(keys, key_col, depth, width)
-        fold_into_state(spark, state_dir, batch_id, cells, merge_cells)
-
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("cms_stream")
+    return run_fold_stream(
+        spark, input_dir, state_dir, checkpoint_dir, "cms_stream",
+        lambda batch_df: cms_cells(_keys(batch_df), "user_id"),
+        merge_cells,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merge_registers(state: DataFrame, batch: DataFrame) -> DataFrame:
@@ -112,7 +105,6 @@ def run_hll_stream(
     state_dir: str,
     checkpoint_dir: str,
     key_col: str = "user_id",
-    available_now: bool = True,
 ):
     """Maintain a persistent HyperLogLog register table over a
     line-delimited key drop dir.
@@ -127,24 +119,11 @@ def run_hll_stream(
     """
     from ..plans.sketches import hll_registers
 
-    recover_state(state_dir)
-    raw = spark.readStream.format("text").load(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        keys = batch_df.select(F.col("value").cast("long").alias(key_col)).where(
-            F.col(key_col).isNotNull()
-        )
-        regs = hll_registers(keys, key_col)
-        fold_into_state(spark, state_dir, batch_id, regs, merge_registers)
-
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("hll_stream")
+    return run_fold_stream(
+        spark, input_dir, state_dir, checkpoint_dir, "hll_stream",
+        lambda batch_df: hll_registers(_keys(batch_df, key_col), key_col),
+        merge_registers,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def bloom_bits(rows: DataFrame, key_col: str, m: int = 4096, k: int = 3) -> DataFrame:
@@ -168,10 +147,6 @@ def run_bloom_stream(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    key_col: str = "user_id",
-    m: int = 4096,
-    k: int = 3,
-    available_now: bool = True,
 ):
     """Maintain a persistent Bloom bit set over a line-delimited key drop
     dir. Bit-OR (union-distinct here) is idempotent AND associative like
@@ -181,24 +156,11 @@ def run_bloom_stream(
     rows at any stream cardinality; probes join the broadcast bit set
     exactly as in the batch query.
     """
-    recover_state(state_dir)
-    raw = spark.readStream.format("text").load(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        keys = batch_df.select(F.col("value").cast("long").alias(key_col)).where(
-            F.col(key_col).isNotNull()
-        )
-        bits = bloom_bits(keys, key_col, m, k)
-        fold_into_state(spark, state_dir, batch_id, bits, merge_bits)
-
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("bloom_stream")
+    return run_fold_stream(
+        spark, input_dir, state_dir, checkpoint_dir, "bloom_stream",
+        lambda batch_df: bloom_bits(_keys(batch_df), "user_id"),
+        merge_bits,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merge_grouped_registers(state: DataFrame, batch: DataFrame) -> DataFrame:
@@ -215,7 +177,6 @@ def run_grouped_hll_stream(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain per-group HyperLogLog registers over a drop dir of
     ``group,key`` CSV lines — the continuously-maintained form of
@@ -229,27 +190,11 @@ def run_grouped_hll_stream(
     """
     from ..plans.sketches import hll_registers
 
-    recover_state(state_dir)
-    raw = spark.readStream.format("text").load(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = batch_df.select(
-            F.split(F.col("value"), ",").alias("_p")
-        ).select(
-            F.col("_p").getItem(0).alias("grp"),
-            F.col("_p").getItem(1).cast("long").alias("user_id"),
-        ).where(F.col("grp").isNotNull() & F.col("user_id").isNotNull())
-        regs = hll_registers(parsed, "user_id", ["grp"])
-        fold_into_state(spark, state_dir, batch_id, regs, merge_grouped_registers)
-
-    writer = (
-        raw.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("grouped_hll_stream")
+    return run_fold_stream(
+        spark, input_dir, state_dir, checkpoint_dir, "grouped_hll_stream",
+        lambda batch_df: hll_registers(_grouped_keys(batch_df), "user_id", ["grp"]),
+        merge_grouped_registers,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cms_estimate_report(

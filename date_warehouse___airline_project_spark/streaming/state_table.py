@@ -14,6 +14,14 @@ One pattern, two invariants:
     is not idempotent, so the last-applied ``batch_id`` is written INSIDE
     the state dir in the same swap; a redelivered batch id is skipped.
 
+The same module holds the runner lifecycle every maintenance stream in
+this package shares: ``start_foreach_batch`` (checkpoint, name, trigger,
+start), ``read_json_lines`` (the JSON-lines doc drop-dir reader),
+``read_state`` (the state table, or None before its first fold) and
+``run_fold_stream`` — the whole runner of a mergeable-state stream:
+recover at start, read a text drop dir, turn each micro-batch into
+``cells(batch_df)`` and fold it in with ``merge``.
+
 This is the parquet-directory emulation of what a transactional table
 format gives natively (``sources/merge_target.py`` has the same split):
 with Delta present, ``fold_into_state`` becomes a single ``MERGE INTO``
@@ -504,10 +512,86 @@ def swap_in_state(state_dir: str, batch_id: int, merged: DataFrame) -> None:
     """Atomically replace the state table with ``merged`` and record
     ``batch_id`` in the same swap. ``merged`` may lazily READ the live
     ``state_dir`` — it is fully materialized into the ``.tmp-*`` sibling
-    before any rename touches the live dir."""
+    before any rename touches the live dir. A failed write or swap
+    leaves no ``.tmp-*`` behind."""
     token = uuid.uuid4().hex[:8]
     tmp = f"{state_dir}.tmp-{token}"
-    merged.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, _BATCH_ID_FILE), "w", encoding="ascii") as f:
-        f.write(str(batch_id))
-    rename_swap(tmp, state_dir, f"{state_dir}.old-{token}")
+    try:
+        merged.write.mode("overwrite").parquet(tmp)
+        with open(os.path.join(tmp, _BATCH_ID_FILE), "w", encoding="ascii") as f:
+            f.write(str(batch_id))
+        rename_swap(tmp, state_dir, f"{state_dir}.old-{token}")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """The state table at ``state_dir``, or None before its first fold."""
+    return spark.read.parquet(state_dir) if os.path.exists(state_dir) else None
+
+
+def start_foreach_batch(
+    stream: DataFrame,
+    process_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    query_name: str | None = None,
+    available_now: bool = True,
+):
+    """Start ``process_batch(batch_df, batch_id)`` over ``stream``,
+    checkpointed at ``checkpoint_dir``. ``available_now`` drains the
+    backlog and stops; otherwise the query runs until stopped. Returns
+    the StreamingQuery."""
+    writer = stream.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def read_json_lines(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Stream a JSON-lines drop dir as the columns of ``schema``, a DDL
+    string with a ``doc_id`` column; lines without a ``doc_id`` are
+    dropped. ``max_files_per_trigger`` caps files per micro-batch."""
+    reader = spark.readStream.format("text")
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return (
+        reader.load(input_dir)
+        .select(F.from_json("value", schema).alias("_r"))
+        .select("_r.*")
+        .where(F.col("doc_id").isNotNull())
+    )
+
+
+def run_fold_stream(
+    spark: SparkSession,
+    input_dir: str,
+    state_dir: str,
+    checkpoint_dir: str,
+    query_name: str,
+    cells: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+):
+    """Maintain a mergeable state table over a text drop dir: each
+    micro-batch's lines (a ``value`` column) become ``cells(batch_df)``,
+    folded into ``state_dir`` with ``merge`` (``fold_into_state``).
+    Recovery runs at start too, not only inside a batch: a restart that
+    reads no new file must still restore a stranded backup, since
+    readers such as ``drift_stream.psi_report`` read the state dir
+    directly. Returns the StreamingQuery; swap the file source for the
+    Kafka consumer unchanged."""
+    recover_state(state_dir)
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        fold_into_state(spark, state_dir, batch_id, cells(batch_df), merge)
+
+    raw = spark.readStream.format("text").load(input_dir)
+    return start_foreach_batch(raw, process_batch, checkpoint_dir, query_name)

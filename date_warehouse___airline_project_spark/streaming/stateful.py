@@ -88,54 +88,3 @@ def running_user_totals(events: DataFrame, timeout_ms: int | None = None) -> Dat
             timeoutConf=conf,
         )
     )
-
-
-try:  # Spark >= 4.0 — module-level so the processor pickles by reference
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor as _SPBase
-except ImportError:  # pragma: no cover - older builds
-    _SPBase = object  # type: ignore[assignment,misc]
-
-
-class RunningTotalsProcessor(_SPBase):
-    """StatefulProcessor for ``transformWithStateInPandas`` (Spark 4's
-    successor API to applyInPandasWithState): same per-key running
-    (count, sum) contract as :func:`running_user_totals`, but state lives
-    in a named ``ValueState`` managed by the StatefulProcessorHandle —
-    the API that adds composable state variables (value/list/map) and
-    timers over the RocksDB state store.
-    """
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):
-        (user_id,) = key
-        n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._totals.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n_events": [n], "total_value": [total], "expired": [False]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum) via ``transformWithStateInPandas``.
-
-    Functionally identical to :func:`running_user_totals` (no-timeout
-    form); exists to pin the engine to the current stateful API as well
-    as the legacy GroupState one. Requires the RocksDB state store
-    provider (the caller's session config — see the test) and the
-    ``protobuf`` package (the state-server wire protocol, part of
-    ``pyspark[connect]``'s dependency set) — the test importorskips on it.
-    """
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotalsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="None",
-    )

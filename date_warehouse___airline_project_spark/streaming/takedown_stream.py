@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .ivf_stream import _require_local_path, remove_from_ivf_index
+from .state_table import start_foreach_batch
 
 
 def apply_ivf_takedown_batch(
@@ -84,33 +85,21 @@ def run_ivf_takedown_stream(
     ids: DataFrame,
     path: str,
     checkpoint_dir: str,
-    id_col: str = "vec_id",
-    available_now: bool = True,
 ):
     """Consume a stream of vector ids and delete each batch from the
     persisted index. Returns the StreamingQuery."""
     path = _require_local_path(path, ids.sparkSession)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_ivf_takedown_batch(
-            batch_df.sparkSession, path, batch_df, batch_id, id_col
-        )
+        apply_ivf_takedown_batch(batch_df.sparkSession, path, batch_df, batch_id)
 
-    writer = (
-        ids.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(ids, process_batch, checkpoint_dir)
 
 
 def run_shard_takedown_stream(
     ids: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     state_path: str | None = None,
 ):
     """Consume a stream of doc ids and surgically remove each batch from
@@ -124,11 +113,4 @@ def run_shard_takedown_stream(
             batch_df.sparkSession, out_dir, batch_df, batch_id, state_path
         )
 
-    writer = (
-        ids.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(ids, process_batch, checkpoint_dir)

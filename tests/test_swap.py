@@ -148,3 +148,4 @@ def test_swap_in_state_failed_second_rename_keeps_the_previous_state(spark, tmp_
     monkeypatch.undo()
     assert [tuple(r) for r in spark.read.parquet(state).collect()] == [(1, 10)]
     assert last_applied_batch_id(state) == 0
+    assert os.listdir(tmp_path) == ["state"]  # no .tmp-* or .old-* left
