@@ -1,8 +1,8 @@
 """Sinks (SURVEY §2.1 S3/S4/S5/S12).
 
 ``write_quarantine_csv`` mirrors the reference's quarantine export
-(cleaning.py:771-779): nulls as empty strings, header always written even
-for zero rows.
+(cleaning.py:771-779): nulls as empty strings, a zero-row frame exported
+as a single newline.
 
 ``safe_upsert`` reproduces the upsert→insert fallback ladder
 (cleaning.py:165-199) against parquet paths (no Delta jars in this image;
@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .merge_target import ParquetMergeTarget
-from .swap import SwapInError, rename_swap
+from .swap import SwapInError
 
 
 def write_quarantine_csv(df: DataFrame, path: str) -> None:
@@ -67,15 +67,18 @@ def write_quarantine_csv(df: DataFrame, path: str) -> None:
     part = next(
         f for f in os.listdir(path + ".tmp") if f.startswith("part-") and f.endswith(".csv")
     )
-    part_path = os.path.join(path + ".tmp", part)
-    if os.path.getsize(part_path) == 0 or df.isEmpty():
-        # reference's empty branch: a column-less to_csv -> exactly b"\n"
-        with open(path, "wb") as f:
-            f.write(b"\n")
-    else:
-        # utf-8-sig: prepend the BOM while promoting the part file
-        with open(path, "wb") as dst, open(part_path, "rb") as src:
-            dst.write(b"\xef\xbb\xbf")
+    with open(os.path.join(path + ".tmp", part), "rb") as src, open(path, "wb") as dst:
+        # the part file itself tells whether the frame had a row: Spark
+        # writes the header line even for zero rows, so empty means no
+        # byte after the first line (and no second Spark job to ask)
+        header = src.readline()
+        first = src.read(1)
+        if not first:
+            # reference's empty branch: a column-less to_csv -> exactly b"\n"
+            dst.write(b"\n")
+        else:
+            # utf-8-sig: prepend the BOM while promoting the part file
+            dst.write(b"\xef\xbb\xbf" + header + first)
             shutil.copyfileobj(src, dst)
     shutil.rmtree(path + ".tmp")
 
@@ -200,29 +203,30 @@ def compact_parquet(
     lands in a ``.tmp-*`` sibling and ``sources/swap.py::rename_swap``
     swaps it in, so readers see either the old layout or the new one,
     never a partial directory, and a failed swap leaves the old layout
-    live. Row content is preserved exactly; intra-file order is not a
-    contract (layout-only operation).
+    live. The rewrite goes through ``ParquetMergeTarget.write`` and keeps
+    the table's recorded batch id, so a compacted stream state table
+    still skips a redelivered batch. Row content is preserved exactly;
+    intra-file order is not a contract (layout-only operation).
 
     The size estimate reads filesystem metadata only — no data pass
     beyond the single rewrite itself, which is one coalesce (no shuffle).
     """
     import math
 
+    table = ParquetMergeTarget(spark, path)
+    table.recover()
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    run = uuid.uuid4().hex[:8]
-    tmp = f"{path}.tmp-{run}"
-    try:
-        # coalesce, not repartition: merging splits needs no shuffle
-        df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-        rename_swap(tmp, path, f"{path}.old-{run}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    batch_id = table.last_batch_id()
+    # coalesce, not repartition: merging splits needs no shuffle
+    table.write(
+        spark.read.parquet(path).coalesce(n_files),
+        batch_id if batch_id >= 0 else None,
+    )
     return n_files
 
 

@@ -25,9 +25,9 @@ Every ``run_*`` maintenance stream (and ``stream_csv_dir``) has one
 lifecycle, written once in ``state_table.py``:
 
   1. recover: a stream that owns a state dir repairs an interrupted
-     swap (``recover_state``, or the artifact's marker-commit recovery)
-     before the query starts, so readers of that dir see it whole even
-     if no batch runs;
+     swap (``sources/merge_target.py::ParquetMergeTarget.recover``, or
+     the artifact's marker-commit recovery) before the query starts, so
+     readers of that dir see it whole even if no batch runs;
   2. read: the source stream — a text drop dir, a JSON-lines doc dir
      (``read_json_lines``) or a caller-supplied streaming DataFrame;
   3. fold: ``process_batch(batch_df, batch_id)`` applies the batch's

@@ -54,15 +54,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.quality import gopher_gate
+from ..sources.merge_target import ParquetMergeTarget
 from .dedup_stream import content_fingerprint, merge_fingerprints
-from .state_table import (
-    fold_into_state,
-    last_applied_batch_id,
-    read_json_lines,
-    read_state,
-    recover_state,
-    start_foreach_batch,
-)
+from .state_table import fold_into_state, read_json_lines, start_foreach_batch
 
 ACCT_SCHEMA = "source STRING, n_docs BIGINT, n_tokens BIGINT"
 _DOC_SCHEMA = "doc_id LONG, source STRING, text STRING"
@@ -140,19 +134,21 @@ def run_curation_stream(
     Returns the StreamingQuery. The file source swaps for the Kafka
     consumer unchanged — the batch plan needs only doc_id/source/text.
     """
-    recover_state(fp_state_dir)
-    recover_state(acct_state_dir)
+    fp_state = ParquetMergeTarget(spark, fp_state_dir)
+    acct_state = ParquetMergeTarget(spark, acct_state_dir)
+    fp_state.recover()
+    acct_state.recover()
     raw = read_json_lines(spark, input_dir, _DOC_SCHEMA)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_state(fp_state_dir)
-        recover_state(acct_state_dir)
         batch_out = os.path.join(out_dir, f"batch={batch_id}")
         # Effect 1+2: accepted output + fingerprint fold, guarded together
         # on the fingerprint state's batch id (recomputing the anti-join
         # after its own fingerprints folded would wrongly yield empty).
-        if batch_id > last_applied_batch_id(fp_state_dir):
-            accepted = batch_curate(batch_df, read_state(spark, fp_state_dir))
+        if batch_id > fp_state.last_batch_id():
+            accepted = batch_curate(
+                batch_df, fp_state.read() if fp_state.exists() else None
+            )
             # idempotent output: a redelivered batch overwrites its own dir
             accepted.write.mode("overwrite").parquet(batch_out)
             fold_into_state(
@@ -164,7 +160,7 @@ def run_curation_stream(
             )
         # Effect 3: accounting fold, independently guarded, sourced from
         # the materialized output so it never depends on recomputation.
-        if batch_id > last_applied_batch_id(acct_state_dir):
+        if batch_id > acct_state.last_batch_id():
             if os.path.exists(batch_out):
                 acct = accounting_of(spark.read.parquet(batch_out))
             else:  # gate rejected the whole batch and nothing was written
@@ -246,22 +242,27 @@ def run_curation_v2_stream(
     """
     from .neardup_stream import merge_lsh_state, state_rows_of
 
-    for s in (fp_state_dir, lsh_state_dir, acct_state_dir):
-        recover_state(s)
+    fp_state, lsh_state, acct_state = (
+        ParquetMergeTarget(spark, d)
+        for d in (fp_state_dir, lsh_state_dir, acct_state_dir)
+    )
+    for s in (fp_state, lsh_state, acct_state):
+        s.recover()
     raw = read_json_lines(spark, input_dir, _DOC_SCHEMA)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from .neardup_stream import neardup_filter
 
-        for s in (fp_state_dir, lsh_state_dir, acct_state_dir):
-            recover_state(s)
         accepted_out = os.path.join(out_dir, "accepted", f"batch={batch_id}")
         fps_out = os.path.join(out_dir, "fps", f"batch={batch_id}")
-        if batch_id > last_applied_batch_id(fp_state_dir):
-            winners = batch_curate(batch_df, read_state(spark, fp_state_dir))
+        if batch_id > fp_state.last_batch_id():
+            winners = batch_curate(
+                batch_df, fp_state.read() if fp_state.exists() else None
+            )
             winners.write.mode("overwrite").parquet(fps_out)
             accepted = neardup_filter(
-                spark.read.parquet(fps_out), read_state(spark, lsh_state_dir)
+                spark.read.parquet(fps_out),
+                lsh_state.read() if lsh_state.exists() else None,
             )
             accepted.write.mode("overwrite").parquet(accepted_out)
             fold_into_state(
@@ -271,7 +272,7 @@ def run_curation_v2_stream(
                 spark.read.parquet(fps_out).select("fp").distinct(),
                 merge_fingerprints,
             )
-        if batch_id > last_applied_batch_id(lsh_state_dir):
+        if batch_id > lsh_state.last_batch_id():
             fold_into_state(
                 spark,
                 lsh_state_dir,
@@ -279,7 +280,7 @@ def run_curation_v2_stream(
                 state_rows_of(spark.read.parquet(accepted_out)),
                 merge_lsh_state,
             )
-        if batch_id > last_applied_batch_id(acct_state_dir):
+        if batch_id > acct_state.last_batch_id():
             acct = accounting_of(spark.read.parquet(accepted_out))
             fold_into_state(
                 spark, acct_state_dir, batch_id, acct, merge_accounting

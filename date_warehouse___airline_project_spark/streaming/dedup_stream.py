@@ -35,14 +35,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.merge_target import ParquetMergeTarget
 from .state_table import (
     fold_into_state,
     guard_append_only,
-    last_applied_batch_id,
     read_json_lines,
-    read_state,
     read_watermark,
-    recover_state,
     start_foreach_batch,
     write_watermark,
 )
@@ -194,7 +192,8 @@ def _run_dedup_stream(
     column) whose content the state has already processed."""
     import os
 
-    recover_state(state_dir)
+    state = ParquetMergeTarget(spark, state_dir)
+    state.recover()
     raw = read_json_lines(
         spark, input_dir, "doc_id LONG, text STRING", max_files_per_trigger
     )
@@ -206,14 +205,13 @@ def _run_dedup_stream(
         # would be empty and clobber the batch's output dir. Skipping the
         # redelivery keeps both effects (output dir + state) at their
         # already-correct values.
-        recover_state(state_dir)
         if batch_df.isEmpty():
             # an empty batch must neither create a fileless state dir
             # (permanent schema-inference wedge) nor a fileless output
             # dir; the checkpoint owns source progress
             return
         wm_file = f"{state_dir}.max_doc_id"
-        if batch_id <= last_applied_batch_id(state_dir):
+        if batch_id <= state.last_batch_id():
             # already folded (possibly crashed before the watermark
             # write): catch the watermark up — over PROCESSED ids only —
             # so the append-only guard cannot later admit ids inside
@@ -243,7 +241,7 @@ def _run_dedup_stream(
         # persist: the accepted plan (state anti-join + within-batch
         # dedup) is executed twice — once for the output dir, once for
         # the fold
-        accepted = dedup(batch_df, read_state(spark, state_dir)).persist()
+        accepted = dedup(batch_df, state.read() if state.exists() else None).persist()
         try:
             # idempotent output: a redelivered batch overwrites its own dir
             accepted.write.mode("overwrite").parquet(

@@ -51,14 +51,8 @@ from ..operators.text_dedup import (
     minhash_signatures,
     sig_verify_pairs,
 )
-from .state_table import (
-    fold_into_state,
-    last_applied_batch_id,
-    read_json_lines,
-    read_state,
-    recover_state,
-    start_foreach_batch,
-)
+from ..sources.merge_target import ParquetMergeTarget
+from .state_table import fold_into_state, read_json_lines, start_foreach_batch
 
 _N, _K, _BANDS, _MIN_AGREE = 3, 16, 4, 8
 
@@ -189,17 +183,17 @@ def run_neardup_stream(
     (``{"doc_id": ..., "text": ...}`` per line). Returns the
     StreamingQuery; the file source swaps for the Kafka consumer
     unchanged."""
-    recover_state(state_dir)
+    state = ParquetMergeTarget(spark, state_dir)
+    state.recover()
     raw = read_json_lines(spark, input_dir, "doc_id LONG, text STRING")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_state(state_dir)
         # whole-batch guard: after the fold, recomputing acceptance would
         # see the batch's own signatures in state and reject everything
-        if batch_id <= last_applied_batch_id(state_dir):
+        if batch_id <= state.last_batch_id():
             return
         batch_out = os.path.join(out_dir, f"batch={batch_id}")
-        accepted = neardup_batch(batch_df, read_state(spark, state_dir))
+        accepted = neardup_batch(batch_df, state.read() if state.exists() else None)
         accepted.write.mode("overwrite").parquet(batch_out)
         fold_into_state(
             spark,

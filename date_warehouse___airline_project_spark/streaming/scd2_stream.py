@@ -27,19 +27,13 @@ becomes ``MERGE INTO`` + txnVersion idempotence, plan unchanged.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.scd2 import scd2_init, scd2_merge
-from .state_table import (
-    last_applied_batch_id,
-    recover_state,
-    start_foreach_batch,
-    swap_in_state,
-)
+from ..sources.merge_target import ParquetMergeTarget
+from .state_table import start_foreach_batch
 
 
 def apply_scd2_batch(
@@ -59,38 +53,23 @@ def apply_scd2_batch(
     an empty batch still records its id (so a redelivered empty batch
     cannot interleave with later state).
     """
-    recover_state(dim_dir)
-    if batch_id <= last_applied_batch_id(dim_dir):
+    dim = ParquetMergeTarget(spark, dim_dir)
+    if batch_id <= dim.last_batch_id():
         return
     up = batch_df.select(*natural_key, *tracked, F.col(ts_col).alias("_ts"))
     head = up.agg(F.max("_ts").alias("m")).first()
-    exists = os.path.exists(dim_dir)
     if head["m"] is None:  # empty batch — state unchanged, id recorded
-        if not exists:
-            return  # nothing to version yet and nothing to guard
-        merged = spark.read.parquet(dim_dir)
-    else:
-        # Keep fractional seconds: two micro-batches whose max event times
-        # fall within the same second must still produce distinct
-        # _valid_from/_valid_to edges, or the SCD2 intervals collapse to
-        # zero width. isoformat preserves microseconds when present.
-        batch_ts = (
-            head["m"]
-            if isinstance(head["m"], str)
-            else head["m"].isoformat(sep=" ")
-        )
-        updates = up.drop("_ts")
-        if exists:
-            merged = scd2_merge(
-                spark.read.parquet(dim_dir),
-                updates,
-                list(natural_key),
-                list(tracked),
-                batch_ts,
-            )
-        else:
-            merged = scd2_init(updates, batch_ts)
-    swap_in_state(dim_dir, batch_id, merged)
+        if dim.exists():
+            dim.write(dim.read(), batch_id)
+        return  # else nothing to version yet and nothing to guard
+    # Keep fractional seconds: two micro-batches whose max event times
+    # fall within the same second must still produce distinct
+    # _valid_from/_valid_to edges, or the SCD2 intervals collapse to
+    # zero width. isoformat preserves microseconds when present.
+    batch_ts = (
+        head["m"] if isinstance(head["m"], str) else head["m"].isoformat(sep=" ")
+    )
+    dim.apply_scd2(up.drop("_ts"), natural_key, tracked, batch_ts, batch_id)
 
 
 def run_scd2_stream(
@@ -108,7 +87,7 @@ def run_scd2_stream(
     outbox change feed's ``new.*`` projection, or a Kafka topic; the
     merge plan is source-agnostic. Returns the StreamingQuery.
     """
-    recover_state(dim_dir)
+    ParquetMergeTarget(updates.sparkSession, dim_dir).recover()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_scd2_batch(

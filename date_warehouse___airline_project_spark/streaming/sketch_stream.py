@@ -30,9 +30,8 @@ from pyspark.sql import functions as F
 from ..functions.hashing import seeded_bucket
 
 # Swap/recovery/idempotence discipline shared with the continuous-
-# aggregate rollup — one definition in state_table.py; the batch-id
-# reader is re-exported here for existing callers and tests.
-from .state_table import last_applied_batch_id, run_fold_stream  # noqa: F401
+# aggregate rollup — one definition in state_table.py.
+from .state_table import run_fold_stream
 
 
 def cms_cells(rows: DataFrame, key_col: str, depth: int = 3, width: int = 256) -> DataFrame:

@@ -1,33 +1,34 @@
 """Shared persistent-state-table discipline for incremental streaming
 maintenance (Count-Min cells, continuous aggregates).
 
-One pattern, two invariants:
+One pattern, two invariants, both kept by the one table replaced whole,
+``sources/merge_target.py::ParquetMergeTarget``:
 
   * **Atomic swap-in.** New state is fully written to a ``.tmp-*`` sibling,
     then ``sources/swap.py::rename_swap`` renames it live (the previous
     state renamed aside first, and put back if the swap fails). A crash
-    can leave a brief no-live-dir window but never partial data;
-    ``recover_state`` (``recover_rename_swap``) repairs that window at
-    start and inside every batch by restoring the newest ``.old-*``
-    backup and sweeping stale siblings.
+    can leave a brief no-live-dir window but never partial data; the
+    table's ``recover`` repairs that window at start and inside every
+    batch by restoring the newest ``.old-*`` backup and sweeping stale
+    siblings.
   * **Idempotent fold.** foreachBatch is AT-LEAST-ONCE and a sum/merge fold
     is not idempotent, so the last-applied ``batch_id`` is written INSIDE
-    the state dir in the same swap; a redelivered batch id is skipped.
+    the state dir in the same swap (``write(df, batch_id)``); a
+    redelivered batch id (``last_batch_id()``) is skipped.
 
 The same module holds the runner lifecycle every maintenance stream in
 this package shares: ``start_foreach_batch`` (checkpoint, name, trigger,
-start), ``read_json_lines`` (the JSON-lines doc drop-dir reader),
-``read_state`` (the state table, or None before its first fold) and
+start), ``read_json_lines`` (the JSON-lines doc drop-dir reader) and
 ``run_fold_stream`` — the whole runner of a mergeable-state stream:
 recover at start, read a text drop dir, turn each micro-batch into
 ``cells(batch_df)`` and fold it in with ``merge``.
 
 This is the parquet-directory emulation of what a transactional table
-format gives natively (``sources/merge_target.py`` has the same split):
-with Delta present, ``fold_into_state`` becomes a single ``MERGE INTO``
-keyed on the state key and the batch-id guard moves to ``txnAppId``/
-``txnVersion`` idempotent writes. At 100 TB the state table additionally
-partitions by a coarse time key so a batch rewrites only dirty partitions.
+format gives natively: with Delta present, ``fold_into_state`` becomes a
+single ``MERGE INTO`` keyed on the state key and the batch-id guard moves
+to ``txnAppId``/``txnVersion`` idempotent writes. At 100 TB the state
+table additionally partitions by a coarse time key so a batch rewrites
+only dirty partitions.
 """
 
 from __future__ import annotations
@@ -43,9 +44,7 @@ from collections.abc import Callable, Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.swap import recover_rename_swap, rename_swap
-
-_BATCH_ID_FILE = "_last_batch_id"  # underscore-prefixed: parquet readers skip it
+from ..sources.merge_target import ParquetMergeTarget
 
 
 # ---------------------------------------------------------------------------
@@ -452,30 +451,6 @@ def recover_marker_commit(
                 os.remove(full)  # orphaned half-written marker tmp
 
 
-def last_applied_batch_id(state_dir: str) -> int:
-    """Batch id folded into the current state, -1 if none/absent."""
-    path = os.path.join(state_dir, _BATCH_ID_FILE)
-    if os.path.exists(path):
-        with open(path, encoding="ascii") as f:
-            return int(f.read().strip())
-    return -1
-
-
-def recover_state(state_dir: str) -> None:
-    """Repair the swap after a crash and sweep stale siblings.
-
-    Crash window between the two renames of ``rename_swap`` leaves NO
-    live state dir — without recovery the next batch would take the 'no
-    state' branch and silently restart the state from empty while the
-    checkpoint still marks earlier batches done. ``recover_rename_swap``
-    restores the newest backup (always a consistent pre-batch state; the
-    interrupted batch redelivers and re-applies on top), then deletes
-    every leftover ``.tmp-*``/``.old-*``.
-    """
-    parent, base = os.path.split(state_dir)
-    recover_rename_swap(parent or ".", f"{base}.old-", f"{base}.tmp-", lambda _: base)
-
-
 def fold_into_state(
     spark: SparkSession,
     state_dir: str,
@@ -490,8 +465,9 @@ def fold_into_state(
     Skips already-applied batch ids; swaps the merged table in atomically
     with the batch id recorded in the same swap.
     """
-    recover_state(state_dir)  # repair a mid-stream swap crash too
-    if batch_id <= last_applied_batch_id(state_dir):
+    state = ParquetMergeTarget(spark, state_dir)
+    state.recover()  # repair a mid-stream swap crash too
+    if batch_id <= state.last_batch_id():
         return  # at-least-once redelivery of an already-folded batch
     if os.path.exists(state_dir):
         merged = merge(spark.read.parquet(state_dir), batch_cells)
@@ -499,35 +475,13 @@ def fold_into_state(
         # an empty first batch must NOT create the state dir: an empty
         # write lands no part files (only _SUCCESS + the batch-id file),
         # and every later batch's spark.read.parquet(state_dir) would
-        # die on schema inference — a permanent wedge recover_state
-        # cannot repair (the dir looks live). Skipping records nothing,
-        # which is exactly right: there is no state yet.
+        # die on schema inference — a permanent wedge recovery cannot
+        # repair (the dir looks live). Skipping records nothing, which
+        # is exactly right: there is no state yet.
         return
     else:
         merged = batch_cells
-    swap_in_state(state_dir, batch_id, merged)
-
-
-def swap_in_state(state_dir: str, batch_id: int, merged: DataFrame) -> None:
-    """Atomically replace the state table with ``merged`` and record
-    ``batch_id`` in the same swap. ``merged`` may lazily READ the live
-    ``state_dir`` — it is fully materialized into the ``.tmp-*`` sibling
-    before any rename touches the live dir. A failed write or swap
-    leaves no ``.tmp-*`` behind."""
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{state_dir}.tmp-{token}"
-    try:
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, _BATCH_ID_FILE), "w", encoding="ascii") as f:
-            f.write(str(batch_id))
-        rename_swap(tmp, state_dir, f"{state_dir}.old-{token}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The state table at ``state_dir``, or None before its first fold."""
-    return spark.read.parquet(state_dir) if os.path.exists(state_dir) else None
+    state.write(merged, batch_id)
 
 
 def start_foreach_batch(
@@ -588,7 +542,7 @@ def run_fold_stream(
     readers such as ``drift_stream.psi_report`` read the state dir
     directly. Returns the StreamingQuery; swap the file source for the
     Kafka consumer unchanged."""
-    recover_state(state_dir)
+    ParquetMergeTarget(spark, state_dir).recover()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_into_state(spark, state_dir, batch_id, cells(batch_df), merge)

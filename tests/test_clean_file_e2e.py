@@ -150,6 +150,29 @@ def test_quarantine_csv_byte_parity_with_reference(spark, tmp_path):
     assert empty_path.read_bytes() == ref_empty.read_bytes() == b"\n"
 
 
+@pytest.mark.parametrize("n_rows", [0, 2])
+def test_quarantine_csv_export_runs_one_job(spark, tmp_path, n_rows):
+    # the CSV write is the export's only Spark job: whether the frame had
+    # a row is read off the written part file, not asked of Spark again
+    from date_warehouse___airline_project_spark.sources.sinks import (
+        write_quarantine_csv,
+    )
+
+    rows = [(f"4000{i}", "range") for i in range(n_rows)]
+    df = spark.createDataFrame(rows, "transactionid string, quarantine_reason string")
+    group = f"quarantine-export-{n_rows}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "export")
+    try:
+        write_quarantine_csv(df, str(tmp_path / "q.csv"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    want = b"\n" if n_rows == 0 else b"\xef\xbb\xbftransactionid,quarantine_reason\n"
+    assert (tmp_path / "q.csv").read_bytes().startswith(want)
+
+
 # --- one-pass counts: edge inputs -------------------------------------------
 
 

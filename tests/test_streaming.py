@@ -560,8 +560,10 @@ def test_cms_stream_redelivery_is_idempotent(spark, tmp_path):
     # a second time (which would permanently double every count).
     from date_warehouse___airline_project_spark.streaming.sketch_stream import (
         cms_cells,
-        last_applied_batch_id,
         run_cms_stream,
+    )
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
     )
 
     input_dir = tmp_path / "in"
@@ -570,7 +572,7 @@ def test_cms_stream_redelivery_is_idempotent(spark, tmp_path):
     state = str(tmp_path / "state")
     q = run_cms_stream(spark, str(input_dir), state, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
-    assert last_applied_batch_id(state) == 0
+    assert ParquetMergeTarget(spark, state).last_batch_id() == 0
     want = {
         (r.d, r.cell): r.cnt for r in spark.read.parquet(state).collect()
     }
@@ -703,8 +705,8 @@ def test_rollup_stream_redelivery_is_idempotent(spark, tmp_path):
     from date_warehouse___airline_project_spark.streaming.rollup import (
         run_rollup_stream,
     )
-    from date_warehouse___airline_project_spark.streaming.state_table import (
-        last_applied_batch_id,
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
     )
 
     rows = [
@@ -717,7 +719,7 @@ def test_rollup_stream_redelivery_is_idempotent(spark, tmp_path):
     state = str(tmp_path / "state")
     q = run_rollup_stream(spark, str(input_dir), state, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
-    assert last_applied_batch_id(state) == 0
+    assert ParquetMergeTarget(spark, state).last_batch_id() == 0
     want = sorted(map(tuple, spark.read.parquet(state).collect()))
 
     shutil.rmtree(tmp_path / "ckpt")  # forces redelivery of batch 0
@@ -805,8 +807,8 @@ def test_incremental_dedup_stream_redelivery_preserves_output(spark, tmp_path):
     from date_warehouse___airline_project_spark.streaming.dedup_stream import (
         run_incremental_dedup_stream,
     )
-    from date_warehouse___airline_project_spark.streaming.state_table import (
-        last_applied_batch_id,
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
     )
 
     input_dir = tmp_path / "in"
@@ -823,7 +825,7 @@ def test_incremental_dedup_stream_redelivery_preserves_output(spark, tmp_path):
         spark, str(input_dir), state, out, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
-    assert last_applied_batch_id(state) == 0
+    assert ParquetMergeTarget(spark, state).last_batch_id() == 0
     before = {r.doc_id for r in spark.read.parquet(f"{out}/batch=0").collect()}
     assert before == {1, 2}
 
@@ -1000,8 +1002,8 @@ def test_curation_stream_redelivery_and_partial_fold_recovery(spark, tmp_path):
     from date_warehouse___airline_project_spark.streaming.curation_stream import (
         run_curation_stream,
     )
-    from date_warehouse___airline_project_spark.streaming.state_table import (
-        last_applied_batch_id,
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
     )
 
     docs = sorted(
@@ -1026,8 +1028,8 @@ def test_curation_stream_redelivery_and_partial_fold_recovery(spark, tmp_path):
         spark, str(input_dir), fp_state, acct_state, out, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
-    assert last_applied_batch_id(fp_state) == 0
-    assert last_applied_batch_id(acct_state) == 0
+    assert ParquetMergeTarget(spark, fp_state).last_batch_id() == 0
+    assert ParquetMergeTarget(spark, acct_state).last_batch_id() == 0
     ids0 = {r.doc_id for r in spark.read.parquet(f"{out}/batch=0").collect()}
     acct0 = {
         r.source: (r.n_docs, r.n_tokens)
@@ -1165,8 +1167,8 @@ def test_neardup_stream_redelivery_is_noop(spark, tmp_path):
     from date_warehouse___airline_project_spark.streaming.neardup_stream import (
         run_neardup_stream,
     )
-    from date_warehouse___airline_project_spark.streaming.state_table import (
-        last_applied_batch_id,
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
     )
 
     docs = sorted(
@@ -1187,7 +1189,7 @@ def test_neardup_stream_redelivery_is_noop(spark, tmp_path):
 
     q = run_neardup_stream(spark, str(input_dir), state, out, str(tmp_path / "ckpt"))
     q.awaitTermination(180)
-    assert last_applied_batch_id(state) == 0
+    assert ParquetMergeTarget(spark, state).last_batch_id() == 0
     ids0 = {r.doc_id for r in spark.read.parquet(f"{out}/batch=0").collect()}
     state0 = spark.read.parquet(state).count()
     assert ids0 and state0
@@ -1283,8 +1285,8 @@ def test_curation_v2_stream_crash_between_folds_recovers(spark, tmp_path):
     from date_warehouse___airline_project_spark.streaming.curation_stream import (
         run_curation_v2_stream,
     )
-    from date_warehouse___airline_project_spark.streaming.state_table import (
-        last_applied_batch_id,
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
     )
 
     docs = sorted(
@@ -1311,7 +1313,7 @@ def test_curation_v2_stream_crash_between_folds_recovers(spark, tmp_path):
         str(tmp_path / "ckpt"),
     )
     q.awaitTermination(240)
-    assert last_applied_batch_id(fp_state) == 0
+    assert ParquetMergeTarget(spark, fp_state).last_batch_id() == 0
     ids0 = {r.doc_id for r in spark.read.parquet(f"{out}/accepted/batch=0").collect()}
     lsh0 = spark.read.parquet(lsh_state).count()
     acct0 = {
@@ -1429,8 +1431,8 @@ def test_drift_stream_redelivery_is_idempotent(spark, tmp_path):
     from date_warehouse___airline_project_spark.streaming.drift_stream import (
         run_drift_stream,
     )
-    from date_warehouse___airline_project_spark.streaming.state_table import (
-        last_applied_batch_id,
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
     )
 
     input_dir = tmp_path / "in"
@@ -1439,7 +1441,7 @@ def test_drift_stream_redelivery_is_idempotent(spark, tmp_path):
     state = str(tmp_path / "state")
     q = run_drift_stream(spark, str(input_dir), state, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
-    assert last_applied_batch_id(state) == 0
+    assert ParquetMergeTarget(spark, state).last_batch_id() == 0
     want = {r.bin: r.cnt for r in spark.read.parquet(state).collect()}
 
     shutil.rmtree(tmp_path / "ckpt")
@@ -2041,8 +2043,8 @@ def test_incremental_paragraph_dedup_stream_redelivery(spark, tmp_path):
     from date_warehouse___airline_project_spark.streaming.dedup_stream import (
         run_incremental_paragraph_dedup_stream,
     )
-    from date_warehouse___airline_project_spark.streaming.state_table import (
-        last_applied_batch_id,
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
     )
 
     input_dir = tmp_path / "in"
@@ -2060,7 +2062,7 @@ def test_incremental_paragraph_dedup_stream_redelivery(spark, tmp_path):
         spark, str(input_dir), state, out, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
-    assert last_applied_batch_id(state) == 0
+    assert ParquetMergeTarget(spark, state).last_batch_id() == 0
     before = sorted(
         (r["doc_id"], r["para_idx"], r["pfp"])
         for r in spark.read.parquet(f"{out}/batch=0").collect()

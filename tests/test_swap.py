@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from date_warehouse___airline_project_spark.sources.swap import (
     SwapInError,
@@ -121,31 +122,101 @@ def test_upsert_after_a_kill_between_the_renames_keeps_the_old_rows(spark, tmp_p
     assert os.listdir(tmp_path) == ["staging_airlines"]
 
 
-def test_compact_parquet_failed_second_rename_keeps_every_row(spark, tmp_path, monkeypatch):
+def _sum_cells(state, cells):
+    return state.unionByName(cells).groupBy("k").agg(F.sum("cnt").alias("cnt"))
+
+
+def _fold(spark, path, batch_id, rows):
+    from date_warehouse___airline_project_spark.streaming.state_table import (
+        fold_into_state,
+    )
+
+    cells = spark.createDataFrame(rows, "k int, cnt int")
+    fold_into_state(spark, path, batch_id, cells, _sum_cells)
+
+
+def _scd2(spark, path, batch_id, v, ts):
+    from date_warehouse___airline_project_spark.streaming.scd2_stream import (
+        apply_scd2_batch,
+    )
+
+    batch = spark.createDataFrame([(1, v, ts)], "k int, v string, ts string")
+    apply_scd2_batch(spark, path, batch, batch_id, ["k"], ["v"], "ts")
+
+
+def _upsert(spark, path, rows):
+    from date_warehouse___airline_project_spark.sources.sinks import safe_upsert
+
+    return safe_upsert(spark.createDataFrame(rows, "k int, cnt int"), path, ["k"])
+
+
+def _compact(spark, path):
     from date_warehouse___airline_project_spark.sources.sinks import compact_parquet
 
+    compact_parquet(spark, path)
+
+
+# (first write, second write whose swap fails, rows the second write adds)
+_SHARED_WRITE_CALLERS = {
+    # the reference's insert fallback appends the batch to the kept table
+    "safe_upsert": (
+        lambda spark, p: _upsert(spark, p, [(1, 10)]),
+        lambda spark, p: _upsert(spark, p, [(2, 20)]),
+        [(2, 20)],
+    ),
+    "fold_into_state": (
+        lambda spark, p: _fold(spark, p, 0, [(1, 10)]),
+        lambda spark, p: _fold(spark, p, 1, [(1, 99)]),
+        [],
+    ),
+    "apply_scd2_batch": (
+        lambda spark, p: _scd2(spark, p, 0, "a", "2024-01-01 00:00:00"),
+        lambda spark, p: _scd2(spark, p, 1, "b", "2024-02-01 00:00:00"),
+        [],
+    ),
+    "compact_parquet": (
+        lambda spark, p: _fold(spark, p, 0, [(1, 10)]),
+        _compact,
+        [],
+    ),
+}
+
+
+@pytest.mark.parametrize("caller", list(_SHARED_WRITE_CALLERS))
+def test_failed_second_rename_keeps_the_previous_table(spark, tmp_path, monkeypatch, caller):
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
+    )
+
+    first, second, appended = _SHARED_WRITE_CALLERS[caller]
     path = str(tmp_path / "t")
-    spark.range(40).repartition(4).write.parquet(path)
+    first(spark, path)
+    rows = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    batch_id = ParquetMergeTarget(spark, path).last_batch_id()
     _fail_rename_onto(monkeypatch, path)
-    with pytest.raises(OSError, match="injected"):
-        compact_parquet(spark, path)
+    if caller == "safe_upsert":
+        assert second(spark, path) == "inserted"
+    else:
+        with pytest.raises(OSError, match="injected"):
+            second(spark, path)
     monkeypatch.undo()
-    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(40))
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == sorted(rows + appended)
+    assert ParquetMergeTarget(spark, path).last_batch_id() == batch_id
     assert os.listdir(tmp_path) == ["t"]  # no .tmp-* or .old-* left
 
 
-def test_swap_in_state_failed_second_rename_keeps_the_previous_state(spark, tmp_path, monkeypatch):
-    from date_warehouse___airline_project_spark.streaming.state_table import (
-        last_applied_batch_id,
-        swap_in_state,
+def test_first_insert_failed_rename_leaves_no_table(spark, tmp_path, monkeypatch):
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
     )
 
-    state = str(tmp_path / "state")
-    swap_in_state(state, 0, spark.createDataFrame([(1, 10)], "k int, cnt int"))
-    _fail_rename_onto(monkeypatch, state)
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, 10)], "k int, cnt int")
+    _fail_rename_onto(monkeypatch, path)
+    # the first insert is written beside the table and renamed in, so a
+    # failed (or killed) insert never leaves a partial live table
     with pytest.raises(OSError, match="injected"):
-        swap_in_state(state, 1, spark.createDataFrame([(1, 99)], "k int, cnt int"))
+        ParquetMergeTarget(spark, path).upsert(df, ["k"])
     monkeypatch.undo()
-    assert [tuple(r) for r in spark.read.parquet(state).collect()] == [(1, 10)]
-    assert last_applied_batch_id(state) == 0
-    assert os.listdir(tmp_path) == ["state"]  # no .tmp-* or .old-* left
+    assert os.listdir(tmp_path) == []

@@ -126,16 +126,16 @@ def test_parquet_merge_target_upsert_and_scd2_contract(spark, tmp_path):
     u1 = spark.createDataFrame([("bk1", "econ"), ("bk2", "biz")], ["booking_reference", "cls"])
     d.apply_scd2(u1, ["booking_reference"], ["cls"], "2026-01-01 00:00:00")
     u2 = spark.createDataFrame([("bk1", "first")], ["booking_reference", "cls"])
-    dim = d.apply_scd2(u2, ["booking_reference"], ["cls"], "2026-02-01 00:00:00")
-    rows = {(r.booking_reference, r.cls, r._is_current) for r in dim.collect()}
+    d.apply_scd2(u2, ["booking_reference"], ["cls"], "2026-02-01 00:00:00")
+    rows = {(r.booking_reference, r.cls, r._is_current) for r in d.read().collect()}
     assert rows == {
         ("bk1", "econ", False),  # closed version
         ("bk1", "first", True),  # reopened current
         ("bk2", "biz", True),  # untouched current
     }
     # idempotence: replaying the batch is a no-op
-    again = d.apply_scd2(u2, ["booking_reference"], ["cls"], "2026-03-01 00:00:00")
-    assert again.count() == 3
+    d.apply_scd2(u2, ["booking_reference"], ["cls"], "2026-03-01 00:00:00")
+    assert d.read().count() == 3
 
 
 def test_parquet_merge_target_contract_with_in_batch_duplicates(spark, tmp_path):
@@ -157,16 +157,16 @@ def test_parquet_merge_target_contract_with_in_batch_duplicates(spark, tmp_path)
     u1 = spark.createDataFrame([("bk1", "econ"), ("bk2", "biz")], ["booking_reference", "cls"])
     d.apply_scd2(u1, ["booking_reference"], ["cls"], "2026-01-01 00:00:00")
     u2 = spark.createDataFrame([("bk1", "first")], ["booking_reference", "cls"])
-    dim = d.apply_scd2(u2, ["booking_reference"], ["cls"], "2026-02-01 00:00:00")
-    rows = {(r.booking_reference, r.cls, r._is_current) for r in dim.collect()}
+    d.apply_scd2(u2, ["booking_reference"], ["cls"], "2026-02-01 00:00:00")
+    rows = {(r.booking_reference, r.cls, r._is_current) for r in d.read().collect()}
     assert rows == {
         ("bk1", "econ", False),
         ("bk1", "first", True),
         ("bk2", "biz", True),
     }
     # idempotence: replaying the same tracked values is a no-op
-    again = d.apply_scd2(u2, ["booking_reference"], ["cls"], "2026-03-01 00:00:00")
-    assert again.count() == 3
+    d.apply_scd2(u2, ["booking_reference"], ["cls"], "2026-03-01 00:00:00")
+    assert d.read().count() == 3
 
 
 def test_parquet_merge_target_dedups_within_batch(spark, tmp_path):
@@ -249,6 +249,30 @@ def test_compact_parquet_merges_slivers_preserving_rows(spark, tmp_path):
     assert {r.doc_id for r in spark.read.parquet(path).collect()} == before_rows
     # swap left no tmp/backup siblings behind
     assert glob.glob(f"{path}.tmp-*") == [] and glob.glob(f"{path}.old-*") == []
+
+
+def test_compact_parquet_keeps_a_state_tables_batch_id(spark, tmp_path):
+    # Compacting a stream's state table must keep its recorded batch id:
+    # a redelivered batch 0 after the compaction is still skipped, not
+    # folded a second time.
+    from date_warehouse___airline_project_spark.sources.merge_target import (
+        ParquetMergeTarget,
+    )
+    from date_warehouse___airline_project_spark.sources.sinks import compact_parquet
+    from date_warehouse___airline_project_spark.streaming.state_table import (
+        fold_into_state,
+    )
+
+    def merge(state, cells):
+        return state.unionByName(cells).groupBy("k").agg(F.sum("cnt").alias("cnt"))
+
+    state = str(tmp_path / "state")
+    cells = spark.createDataFrame([(1, 10)], "k int, cnt int")
+    fold_into_state(spark, state, 0, cells, merge)
+    compact_parquet(spark, state)
+    fold_into_state(spark, state, 0, cells, merge)  # redelivered batch 0
+    assert [tuple(r) for r in spark.read.parquet(state).collect()] == [(1, 10)]
+    assert ParquetMergeTarget(spark, state).last_batch_id() == 0
 
 
 def test_backfill_overwrites_only_named_partitions(spark, tmp_path):

@@ -20,10 +20,14 @@ SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-l
 # reason and delay_minutes.
 python -m pytest perfbench/test_perfbench.py -q
 # The fast tests above plant fewer rows than a benchmark upload. One
-# full-size operations run checks every quarantine reason count and staged
-# key against what its generator planted; it fails unless the run's last
-# stdout line reports "correct": true.
+# full-size run of each workload checks its results against what it
+# expects (operations: every quarantine reason count and staged key
+# against what its generator planted; queries: every result against its
+# DuckDB oracle); each fails unless the run's last stdout line reports
+# "correct": true.
 python3 perfbench/run.py --workload operations --seed 7 --seconds 10 2>/dev/null \
+    | tail -n 1 | grep -q '"correct": true'
+python3 perfbench/run.py --workload queries --seed 7 --seconds 10 2>/dev/null \
     | tail -n 1 | grep -q '"correct": true'
 python tools/oracle_check.py /root/testdata/sf0.001
 python tools/oracle_check.py /root/testdata/sf0.01
